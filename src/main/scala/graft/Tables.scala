@@ -59,7 +59,28 @@ object Tables {
       evictStoppedSessions()
       readerMemo.computeIfAbsent(key, _ =>
         if (name == "events") eventsFresh(spark, sfDir)
-        else spark.read.parquet(s"$sfDir/$name.parquet"))
+        else parquet(spark, sfDir, name))
+    }
+  }
+
+  /** Inferred schema per (sfDir, table), shared by every session. The
+    * inference is the job a `spark.read.parquet` runs; a fresh session
+    * (a new reader-memo key) reads with the known schema instead and runs
+    * none. The plan is the same either way, so cached relations built
+    * over one session's read still match another session's. `events` is
+    * not shared: its schema depends on a session conf.
+    */
+  private val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), StructType]()
+
+  private def parquet(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    Option(schemaMemo.get((sfDir, name))) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        schemaMemo.putIfAbsent((sfDir, name), df.schema)
+        df
     }
   }
 

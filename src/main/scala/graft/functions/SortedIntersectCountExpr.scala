@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -112,6 +113,16 @@ case class SortedIntersectCountExpr(left: Expression, right: Expression)
 }
 
 object SortedIntersectCountExpr {
+  private val id = FunctionIdentifier("sorted_intersect_count")
+
+  /** Check-then-register, called where the function is used: a session
+    * built with GraftExtensions (or one that already registered it) is
+    * left as it is; any other session gets the imperative registration.
+    * Idempotent, so every query that names the function can call it.
+    */
+  def ensureRegistered(spark: SparkSession): Unit =
+    if (!spark.sessionState.functionRegistry.functionExists(id)) register(spark)
+
   /** Imperative fallback registration (sessions without GraftExtensions). */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

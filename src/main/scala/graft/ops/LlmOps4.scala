@@ -421,6 +421,7 @@ object LlmOps4 {
     // referee, the sim_cosine_topk pattern applied to set containment.
     Spec("dedup_containment",
       (s, d) => {
+        graft.functions.SortedIntersectCountExpr.ensureRegistered(s)
         val sets = t(s, d, "documents")
           .select(col("doc_id"),
             array_sort(array_distinct(split(col("text"), " "))).as("ts"))

@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * size — scan ∥ broadcast ∥ fold; the unbounded ANN path is
   * `sim_lsh_approx` (banded random-hyperplane LSH + exact re-rank). The
   * graph analytics ride the memoized verified-pair relation built once per
-  * (session, sfDir) by [[LlmOps.minhashSetPairs]].
+  * (SparkContext, sfDir, token coding) and shared by every session, by
+  * [[LlmOps.minhashSetPairs]].
   */
 object SimGraph {
   import Tables._

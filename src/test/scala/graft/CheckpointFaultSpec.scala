@@ -51,14 +51,23 @@ class CheckpointFaultSpec extends AnyFunSuite {
     val p = pb.start()
     // Kill the whole process tree, not just the direct child — the
     // standalone worker/executor JVMs are descendants and would otherwise
-    // be orphaned (and keep burning cores) after a timeout kill.
+    // be orphaned (and keep burning cores) after a timeout kill. The tree
+    // is snapshotted WHILE the child is alive, once a second: after the
+    // child exits its stragglers are re-parented, and `p.descendants()`
+    // no longer reaches them.
+    import scala.jdk.CollectionConverters._
+    val tree = scala.collection.mutable.LinkedHashSet.empty[ProcessHandle]
     def killTree(): Unit = {
-      import scala.jdk.CollectionConverters._
-      p.descendants().iterator().asScala.foreach(_.destroyForcibly())
+      (tree ++ p.descendants().iterator().asScala).foreach(_.destroyForcibly())
       p.destroyForcibly()
       ()
     }
-    val done = p.waitFor(240, java.util.concurrent.TimeUnit.SECONDS)
+    val deadline = System.nanoTime() + 240L * 1000000000L
+    var done = false
+    while (!done && System.nanoTime() < deadline) {
+      tree ++= p.descendants().iterator().asScala
+      done = p.waitFor(1, java.util.concurrent.TimeUnit.SECONDS)
+    }
     def slurp(): String = {
       val src = scala.io.Source.fromFile(outFile)
       try src.mkString finally src.close()

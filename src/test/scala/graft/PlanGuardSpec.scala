@@ -238,20 +238,34 @@ class PlanGuardSpec extends AnyFunSuite {
   test("plan guard: memoized dedup consumers actually reuse the pair relation") {
     // round-7 verdict #4: a refactor that silently bypasses minhashSetPairs
     // would only surface as a bench regression — assert the plan shape
-    // instead. The memo is a localCheckpointed relation, so a consumer
-    // that reuses it scans an ExistingRDD; one that REBUILDS would plan
-    // the banded-minhash candidate join, whose xxhash64(band, token)
-    // signature appears nowhere else in these queries' plans.
+    // instead. The memo is a cached relation, so a consumer that reuses
+    // it scans an InMemoryTableScan of the verified pairs; one that
+    // REBUILDS would plan the banded-minhash candidate join, whose
+    // xxhash64(band, token) signature then sits in a node of the
+    // consumer's own plan. Cached plans are leaves of the walk (their
+    // contents are the cache's, not the consumer's), so the groups
+    // cache's xxhash64 token coding does not count. And no consumer's
+    // construction may run a memo build.
+    object Walk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     ops.LlmOps.minhashSetPairs(spark, sf).count() // ensure the memo exists
+    val builds0 = ops.LlmOps.memoBuilds
     for (name <- Seq("dedup_canonical", "graph_degree_dist",
         "graph_triangle_count", "dedup_cc_labelprop")) {
-      val plan = SparkEntry.queries(name)(spark, sf)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("Scan ExistingRDD"),
-        s"$name does not scan the localCheckpointed memo relation")
-      assert(!plan.contains("xxhash64"),
+      val nodes = Walk.collectWithSubqueries(
+        SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan) { case p => p }
+      // dedup_cc_labelprop reads the memo during construction, into the
+      // label-propagation checkpoints its final plan scans
+      if (name != "dedup_cc_labelprop")
+        assert(nodes.exists {
+          case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+            Seq("sa", "sb", "inter").forall(m.relation.output.map(_.name).contains)
+          case _ => false
+        }, s"$name does not scan the cached set-pair relation")
+      assert(!nodes.exists(_.expressions.exists(_.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.XxHash64]))),
         s"$name plans the banded-minhash candidate join — memo bypassed")
     }
+    assert(ops.LlmOps.memoBuilds == builds0, "a consumer rebuilt the set-pair memo")
   }
 
   test("plan guard: join_bucketed_colocated joins without re-shuffling either side") {
