@@ -9,8 +9,12 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Native Catalyst expression: intersection SIZE of two SORTED, DISTINCT,
-  * null-free string arrays via a single linear merge — no per-row hash
-  * set, no output array materialization.
+  * null-free arrays — both string or both bigint — via a single linear
+  * merge: no per-row hash set, no output array materialization. Its
+  * callers are the dedup verify path and dedup_containment; both merge
+  * the arrays `LlmOps.sortedTokenCodes` builds — sorted 64-bit token
+  * codes under the corpus's verified-injective seed, or the sorted
+  * token strings when no seed is injective.
   *
   * Why a dedicated expression when `array_intersect` exists: the built-in
   * builds a hash set per invocation and materializes the intersection
@@ -28,11 +32,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * to NULL (the pipeline never produces them; poisoning makes misuse
   * visible instead of silently wrong).
   *
-  * Round 13: also accepts (array<bigint>, array<bigint>) — the dedup
-  * verify path now merges sorted 64-bit token CODES instead of token
-  * strings (8 fixed bytes per element through the candidate join instead
-  * of variable-length UTF8 + offsets, and a primitive compare instead of
-  * a byte-wise one). Both sides must be the same element type.
+  * The bigint mode (round 13) is the common one: 8 fixed bytes per
+  * element through the candidate join or probe broadcast instead of
+  * variable-length UTF8 + offsets, and a primitive compare instead of a
+  * byte-wise one. Both sides must be the same element type.
   */
 case class SortedIntersectCountExpr(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -148,18 +148,9 @@ object LlmOps {
     // token strings — computing them per steady run cost ~0.1 s of
     // per-set transform+sort on every verify-side broadcast; in the
     // cache they are nt×8 B per set (~25% growth) that only the
-    // verify consumers ever scan (columnar cache prunes columns).
-    // The seed is resolved per corpus by [[injectiveCodeSeed]] (memoized
-    // one-aggregate check); if NO seed is injective the sorted token
-    // strings themselves ride as `th` (sorted+distinct by construction),
-    // so the same verify plan merges strings — the native intersect
-    // expression handles both element types. The fallback duplicates the
-    // ts column in the cache; acceptable for the rare tier it serves.
-    val th: Column = injectiveCodeSeed(s, d) match {
-      case Some(seed) =>
-        array_sort(transform(col("ts"), tkn => tokenCode(s, seed, tkn)))
-      case None => col("ts")
-    }
+    // verify consumers ever scan (columnar cache prunes columns). The
+    // string tier duplicates the ts column in the cache; acceptable for
+    // the rare tier it serves.
     trackedCache(codingKey(s, d), "tokenSetGroups",
       t(s, d, "documents")
         .select(col("doc_id"),
@@ -168,8 +159,27 @@ object LlmOps {
         .agg(min("doc_id").as("set_id"),
           sort_array(collect_list(col("doc_id"))).as("members"))
         .withColumn("nt", size(col("ts")).cast("long"))
-        .withColumn("th", th))
+        .withColumn("th", sortedTokenCodes(s, d, col("ts"))))
   }
+
+  /** The sorted array a token set merges on: its distinct tokens under
+    * the corpus's verified-injective 64-bit coding (seed resolved by
+    * [[injectiveCodeSeed]], memoized per corpus), or — when no seed is
+    * injective — the sorted token strings themselves, so the same plan
+    * merges strings (`sorted_intersect_count` takes both element types).
+    * Under either tier the array's size is the distinct-token count and
+    * intersection sizes equal the token-set intersections. The only
+    * place the seed/fallback decision is taken: the dedup verify path
+    * (via [[tokenSetGroups]]' `th`) and dedup_containment's per-document
+    * sets both call it. `distinctTokens` must already be distinct.
+    */
+  private[ops] def sortedTokenCodes(s: SparkSession, d: String,
+                                    distinctTokens: Column): Column =
+    injectiveCodeSeed(s, d) match {
+      case Some(seed) =>
+        array_sort(transform(distinctTokens, tkn => tokenCode(s, seed, tkn)))
+      case None => array_sort(distinctTokens)
+    }
 
   /** Candidate set pairs via hand-rolled banded MinHash: 8 signatures per
     * set as `array_min(transform(ts, xxhash64(band, token)))` — pure
@@ -315,9 +325,10 @@ object LlmOps {
     scala.collection.concurrent.TrieMap.empty[String, Option[Int]]
 
   /** Verified-injective token coding (round 13; mechanical fallback
-    * round 14): the dedup verify path merges sorted xxhash64 token CODES
-    * instead of token strings — 8 fixed bytes per element through the
-    * candidate join instead of variable-length UTF8 (measured ~3× less
+    * round 14): the dedup verify path (and dedup_containment) merges
+    * sorted xxhash64 token CODES instead of token strings — 8 fixed
+    * bytes per element through the candidate join instead of
+    * variable-length UTF8 (measured ~3× less
     * bytes moved through the verify stage, the board's densest all-core
     * compute block and the reason dedup_allpairs_exact amplified host
     * contention ~2× over the sweep median in the round-12/13 anomaly
@@ -334,10 +345,11 @@ object LlmOps {
     * a collision EXPECTED, so the reaction cannot be a `require`):
     * seeds are tried in [[codeSeeds]] order and the first injective one
     * wins (each failure logs loudly); if every seed collides, this
-    * returns None and [[tokenSetGroups]] ships the sorted token STRINGS
-    * as `th`, so the verify merges strings — exact with zero premises,
-    * just ~3× more verify traffic. TokenCodingFallbackSpec forces both
-    * tiers with a synthetic collision and asserts pair-for-pair equality.
+    * returns None and [[sortedTokenCodes]] ships the sorted token STRINGS
+    * (as `th` and as dedup_containment's sets), so the merges run on
+    * strings — exact with zero premises, just ~3× more merge traffic.
+    * TokenCodingFallbackSpec forces both tiers with a synthetic collision
+    * and asserts row-for-row equality.
     */
   private[graft] def injectiveCodeSeed(s: SparkSession, d: String): Option[Int] = {
     injectiveSeedMemo.getOrElseUpdate(codingKey(s, d), {

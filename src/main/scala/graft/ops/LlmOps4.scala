@@ -328,27 +328,34 @@ object LlmOps4 {
     // shares a ≥6-token run, at ~1/4 the storage of full shingling. The
     // hash is md5 of the 3-gram STRING and the winnow min is LEXICOGRAPHIC
     // (md5 agrees bit-for-bit across engines; no engine-specific hash
-    // function anywhere). Per-doc windows → embarrassingly parallel after
-    // the one doc_id shuffle; output is one row per doc.
+    // function anywhere). The answer is one row per doc, so it is computed
+    // as a per-document kernel inside the row: the text is split once, the
+    // n-2 trigram hashes and the n-5 window minima are arrays built by
+    // transform(sequence), and the three aggregates read the minima array.
+    // No explode, no doc_id shuffle, no Window — the final orderBy is the
+    // only exchange. A doc needs ≥6 tokens (4 trigrams) for one full
+    // window; shorter docs have no fingerprint and no row, as in the
+    // oracle's `cnt = 4` filter.
     Spec("text_winnowing",
       (s, d) => {
-        val w = Window.partitionBy("doc_id").orderBy("pos")
-        val fw = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, 3)
-        val tri = t(s, d, "documents")
+        val toks = col("toks")
+        val hs = col("hs")
+        val fps = col("fps")
+        // Catalyst pushes the token-count predicate below the projection,
+        // where it evaluates its own split; a bounded split(text, " ", 6)
+        // there measured no faster (sf0.1, 4 cores)
+        t(s, d, "documents")
+          .select(col("doc_id"), split(col("text"), " ").as("toks"))
+          .where(size(toks) >= 6)
           .select(col("doc_id"),
-            posexplode(split(col("text"), " ")).as(Seq("pos", "token")))
-          .withColumn("t2", lead(col("token"), 1).over(w))
-          .withColumn("t3", lead(col("token"), 2).over(w))
-          .where(col("t3").isNotNull)
-          .select(col("doc_id"), col("pos"),
-            md5(concat_ws(" ", col("token"), col("t2"), col("t3"))).as("h"))
-        tri
-          .withColumn("fp", min(col("h")).over(fw))
-          .withColumn("cnt", count(lit(1)).over(fw))
-          .where(col("cnt") === 4)
-          .groupBy("doc_id")
-          .agg(countDistinct(col("fp")).as("n_fp"),
-            min(col("fp")).as("fp_min"), max(col("fp")).as("fp_max"))
+            transform(sequence(lit(0), size(toks) - 3), i =>
+              md5(concat_ws(" ", toks(i), toks(i + 1), toks(i + 2)))).as("hs"))
+          .select(col("doc_id"),
+            transform(sequence(lit(1), size(hs) - 3), i =>
+              array_min(slice(hs, i, lit(4)))).as("fps"))
+          .select(col("doc_id"),
+            size(array_distinct(fps)).cast("long").as("n_fp"),
+            array_min(fps).as("fp_min"), array_max(fps).as("fp_max"))
           .orderBy("doc_id")
       },
       Some("""WITH toks AS (
@@ -412,9 +419,15 @@ object LlmOps4 {
     // which symmetric Jaccard misses whenever |D| ≫ |P| (the union in the
     // denominator drowns the overlap). Probe side is a bounded set
     // (doc_id < 20) broadcast against the corpus; the intersection is the
-    // native codegen'd `sorted_intersect_count` over the presorted
-    // distinct-token arrays (one linear merge per pair, no explode, no
+    // native codegen'd `sorted_intersect_count` over each doc's sorted
+    // distinct tokens (one linear merge per pair, no explode, no
     // shuffle), and containment is one IEEE division of exact BIGINTs.
+    // The sets are the dedup family's verified token CODES
+    // (LlmOps.sortedTokenCodes: 64-bit codes under the corpus's injective
+    // seed, or the sorted strings when no seed is injective), so the merge
+    // compares fixed 8-byte elements; the first construction per corpus
+    // per JVM may run the shared seed-check aggregate
+    // (LlmOps.injectiveCodeSeed), every later one reads its memo.
     // The 100 TB unbounded variant is the same banded-minhash candidate
     // route the Jaccard family rides (containment ≥ t implies band
     // collision at the same rate); this query is the exact bounded-probe
@@ -423,8 +436,8 @@ object LlmOps4 {
       (s, d) => {
         graft.functions.SortedIntersectCountExpr.ensureRegistered(s)
         val sets = t(s, d, "documents")
-          .select(col("doc_id"),
-            array_sort(array_distinct(split(col("text"), " "))).as("ts"))
+          .select(col("doc_id"), LlmOps.sortedTokenCodes(s, d,
+            array_distinct(split(col("text"), " "))).as("ts"))
           .withColumn("nt", size(col("ts")).cast("long"))
         val probes = sets.where(col("doc_id") < 20)
           .select(col("doc_id").as("p_id"), col("ts").as("pts"),

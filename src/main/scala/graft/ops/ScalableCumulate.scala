@@ -199,6 +199,13 @@ object ScalableCumulate {
     * side (the real scan work) keeps its input-split parallelism. Never
     * applied to a returned query plan. Same session-conf-toggle
     * concurrency caveat as [[noAqe]].
+    *
+    * Caveat — merge fan-in: only the POST-merge output is driver-bounded.
+    * The one reduce task still merges every map task's partials,
+    * O(numMapTasks × NB × |groups|) rows, and that count grows with the
+    * number of input splits; at many splits the merge serializes onto one
+    * task. Perf only, results unaffected; a small constant width (e.g.
+    * min(cores, 8)) would spread it if it ever shows.
     */
   private[ops] def narrow[T](spark: org.apache.spark.sql.SparkSession)(
       f: => T): T = {

@@ -205,6 +205,16 @@ class PlanGuardSpec extends AnyFunSuite {
       "scan_dpp lost dynamic partition pruning")
   }
 
+  test("plan guard: text_winnowing plans no Window (per-document kernel)") {
+    // the answer is one row per doc: a Window here means the token-grain
+    // posexplode + doc_id shuffle + per-doc sorts came back
+    val opt = q("text_winnowing").queryExecution.optimizedPlan
+    val windows = opt.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }
+    assert(windows.isEmpty, s"text_winnowing plans a Window:\n$opt")
+  }
+
   test("plan guard: join_bloom_runtime keeps its runtime bloom filter") {
     val opt = q("join_bloom_runtime").queryExecution.optimizedPlan.toString
     assert(opt.contains("might_contain") || opt.contains("BloomFilterMightContain"),

@@ -15,6 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   tier 1 — first seed collides ⇒ retry resolves the NEXT seed;
   *   tier 2 — every seed collides ⇒ `th` ships the sorted token strings
   *            and the same verify plan merges strings.
+  * dedup_containment's per-document sets go through the same coding
+  * helper (`LlmOps.sortedTokenCodes`), so it is held to the same tiers.
   */
 class TokenCodingFallbackSpec extends AnyFunSuite {
   import TestSpark._
@@ -88,6 +90,28 @@ class TokenCodingFallbackSpec extends AnyFunSuite {
       assert(ops.LlmOps.injectiveCodeSeed(spark, sf).isEmpty)
       assert(rows() == baseline,
         "memoized banded dedup changed under the string-verify tier")
+    }
+  }
+
+  test("dedup_containment merges the tier's coding, rows identical at every tier") {
+    def rows(): Seq[String] =
+      q("dedup_containment").collect().map(_.toSeq.mkString("|")).toSeq
+    def plan(): String =
+      q("dedup_containment").queryExecution.optimizedPlan.toString
+    def codedAt(seed: Int): Boolean = plan().contains(s"xxhash64($seed,")
+    val baseline = rows()
+    assert(baseline.nonEmpty, "probe corpus must have containment rows")
+    assert(codedAt(ops.LlmOps.codeSeeds.head),
+      "tier 0 containment must merge codes at the production seed")
+    withConf(Some(ops.LlmOps.codeSeeds.head.toString)) {
+      assert(codedAt(ops.LlmOps.codeSeeds(1)),
+        "tier 1 containment must merge codes at the retried seed")
+      assert(rows() == baseline, "seed-retry tier changed dedup_containment")
+    }
+    withConf(Some(ops.LlmOps.codeSeeds.mkString(","))) {
+      assert(!plan().contains("xxhash64("),
+        "tier 2 containment must merge the sorted token strings")
+      assert(rows() == baseline, "string tier changed dedup_containment")
     }
   }
 
