@@ -113,8 +113,7 @@ object Analytics2 {
             col("o_totalprice"), Seq(col("o_totalprice")), lit(1L),
             Seq((1L, 2L)), groupCols = Seq("o_orderpriority"),
             totalName = "n",
-            bucketHint = Some(floor(
-              log(2.0, col("o_totalprice").cast("double")) * 64)))
+            bucketHint = Some(ScalableCumulate.log2Bucket(col("o_totalprice"))))
           .select(col("o_orderpriority"),
             col("pick_0").as("median_price"), col("n"))
           .orderBy("o_orderpriority")
@@ -150,9 +149,18 @@ object Analytics2 {
     // the only window runs over that one bucket per flag. The grand
     // total rides back as the picks' `total` column — one lineitem scan
     // per job, zero data-sized shuffles.
+    // The weight is DECIMAL(8,2), not the oracle's DECIMAL(30,2): at
+    // precision ≤ 8 Spark's DecimalAggregates rule sums the unscaled
+    // values as longs (both the partials aggregate and the pick window)
+    // instead of adding java.math.BigDecimals row by row. Range: |w| <
+    // 10⁶ — l_quantity is 1..50 — and within it the cast rounds exactly
+    // as the wider one, so wtot and the picks are the same decimals. A
+    // larger weight raises CAST_OVERFLOW under ANSI (the default); a
+    // non-ANSI session nulls it, and quantilePicks refuses null weights
+    // by name.
     Spec("agg_weighted_median",
       (s, d) => {
-        val wdec = col("l_quantity").cast(DecimalType(30, 2))
+        val wdec = col("l_quantity").cast(DecimalType(8, 2))
         val li = t(s, d, "lineitem")
           .select(col("l_returnflag"), col("l_extendedprice"),
             wdec.as("w"))
@@ -162,8 +170,7 @@ object Analytics2 {
         ScalableCumulate.quantilePicks(li, col("l_extendedprice"),
             Seq(col("l_extendedprice")), col("w"), Seq((1L, 2L)),
             groupCols = Seq("l_returnflag"), totalName = "wtot",
-            bucketHint = Some(floor(
-              log(2.0, col("l_extendedprice").cast("double")) * 64)))
+            bucketHint = Some(ScalableCumulate.log2Bucket(col("l_extendedprice"))))
           .select(col("l_returnflag"),
             col("pick_0").as("wmedian_price"),
             col("wtot").cast(DoubleType).as("total_weight"))

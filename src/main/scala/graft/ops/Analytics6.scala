@@ -71,8 +71,7 @@ object Analytics6 {
               Seq(desc("rev"), asc("l_partkey")), col("rev"),
               Seq((8L, 10L), (95L, 100L)), ascending = false, strict = true,
               metrics = Seq("cnt" -> lit(1L)), totalName = "w",
-              bucketHint = Some(
-                -floor(log(2.0, col("rev").cast("double")) * 64))))
+              bucketHint = Some(-ScalableCumulate.log2Bucket(col("rev")))))
             .collect())(0)
         } finally { rev.unpersist(); () }
         def dec(n: String) = BigDecimal(p.getAs[java.math.BigDecimal](n))
@@ -373,13 +372,14 @@ object Analytics6 {
           // log-scale bucketHints need no bounds job at all: the first
           // pick's PARTIALS pass doubles as the cache fill, so the whole
           // query is four bounded actions (partials+fill, pick 1,
-          // partials 2, pick 2). dev can be 0, so its bucket id shifts
-          // by one cent (monotone-preserving) to keep log₂ total.
+          // partials 2, pick 2). dev can be 0: the one-cent shift
+          // (monotone-preserving) gives it bucket 0 of its own instead of
+          // log2Bucket's shared non-positive bucket.
           def pick(df: org.apache.spark.sql.DataFrame, c: String) =
             ScalableCumulate.noAqe(s)(ScalableCumulate.audited(
               ScalableCumulate.quantilePicks(df, col(c), Seq(col(c)),
                 lit(1L), Seq((1L, 2L)), bucketHint = Some(
-                  floor(log(2.0, col(c).cast("double") + 1) * 64))))
+                  ScalableCumulate.log2Bucket(col(c).cast("double") + 1))))
               .collect())(0).getLong(0)
           val m = pick(o, "x")
           val mad = pick(o.select(abs(col("x") - lit(m)).as("dev")), "dev")
@@ -437,7 +437,7 @@ object Analytics6 {
         // monotone in x — skips the bounds job, one fewer eager action
         val thr = ScalableCumulate.quantilePicks(o, col("x"), Seq(col("x")),
             lit(1L), Seq((19L, 20L)),
-            bucketHint = Some(floor(log(2.0, col("x").cast("double")) * 64)))
+            bucketHint = Some(ScalableCumulate.log2Bucket(col("x"))))
           .select(col("pick_0").as("p95"))
         o.crossJoin(broadcast(thr))
           .where(col("x") >= col("p95"))
@@ -515,7 +515,7 @@ object Analytics6 {
         val thr = ScalableCumulate.quantilePicks(o, col("x"), Seq(col("x")),
             lit(1L), Seq((1L, 20L), (19L, 20L)),
             // log-octave hint, same derivation as agg_cvar
-            bucketHint = Some(floor(log(2.0, col("x").cast("double")) * 64)))
+            bucketHint = Some(ScalableCumulate.log2Bucket(col("x"))))
           .select(col("pick_0").as("p05"), col("pick_1").as("p95"))
         o.crossJoin(broadcast(thr))
           .select(col("p05"), col("p95"),
@@ -570,7 +570,7 @@ object Analytics6 {
             Seq((1L, 4L), (1L, 2L), (3L, 4L), (19L, 20L), (99L, 100L)),
             totalName = "n_rows",
             // log-octave hint, same derivation as agg_cvar
-            bucketHint = Some(floor(log(2.0, col("x").cast("double")) * 64)))
+            bucketHint = Some(ScalableCumulate.log2Bucket(col("x"))))
           .select(col("pick_0").cast("double").as("p25"),
             col("pick_1").cast("double").as("p50"),
             col("pick_2").cast("double").as("p75"),
@@ -613,7 +613,7 @@ object Analytics6 {
             // log-octave hint, same derivation as agg_cvar (the hint is
             // a pure function of the value, so it is monotone within
             // every group by construction)
-            bucketHint = Some(floor(log(2.0, col("x").cast("double")) * 64)))
+            bucketHint = Some(ScalableCumulate.log2Bucket(col("x"))))
           .select(col("o_orderpriority"),
             col("pick_0").cast("double").as("p50"),
             col("pick_1").cast("double").as("p90"),

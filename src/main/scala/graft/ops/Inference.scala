@@ -38,9 +38,11 @@ object Inference {
   private def cached(s: SparkSession, d: String, key: String)(mk: => DataFrame): DataFrame = {
     val k = s"${s.hashCode()}|$d|$key"
     // NOTE (round 15): an eager fill (persist + count) was tried to stop
-    // the cold path's concurrent scalar-subquery branches from racing the
-    // cache fill (four simultaneous score stages in one cold
-    // eval_kappa_mcc) — and REVERTED: materializing at build time flips
+    // the cold path's concurrent branches from racing the cache fill (at
+    // the time, four simultaneous score stages in one cold
+    // eval_kappa_mcc; kappa now reads `preds` once, so the remaining
+    // racer is a multi-branch reader such as eval_per_class's two join
+    // sides) — and REVERTED: materializing at build time flips
     // every downstream plan's InMemoryRelation to its executed form,
     // which triples the printed exchange counts the shuffle-budget pins
     // key on; re-pinning 3× budgets would blunt that tripwire for a
@@ -94,6 +96,64 @@ object Inference {
         .where(col("rn") === 1)
         .select(col("vec_id"), col("label"), col("clabel").as("pred"), col("score"))
     }
+
+  /** Cohen's κ and the R_K (multiclass MCC) statistic of a `(label,
+    * pred)` relation as one row `(n, tr, sum_rc, kappa, mcc)`.
+    *
+    * `preds` is read once: it is grouped into the confusion matrix
+    * `(label, pred, c)` — at most classes² rows — and the matrix is
+    * collected into one array by a single global aggregate. The marginals
+    * are then folded out of that array in one projection with
+    * higher-order functions: n = Σc, tr = Σc on the diagonal, and per
+    * class the row total rt and column total ct, giving Σrt·ct, Σrt² and
+    * Σct². Two Spark jobs, no join.
+    *
+    * Everything up to the final ops is exact BIGINT arithmetic — κ =
+    * (n·tr − Σrt·ct)/(n² − Σrt·ct) is a single division of exact integers;
+    * MCC adds one sqrt over doubles cast from exact integers, the same
+    * fixed-dag discipline as eval_auc.
+    *
+    * NULL semantics are those of the SQL formulation in the oracle
+    * (row/column totals as `GROUP BY` relations, Σrt·ct over their inner
+    * join on the class key):
+    *  - empty input: n = 0, every other column NULL;
+    *  - a NULL label (or pred) is its own row (column) class in Σrt²
+    *    (Σct²), but never matches in Σrt·ct;
+    *  - Σrt·ct is NULL when no class is both a label and a prediction;
+    *  - a class present only as a label or only as a prediction still
+    *    counts in its own marginal sum.
+    */
+  def kappaMcc(preds: DataFrame): DataFrame = {
+    val cells = col("m")
+    def total(xs: Column)(f: Column => Column): Column =
+      aggregate(xs, lit(0L), (acc, x) => acc + f(x))
+    def margin(side: String, k: Column): Column =
+      total(filter(cells, x => x(side) <=> k))(_("c"))
+    def sumSq(side: String): Column =
+      total(array_distinct(transform(cells, _(side))))(k =>
+        margin(side, k) * margin(side, k))
+    val shared = filter(array_distinct(transform(cells, _("label"))),
+      k => exists(cells, _("pred") === k))
+    val nonEmpty = size(cells) > 0
+    preds.groupBy("label", "pred").agg(count(lit(1)).as("c"))
+      .agg(collect_list(struct(col("label"), col("pred"), col("c"))).as("m"))
+      .select(
+        total(cells)(_("c")).as("n"),
+        when(nonEmpty, total(cells)(x =>
+          when(x("label") === x("pred"), x("c")).otherwise(0L))).as("tr"),
+        when(size(shared) > 0, total(shared)(k =>
+          margin("label", k) * margin("pred", k))).as("sum_rc"),
+        when(nonEmpty, sumSq("label")).as("sum_r2"),
+        when(nonEmpty, sumSq("pred")).as("sum_c2"))
+      .select(col("n"), col("tr"), col("sum_rc"),
+        round((col("n") * col("tr") - col("sum_rc")).cast("double") /
+          (col("n") * col("n") - col("sum_rc")).cast("double"), 6)
+          .as("kappa"),
+        round((col("n") * col("tr") - col("sum_rc")).cast("double") /
+          sqrt((col("n") * col("n") - col("sum_r2")).cast("double") *
+            (col("n") * col("n") - col("sum_c2")).cast("double")), 6)
+          .as("mcc"))
+  }
 
   // --- identical CTE text for the DuckDB oracle ---------------------------
   private val vexpSql =
@@ -397,38 +457,9 @@ object Inference {
               FROM b GROUP BY bin ORDER BY bin""")),
 
     // Chance-corrected agreement: multiclass Cohen's κ and the R_K
-    // (multiclass MCC) statistic in ONE summary row. Everything up to
-    // the final ops is exact BIGINT arithmetic on confusion-matrix
-    // marginals — κ = (n·tr − Σr·c)/(n² − Σr·c) is a single division of
-    // exact integers; MCC adds one sqrt over doubles cast from exact
-    // integers, the same fixed-dag discipline as eval_auc. Marginal
-    // sums Σr² / Σc² are computed from the row/column relations ALONE
-    // (not the joined one) so a class present only as a label or only
-    // as a prediction still counts. The three 1-row aggregates cross
-    // back onto each other — the standard scalar decorrelation
-    // (PlanGuardSpec allowlisted).
+    // (multiclass MCC) statistic in ONE summary row — see [[kappaMcc]].
     Spec("eval_kappa_mcc",
-      (s, d) => {
-        val p = preds(s, d)
-        val conf = p.groupBy("label", "pred").agg(count(lit(1)).as("c"))
-        val r = conf.groupBy(col("label").as("k")).agg(sum("c").as("rt"))
-        val cl = conf.groupBy(col("pred").as("k")).agg(sum("c").as("ct"))
-        val tot = p.agg(count(lit(1)).as("n"),
-          sum(when(col("pred") === col("label"), 1L).otherwise(0L)).as("tr"))
-        val rc = r.join(cl, "k").agg(sum(col("rt") * col("ct")).as("sum_rc"))
-        val r2 = r.agg(sum(col("rt") * col("rt")).as("sum_r2"))
-        val c2 = cl.agg(sum(col("ct") * col("ct")).as("sum_c2"))
-        tot.crossJoin(broadcast(rc)).crossJoin(broadcast(r2))
-          .crossJoin(broadcast(c2))
-          .select(col("n"), col("tr"), col("sum_rc"),
-            round((col("n") * col("tr") - col("sum_rc")).cast("double") /
-              (col("n") * col("n") - col("sum_rc")).cast("double"), 6)
-              .as("kappa"),
-            round((col("n") * col("tr") - col("sum_rc")).cast("double") /
-              sqrt((col("n") * col("n") - col("sum_r2")).cast("double") *
-                (col("n") * col("n") - col("sum_c2")).cast("double")), 6)
-              .as("mcc"))
-      },
+      (s, d) => kappaMcc(preds(s, d)),
       Some(s"""$full,
               conf AS (SELECT label, pred, count(*) AS c FROM preds
                        GROUP BY 1, 2),

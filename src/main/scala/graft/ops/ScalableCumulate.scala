@@ -365,6 +365,25 @@ object ScalableCumulate {
         .otherwise(lit(r) + idiv(rn - 1 - lit((q + 1) * r), q) + 1)
   }
 
+  /** Bucket id of every non-positive value under [[log2Bucket]]: below
+    * floor(64·log₂ x) of the smallest positive double (−68736), and far
+    * from Long overflow when a caller negates it.
+    */
+  val NonPositiveBucket: Long = -(1L << 20)
+
+  /** Log-octave `bucketHint` for [[quantilePicks]]: floor(64·log₂ x), so
+    * 1/64-octave value bands with no prior knowledge of the range. Total
+    * on non-null input — every non-positive value shares the single
+    * bucket [[NonPositiveBucket]], below every positive bucket — so the
+    * id stays monotone non-decreasing in x; NULL stays NULL. For a
+    * descending scan pass the negation.
+    */
+  def log2Bucket(x: Column): Column = {
+    val v = x.cast(DoubleType)
+    when(v > 0, floor(log(2.0, v) * 64))
+      .when(v.isNotNull, lit(NonPositiveBucket))
+  }
+
   /** Exact order-statistic picks — the pick-query fast path (round-10).
     *
     * [[cumSum]] answers "running sum on EVERY row", which forces the full
@@ -401,7 +420,8 @@ object ScalableCumulate {
     * `fracs` are (num, den) with 0 < num ≤ den; the crossing condition
     * is den·cum ≥ num·total, or strictly `>` with `strict = true` (the
     * boundary convention of cumulative-share banding: "first row OVER
-    * the 80% line"). `value` must be non-null AND non-negative with an
+    * the 80% line"). `value` must be non-null (enforced: the partials
+    * job counts null `value` rows and fails) AND non-negative with an
     * exact partial type (long / int / decimal) — the bucket-level
     * crossing search needs a monotone cumulative. `ascending = false`
     * orders buckets by descending `primary` (pass matching `orderCols`).
@@ -435,8 +455,8 @@ object ScalableCumulate {
     * along the scan direction (so anti-monotone in the raw value when
     * `ascending = false`) and never null on non-null input. Lets a call
     * site bucket with arithmetic instead of a split-point fold — e.g.
-    * `-floor(64·log2(rev))` gives 1/64-octave value bands with NO prior
-    * knowledge of the range and no bounds job at all. Equal values
+    * the negated [[log2Bucket]] of `rev` gives 1/64-octave value bands
+    * with NO prior knowledge of the range and no bounds job. Equal values
     * always share a bucket (the id is a pure function of the value), so
     * the tie argument above is untouched; a distribution concentrated
     * inside one 2^(1/64) ratio band degenerates to one bucket — the
@@ -536,13 +556,17 @@ object ScalableCumulate {
     // Under a bounds/bucket hint the bounds job (and its guard) never
     // ran: count NaN/null primaries here — they'd land in bucket 0 via
     // the when() fold (or a null bucket under bucketHint) — and fail
-    // loudly BEFORE any partial sum is used. Appended last so every
-    // positional index below is hint-independent.
+    // loudly BEFORE any partial sum is used. Null `value` rows are
+    // counted on every call: `sum` would skip them, silently dropping
+    // their weight from the cumulative and the total (e.g. a weight that
+    // overflows its decimal cast in a non-ANSI session). Both guards are
+    // appended last so every positional index below is hint-independent.
     val partAggs = (sum(value).as("__s") +: count(lit(1)).as("__n") +:
       metrics.map { case (n, c) => sum(c).as(s"__sm_$n") }) ++
       (if (hinted)
          Seq(count(when(pd.isNull || isnan(pd), 1)).as("__bad"))
-       else Nil)
+       else Nil) :+
+      count(when(value.isNull, 1)).as("__nullv")
     val part = withB.groupBy(keyCols: _*).agg(partAggs.head, partAggs.tail: _*)
     val partSchema = part.schema
     val ng = groupCols.size
@@ -564,8 +588,11 @@ object ScalableCumulate {
         s"(> spark.graft.cumulate.maxPartials=$maxPart) — the group key " +
         "is too high-cardinality for a driver-side pick; cumulate at a " +
         "coarser grain or raise the conf if the driver truly has the heap")
+    val nullV = partRows.map(_.getLong(partSchema.fieldIndex("__nullv"))).sum
+    require(nullV == 0L, s"quantilePicks: $nullV null `value` rows — " +
+      "value must be non-null (a null weight would be silently skipped)")
     if (hinted) {
-      val bad = partRows.map(_.getLong(partSchema.size - 1)).sum
+      val bad = partRows.map(_.getLong(partSchema.fieldIndex("__bad"))).sum
       require(bad == 0L, s"quantilePicks: $bad NaN/null primary keys")
       // a null bucket id (a bucketHint expression that nulls on non-null
       // input) would crash the Long bucket-id read below (getLong on a

@@ -30,12 +30,10 @@ class PlanGuardSpec extends AnyFunSuite {
     *    BNLJ over a broadcast bounded side IS the plan (the binned/auto
     *    range joins are the scale path)
     *  - join_q15_toprevenue / join_q22_idle_rich / text_tfidf_topk /
-    *    evt_rfm / sample_temperature / graph_triangle_count /
-    *    eval_kappa_mcc:
+    *    evt_rfm / sample_temperature / graph_triangle_count:
     *    1-row global-scalar subquery broadcast back onto the relation —
-    *    the standard decorrelation (graph_triangle_count and
-    *    eval_kappa_mcc cross three 1-row aggregates into their single
-    *    summary rows)
+    *    the standard decorrelation (graph_triangle_count crosses three
+    *    1-row aggregates into its single summary row)
     *  - sim_* / dedup_embed_cosine / sim_knn_classify / eval_mrr /
     *    eval_ndcg: fixed probe set (vec_id predicate) broadcast against
     *    the corpus with a non-equi self-exclusion — scan ∥ broadcast ∥
@@ -47,7 +45,6 @@ class PlanGuardSpec extends AnyFunSuite {
     "join_cross", "join_theta_range",
     "join_q15_toprevenue", "join_q22_idle_rich", "text_tfidf_topk",
     "evt_rfm", "sample_temperature", "graph_triangle_count",
-    "eval_kappa_mcc",
     "sim_cosine_topk", "sim_cosine_fused", "sim_dot_native",
     "sim_knn_classify", "dedup_embed_cosine",
     "eval_mrr", "eval_ndcg", "text_cross_entropy",
@@ -85,14 +82,7 @@ class PlanGuardSpec extends AnyFunSuite {
     * consciously regenerated (see PlanAudit scaladoc for the command).
     * Shrinking below budget is an improvement; the assert is one-sided.
     */
-  private val shuffleBudget: Map[String, Int] = {
-    val src = scala.io.Source.fromInputStream(
-      getClass.getResourceAsStream("/shuffle_budget.tsv"), "UTF-8")
-    try src.getLines().map { l =>
-      val Array(n, c) = l.split("\t"); n -> c.toInt
-    }.toMap
-    finally src.close()
-  }
+  private val shuffleBudget: Map[String, Int] = budgetTsv("/shuffle_budget.tsv").toMap
 
   /** Budget-exempt: these two queries' plans embed session cache state
     * (which shared dedup/inference intermediates are already persisted

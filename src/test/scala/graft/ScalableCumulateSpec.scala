@@ -219,13 +219,14 @@ class ScalableCumulateSpec extends AnyFunSuite {
     // variant axis of the API.
     import spark.implicits._
     val rnd = new scala.util.Random(421000)
+    var logMixed = 0 // log2Bucket trials with zeros/negatives and positives
     for (trial <- 1 to 16) {
       val n = 30 + rnd.nextInt(400)
       val dist = 1 + rnd.nextInt(12) // few distinct values → heavy ties
       val nGroups = 1 + rnd.nextInt(3)
       // ~1 in 5 rows lands in the NULL group (round-11: pins the
       // null-safe aux join on every randomized axis, not just a fixture)
-      val rows = Seq.fill(n)((
+      val rows0 = Seq.fill(n)((
         (if (rnd.nextInt(5) == 0) null
          else "g" + rnd.nextInt(nGroups)): String,
         rnd.nextInt(dist).toLong * 7, 1L + rnd.nextInt(5).toLong))
@@ -239,6 +240,35 @@ class ScalableCumulateSpec extends AnyFunSuite {
       // RNG stream so the other 15 trials draw exactly what they used to
       val num = if (strict && num0 == den) num0 - 1 else num0
       val grouped = rnd.nextBoolean()
+      // bounds/bucket hint axis (round-11): a separate RNG so the primary
+      // draw stream is untouched. A quarter of trials pass ARBITRARY split
+      // points (wrong range, duplicates, unsorted — anything finite), a
+      // quarter a monotone integer bucketHint expression (coarse integer
+      // division of x, direction-matched), a quarter the log-octave
+      // ScalableCumulate.log2Bucket, a quarter no hint; the hint contract
+      // says hints only shape bucket sizes, so every pick must still
+      // equal the reference fold bit-for-bit. Half the trials shift x
+      // down so zeros and negatives — one shared log2Bucket bucket —
+      // sit beside the positives.
+      val rnd2 = new scala.util.Random(trial * 7919)
+      val hint = rnd2.nextInt(4)
+      val (boundsH, bucketH): (Option[Seq[Double]], Option[Column]) =
+        hint match {
+          case 0 => (None, None)
+          case 1 => (Some(Seq.fill(rnd2.nextInt(6))(
+            rnd2.nextDouble() * 200 - 50 * rnd2.nextInt(3))), None)
+          case 2 =>
+            val k = 1 + rnd2.nextInt(17) // bucket width: 1 (id = value!) .. 17
+            val raw = floor(col("x") / k)
+            (None, Some(if (asc) raw else -raw))
+          case _ =>
+            val raw = ScalableCumulate.log2Bucket(col("x"))
+            (None, Some(if (asc) raw else -raw))
+        }
+      val shift = if (rnd2.nextBoolean()) -7L * (1 + rnd2.nextInt(dist)) else 0L
+      val rows = rows0.map { case (g, x, wt) => (g, x + shift, wt) }
+      if (hint == 3 && rows.exists(_._2 <= 0) && rows.exists(_._2 > 0))
+        logMixed += 1
       def ref(rs: Seq[(String, Long, Long)]): Long = {
         val sorted = if (asc) rs.sortBy(_._2) else rs.sortBy(-_._2)
         val w = sorted.map(_._3).sum
@@ -251,24 +281,6 @@ class ScalableCumulateSpec extends AnyFunSuite {
       val expected: Map[String, Long] =
         if (grouped) rows.groupBy(_._1).map { case (g, rs) => g -> ref(rs) }
         else Map("" -> ref(rows))
-      // bounds/bucket hint axis (round-11): a separate RNG so the primary
-      // draw stream is untouched. A third of trials pass ARBITRARY split
-      // points (wrong range, duplicates, unsorted — anything finite),
-      // a third pass a monotone integer bucketHint expression (coarse
-      // integer division of x, direction-matched), a third no hint; the
-      // hint contract says hints only shape bucket sizes, so every pick
-      // must still equal the reference fold bit-for-bit.
-      val rnd2 = new scala.util.Random(trial * 7919)
-      val (boundsH, bucketH): (Option[Seq[Double]], Option[Column]) =
-        rnd2.nextInt(3) match {
-          case 0 => (None, None)
-          case 1 => (Some(Seq.fill(rnd2.nextInt(6))(
-            rnd2.nextDouble() * 200 - 50 * rnd2.nextInt(3))), None)
-          case _ =>
-            val k = 1 + rnd2.nextInt(17) // bucket width: 1 (id = value!) .. 17
-            val raw = floor(col("x") / k)
-            (None, Some(if (asc) raw else -raw))
-        }
       spark.conf.set("spark.graft.cumulate.buckets", nb.toString)
       try {
         val ord = if (asc) col("x").asc else col("x").desc
@@ -291,6 +303,21 @@ class ScalableCumulateSpec extends AnyFunSuite {
         }
       } finally spark.conf.unset("spark.graft.cumulate.buckets")
     }
+    assert(logMixed > 0, "no log2Bucket trial mixed non-positive and positive x")
+  }
+
+  test("log2Bucket is total and monotone: one bucket below every positive value") {
+    import spark.implicits._
+    val xs = Seq(Some(-1e300), Some(-3.0), Some(-0.0), Some(0.0), Some(Double.MinPositiveValue),
+      Some(1e-300), Some(0.5), Some(1.0), Some(1.5), Some(2.0), Some(1e300), None)
+    val ids = xs.toDF("x").select(ScalableCumulate.log2Bucket(col("x")))
+      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+    val (nonPos, pos) = ids.init.map(_.get).splitAt(4)
+    assert(nonPos.forall(_ == ScalableCumulate.NonPositiveBucket), ids)
+    assert(pos.head > ScalableCumulate.NonPositiveBucket, ids)
+    assert(pos == pos.sorted && pos.distinct.size == pos.size, ids)
+    assert(pos.slice(2, 5) == Seq(-64L, 0L, 37L), ids)
+    assert(ids.last.isEmpty, "NULL input must stay a NULL bucket id")
   }
 
   test("quantilePicks: randomized differential with metric cums (total order)") {
@@ -578,6 +605,31 @@ class ScalableCumulateSpec extends AnyFunSuite {
     assert(r.select("pick_0").head().getLong(0) == 4L)
     assert(acc.value == 100L,
       s"upstream executed ${acc.value}/100 row-evals — expected exactly one pass")
+  }
+
+  test("quantilePicks: a null weight fails loudly instead of being skipped") {
+    // `sum` skips nulls, so a null `value` row would vanish from both the
+    // cumulative and the total. One source is a weight that overflows
+    // its decimal cast in a non-ANSI session (agg_weighted_median's
+    // DECIMAL(8,2)); the partials job refuses it by name, hinted or not.
+    import spark.implicits._
+    val df = Seq((1.0, Some(2L)), (2.0, None), (3.0, Some(1L))).toDF("x", "w")
+    for (hint <- Seq(None, Some(ScalableCumulate.log2Bucket(col("x"))))) {
+      val e = intercept[IllegalArgumentException] {
+        ScalableCumulate.quantilePicks(df, col("x"), Seq(col("x")), col("w"),
+          Seq((1L, 2L)), bucketHint = hint)
+      }
+      assert(e.getMessage.contains("null `value`"), e.getMessage)
+    }
+    val lax = spark.newSession()
+    lax.conf.set("spark.sql.ansi.enabled", "false")
+    val big = lax.createDataFrame(Seq((1.0, 3.0), (2.0, 1.0e6))).toDF("x", "q")
+      .select(col("x"), col("q").cast(DecimalType(8, 2)).as("w"))
+    val e = intercept[IllegalArgumentException] {
+      ScalableCumulate.quantilePicks(big, col("x"), Seq(col("x")), col("w"),
+        Seq((1L, 2L)), bucketHint = Some(ScalableCumulate.log2Bucket(col("x"))))
+    }
+    assert(e.getMessage.contains("1 null `value`"), e.getMessage)
   }
 
   test("quantilePicks: high-cardinality group key fails loudly at the cap") {

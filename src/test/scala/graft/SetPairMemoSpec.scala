@@ -1,10 +1,7 @@
 package graft
 
-import java.util.concurrent.{Callable, ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,35 +32,6 @@ class SetPairMemoSpec extends AnyFunSuite {
     * scan of the verify relation's RDD, which names its storage entry. */
   private def setPairEntries(): Int =
     sc.getRDDStorageInfo.count(_.name.contains("Scan ExistingRDD[sa#"))
-
-  /** Spark jobs that `body` starts on this thread. A job carries its
-    * submitting thread's local properties; a marker job run after `body`
-    * shows the asynchronous listener bus has delivered everything
-    * before it.
-    */
-  private def jobsRunBy(body: => Unit): Int = {
-    val key = "graft.test.jobTag"
-    val tag = java.util.UUID.randomUUID().toString
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
-    }
-    def tagged(t: String)(f: => Unit): Unit = {
-      sc.setLocalProperty(key, t)
-      try f finally sc.setLocalProperty(key, null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      tagged(tag)(body)
-      tagged(s"$tag-marker")(sc.parallelize(Seq(1), 1).count())
-      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
-      while (!seen.contains(s"$tag-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(s"$tag-marker"), "listener bus never delivered the marker job")
-      seen.asScala.count(_ == tag)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("sorted_intersect_count users run in a session that lacks the function") {
     // TestSpark loads GraftExtensions, so dropping the function from a
