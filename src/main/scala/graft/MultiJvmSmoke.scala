@@ -188,18 +188,24 @@ object MultiJvmSmoke {
       println(s"[multijvm] ${if (ok) "ok  " else "FAIL"} $n " +
         s"(${multi(n).size} rows multi, ${single(n).size} single)")
     }
-    // Reader-memo release (round-13 ADVICE): both sessions above are
-    // stopped; the eviction hook must drop every entry they registered,
-    // or a long-lived multi-session JVM retains dead sessions' file
-    // indexes forever. This is the natural two-sequential-sessions host
-    // to assert it in (a stop() inside sbt test would kill the
-    // suite-shared SparkContext).
-    Tables.evictStoppedSessions()
+    // Memo release (round-13 ADVICE): both contexts above are stopped;
+    // eviction must drop every entry they registered, in any scope —
+    // readers (dead sessions' file indexes) and data-derived entries
+    // alike — or a long-lived multi-session JVM retains them forever.
+    // This is the natural two-sequential-contexts host to assert it in
+    // (a stop() inside sbt test would kill the suite-shared SparkContext).
+    val held = Memo.keys.size
+    Memo.evictStopped()
     val memoLeft = Tables.readerMemoSize
     println(s"[multijvm] ${if (memoLeft == 0) "ok  " else "FAIL"} " +
       s"xtra_readermemo_evict ($memoLeft entries after 2 stopped sessions)")
     if (memoLeft != 0) failed += 1
-    val totalChecks = queryNames.size + 3
+    val entriesLeft = Memo.keys.size
+    val evicted = held > 0 && entriesLeft == 0
+    println(s"[multijvm] ${if (evicted) "ok  " else "FAIL"} xtra_memo_evict " +
+      s"($entriesLeft entries of 2 stopped contexts, $held before eviction)")
+    if (!evicted) failed += 1
+    val totalChecks = queryNames.size + 4
     println(f"[multijvm] == ${totalChecks - failed} ok, $failed fail == " +
       f"(mode=${if (allMode) "all" else "slice"}, " +
       f"multi $tMulti%.0f s, single $tSingle%.0f s)")

@@ -23,65 +23,34 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Per-(session, sfDir, table) reader memo. `spark.read.parquet` runs a
-    * schema-inference/file-listing job on every call (~30 ms; JobProf
-    * showed 10 of them per `registerAll`, a fixed tax on every sql_*
-    * query execution). The testdata tables are immutable fixtures, so the
-    * resolved DataFrame — schema AND file index — is reusable for the
-    * life of the session; at 100 TB the same holds for any immutable
-    * snapshot dir, and a mutable source should go through a catalog
-    * table, not this helper. Keyed on session identity so multi-JVM /
-    * multi-session runs never share state; bounded (sessions × sfDirs ×
-    * 10 tables), and entries owned by STOPPED sessions are purged on the
-    * next memo miss (round-13 ADVICE: a process-lifetime strong-keyed
-    * map otherwise retains every stopped sbt-test / multi-session
-    * session — and its resolved file index — forever).
+  /** The table's reader, a session-scoped [[Memo]] entry (a DataFrame is
+    * bound to the session that resolved it). `spark.read.parquet` runs a
+    * schema-inference/file-listing job on every call (~30 ms, 10 per
+    * `registerAll`); the fixtures are immutable, so the resolved
+    * DataFrame — schema AND file index — is reusable for the session's
+    * life. At 100 TB the same holds for any immutable snapshot dir; a
+    * mutable source should go through a catalog table. A stopped
+    * context's entries are dropped on the next memo miss (round-13
+    * ADVICE: stopped sessions and their file indexes were retained).
     */
-  private val readerMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-
-  /** Drop memo entries whose owning session is stopped. Called on the
-    * (rare) memo-miss path, never inside computeIfAbsent's mapping
-    * function (which must not mutate the map). Public so multi-session
-    * smokes can assert the release.
-    */
-  def evictStoppedSessions(): Unit =
-    readerMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-
-  /** Live memo entry count (post-eviction observability for tests). */
-  def readerMemoSize: Int = readerMemo.size
-
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val key = (spark, sfDir, name)
-    val hit = readerMemo.get(key)
-    if (hit != null) hit
-    else {
-      evictStoppedSessions()
-      readerMemo.computeIfAbsent(key, _ =>
-        if (name == "events") eventsFresh(spark, sfDir)
-        else parquet(spark, sfDir, name))
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    Memo.session(spark, s"$sfDir|$name|reader") {
+      if (name == "events") eventsFresh(spark, sfDir)
+      else parquet(spark, sfDir, name)
     }
-  }
 
-  /** Inferred schema per (sfDir, table), shared by every session. The
-    * inference is the job a `spark.read.parquet` runs; a fresh session
-    * (a new reader-memo key) reads with the known schema instead and runs
-    * none. The plan is the same either way, so cached relations built
-    * over one session's read still match another session's. `events` is
-    * not shared: its schema depends on a session conf.
-    */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), StructType]()
+  /** Live reader entries over all sessions (tests, benchmark gauges). */
+  def readerMemoSize: Int = Memo.keys.count(_._2.endsWith("|reader"))
 
+  /** Reads with the table's inferred schema, a context-scoped entry: the
+    * inference is the job `spark.read.parquet` runs, so a fresh session
+    * runs none. The plan is the same either way, so cached relations
+    * built over one session's read match another's. (`events` is not
+    * shared: its schema depends on a session conf.) */
   private def parquet(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    Option(schemaMemo.get((sfDir, name))) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None =>
-        val df = spark.read.parquet(path)
-        schemaMemo.putIfAbsent((sfDir, name), df.schema)
-        df
-    }
+    val schema = Memo.context(spark, s"$sfDir|$name|schema")(spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
   }
 
   /** `events.ts` precision has varied across testdata generations:

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Spec, Tables}
+import graft.{Memo, Spec, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,29 +30,20 @@ import org.apache.spark.sql.types._
 object Inference {
   import Tables._
 
-  // The centroid→score→pred pipeline feeds 7 declared queries; persist the
-  // shared stages once per (session, sfDir) so the eval family reuses them
-  // instead of recomputing the explode+aggregate chain. Cached frames are
-  // tiny (≤ vectors × labels rows).
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def cached(s: SparkSession, d: String, key: String)(mk: => DataFrame): DataFrame = {
-    val k = s"${s.hashCode()}|$d|$key"
-    // NOTE (round 15): an eager fill (persist + count) was tried to stop
-    // the cold path's concurrent branches from racing the cache fill (at
-    // the time, four simultaneous score stages in one cold
-    // eval_kappa_mcc; kappa now reads `preds` once, so the remaining
-    // racer is a multi-branch reader such as eval_per_class's two join
-    // sides) — and REVERTED: materializing at build time flips
-    // every downstream plan's InMemoryRelation to its executed form,
-    // which triples the printed exchange counts the shuffle-budget pins
-    // key on; re-pinning 3× budgets would blunt that tripwire for a
-    // cold-only win. The race costs duplicate work once per session.
-    val df = cache.getOrElseUpdate(k, mk.persist())
-    // identity-hash keys can collide after a session is GC'd/stopped:
-    // validate the cached frame still belongs to THIS session.
-    if (df.sparkSession eq s) df
-    else { val fresh = mk.persist(); cache.update(k, fresh); fresh }
-  }
+  // The centroid→score→pred pipeline feeds 7 declared queries; the
+  // shared stages are persisted once per (SparkContext, sfDir), a
+  // context-scoped Memo entry every session reuses, and persisted again
+  // after a release. Cached frames are tiny (≤ vectors × labels rows).
+  //
+  // NOTE (round 15): the fill stays lazy. An eager fill (persist + count)
+  // would stop a cold execution's branches from racing the fill (now a
+  // multi-branch reader such as eval_per_class's two join sides), but it
+  // flips every downstream plan's InMemoryRelation to its executed form,
+  // tripling the printed exchange counts the shuffle-budget pins key on.
+  // The Memo's single flight covers the persist, not the fill, so the
+  // race costs duplicate work once per fill.
+  private def cached(s: SparkSession, d: String, stage: String)(mk: => DataFrame): DataFrame =
+    Memo.cached(s, s"$d|$stage")(mk.persist())
 
   /** Exploded (vec_id, label, pos, x) with x as exact double. */
   private def vexp(s: SparkSession, d: String): DataFrame =

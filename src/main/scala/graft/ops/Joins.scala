@@ -208,10 +208,11 @@ object Joins {
     // NestedLoop-free (asserted in RangeBinJoinSpec) while the query text
     // stays declarative. Oracle identical to join_range_binned.
     Spec("join_range_auto",
-      (s, d) => {
+      (s0, d) => {
+        // binning is OPT-IN: the rule fires only for (child) sessions that
+        // set an explicit bin width (~ median interval width of THESE bands)
+        val s = s0.newSession()
         graft.plans.RangeBinJoin.ensureRegistered(s)
-        // binning is OPT-IN: the rule fires only for sessions that set an
-        // explicit bin width (~ median interval width of THESE bands)
         s.conf.set("spark.graft.rangeBinJoin.binWidth", "8.0")
         import s.implicits._
         val bands = Seq(
@@ -343,9 +344,10 @@ object Joins {
     // count — same oracle. OverlapBinJoinSpec proves plan shape +
     // rule-off equivalence incl. degenerate/null intervals.
     Spec("join_overlap_auto",
-      (s, d) => {
+      (s0, d) => {
+        // opt-in width (child session) ~ the short side's span: 6 h in µs
+        val s = s0.newSession()
         graft.plans.OverlapBinJoin.ensureRegistered(s)
-        // opt-in width ~ the short side's span: 6 h in epoch micros
         s.conf.set("spark.graft.overlapBinJoin.binWidth", "2.16e10")
         import s.implicits._
         val sess = t(s, d, "events")

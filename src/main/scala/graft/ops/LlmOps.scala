@@ -1,13 +1,11 @@
 package graft.ops
 
-import graft.{Spec, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
+import graft.{Memo, Spec, Tables}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.graftshim.DatasetShim
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
 /** SURVEY.md §2 category K — LLM-data-pipeline operators over `documents`
   * and `embeddings` (mandated beyond the reference's own surface).
@@ -151,7 +149,7 @@ object LlmOps {
     // verify consumers ever scan (columnar cache prunes columns). The
     // string tier duplicates the ts column in the cache; acceptable for
     // the rare tier it serves.
-    trackedCache(codingKey(s, d), "tokenSetGroups",
+    Memo.cached(s, s"${codingKey(s, d)}|tokenSetGroups")(
       t(s, d, "documents")
         .select(col("doc_id"),
           array_sort(array_distinct(split(col("text"), " "))).as("ts"))
@@ -159,7 +157,8 @@ object LlmOps {
         .agg(min("doc_id").as("set_id"),
           sort_array(collect_list(col("doc_id"))).as("members"))
         .withColumn("nt", size(col("ts")).cast("long"))
-        .withColumn("th", sortedTokenCodes(s, d, col("ts"))))
+        .withColumn("th", sortedTokenCodes(s, d, col("ts")))
+        .cache())
   }
 
   /** The sorted array a token set merges on: its distinct tokens under
@@ -242,13 +241,14 @@ object LlmOps {
     // needs both sides' prefix ranks), so it holds only the ⌊nt/10⌋+1
     // prefix tokens per SET (~0.4 rows per document at 10% prefix), far
     // smaller than the corpus.
-    val ranked = trackedCache(
-      s"plan${groups.queryExecution.analyzed.semanticHash()}", "prefixCandidates",
+    val ranked = Memo.cached(groups.sparkSession,
+      s"plan${groups.queryExecution.analyzed.semanticHash()}|prefixCandidates")(
       tk.join(dfreq, "token")
         .withColumn("rk", row_number().over(
           Window.partitionBy("set_id").orderBy(col("df"), col("token"))))
         .where(col("rk") <= floor(col("nt") / lit(10)) + 1)
-        .select("set_id", "nt", "token", "rk"))
+        .select("set_id", "nt", "token", "rk")
+        .cache())
     val a = ranked.select(col("set_id").as("sa"), col("nt").as("na"),
       col("token"), col("rk").as("i"))
     val b = ranked.select(col("set_id").as("sb"), col("nt").as("nb"),
@@ -308,21 +308,12 @@ object LlmOps {
 
   /** What decides the dedup plans of a session: the corpus dir and the
     * token coding, which is a function of the corpus and the test-only
-    * fault conf. Every dedup memo and cache handle is keyed by it, never
-    * by session identity, so sessions that would build the same plan
-    * share one entry and a session under the fault conf gets its own.
+    * fault conf. Every dedup [[Memo]] entry is keyed by it, never by
+    * session identity, so sessions that would build the same plan share
+    * one entry and a session under the fault conf gets its own.
     */
   private def codingKey(s: SparkSession, d: String): String =
     s"$d|${collideSeeds(s)}"
-
-  /** Per-corpus memo for [[injectiveCodeSeed]] — keyed by the corpus dir
-    * (plus the test-only fault conf), NOT by session (round-14 ADVICE:
-    * the verdict is corpus-determined, and a session-identity key
-    * retained entries for stopped sessions). The resolution is one small
-    * distributed aggregate per seed tried, run once per corpus per JVM.
-    */
-  private[graft] val injectiveSeedMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Option[Int]]
 
   /** Verified-injective token coding (round 13; mechanical fallback
     * round 14): the dedup verify path (and dedup_containment) merges
@@ -350,9 +341,13 @@ object LlmOps {
     * strings — exact with zero premises, just ~3× more merge traffic.
     * TokenCodingFallbackSpec forces both tiers with a synthetic collision
     * and asserts row-for-row equality.
+    *
+    * The verdict is corpus-determined, so it is memoized per corpus (plus
+    * the fault conf) at context scope (round-14 ADVICE): one small
+    * aggregate per seed tried, once per corpus per context.
     */
   private[graft] def injectiveCodeSeed(s: SparkSession, d: String): Option[Int] = {
-    injectiveSeedMemo.getOrElseUpdate(codingKey(s, d), {
+    Memo.context(s, s"${codingKey(s, d)}|codeSeed") {
       // persisted for the duration of the seed search (round-14 ADVICE):
       // the happy path runs ONE aggregate (the persist fills during it),
       // but a collision-heavy corpus would otherwise re-explode the
@@ -378,7 +373,7 @@ object LlmOps {
         found
       } finally { toks.unpersist(); () }
       seed
-    })
+    }
   }
 
   /** Sorted token-code arrays per set, read straight off the cached
@@ -462,29 +457,13 @@ object LlmOps {
     * cache entry only through the same RDD, so one handle per key is
     * kept and re-rooted into the caller's session.
     *
-    * The fill is single-flight per key: concurrent first consumers wait
-    * for one build, and the handle is published only once filled. A
-    * handle whose cache entry is gone ([[unpersistAll]], or
-    * `catalog.clearCache()` from any session) or whose SparkContext has
-    * stopped is rebuilt on next access. Like every cached relation here,
-    * the memo assumes the sfDir parquet is immutable (the fixtures are).
+    * The handle is a context-scoped [[Memo]] entry: one single-flight
+    * build, published once filled, rebuilt once its cache entry is gone.
     * dedup_allpairs_exact intentionally does NOT use this: its point is
     * the exact prefix-filter path, so it must run its own candidates.
     */
-  private[graft] def minhashSetPairs(s: SparkSession, d: String): DataFrame = {
-    val key = s"${codingKey(s, d)}|setPairs"
-    def live: Option[DataFrame] = trackedCaches.get(key).filter(h =>
-      (h.sparkSession.sparkContext eq s.sparkContext) &&
-        h.storageLevel != StorageLevel.NONE)
-    val handle = live.getOrElse(
-      setPairLocks.computeIfAbsent(key, _ => new Object).synchronized {
-        live.getOrElse(buildSetPairs(s, d, key))
-      })
-    DatasetShim.ofRows(s.asInstanceOf[classic.SparkSession],
-      handle.queryExecution.logical)
-  }
-  private val setPairLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+  private[graft] def minhashSetPairs(s: SparkSession, d: String): DataFrame =
+    Memo.cached(s, s"${codingKey(s, d)}|setPairs")(buildSetPairs(s, d))
   /** Cumulative wall-clock spent in [[buildSetPairs]] this JVM — the
     * one-time memo build cost the per-query bench numbers deliberately
     * exclude (it lands in the first consumer's discarded sample). Bench
@@ -497,7 +476,7 @@ object LlmOps {
     * rebuild after the entry was released. */
   private val memoBuildCount = new java.util.concurrent.atomic.AtomicLong(0L)
   def memoBuilds: Long = memoBuildCount.get()
-  private def buildSetPairs(s: SparkSession, d: String, key: String): DataFrame = {
+  private def buildSetPairs(s: SparkSession, d: String): DataFrame = {
     val t0 = System.nanoTime()
     val groups = tokenSetGroups(s, d)
     val ck =
@@ -509,45 +488,9 @@ object LlmOps {
       case lr: LogicalRDD => lr.rdd.unpersist(blocking = true)
       case _ =>
     }
-    trackedCaches.put(key, ck)
     memoBuildCount.incrementAndGet()
     memoBuildNanos.addAndGet(System.nanoTime() - t0)
     ck
-  }
-
-  // ------------------------------------------------------------------
-  // Cache/memo lifecycle. Every relation this module pins (the groups
-  // and prefix-candidate intermediates and the set-pair memo) registers
-  // here, one handle per key, so a long-lived application can evict them
-  // once a sfDir's sweep is done. The cached data lives in the
-  // SparkContext's shared CacheManager, which every session of the
-  // context reads, so one handle covers all of them: a fresh session
-  // re-binds the key to its own DataFrame over the same cached plan and
-  // adds nothing. Every key carries what decides its plan (the coding
-  // key, or the plan's own hash), so a re-bind never orphans a
-  // differently planned entry (the round-14 ADVICE case: the fault conf
-  // used to change the plan under an unchanged key).
-  // ------------------------------------------------------------------
-  private val trackedCaches =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def trackedCache(scope: String, tag: String, df: DataFrame): DataFrame = {
-    val cached = df.cache()
-    trackedCaches.put(s"$scope|$tag", cached)
-    cached
-  }
-  /** Evict every cached relation this module pinned on `s`'s SparkContext
-    * (all sfDirs, every session of the context), and forget handles of
-    * stopped contexts. Returns the number of relations released. Safe to
-    * call repeatedly; queries rebuild transparently afterwards.
-    */
-  def unpersistAll(s: SparkSession): Int = {
-    var n = 0
-    trackedCaches.filterInPlace { (_, df) =>
-      val sc = df.sparkSession.sparkContext
-      if (sc eq s.sparkContext) { df.unpersist(blocking = true); n += 1; false }
-      else !sc.isStopped
-    }
-    n
   }
 
   /** Expansion of surviving set pairs to doc pairs; identical-set groups

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Spec, Tables}
+import graft.{Memo, Spec, Tables}
 import graft.streaming.StreamRunner
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,11 +26,8 @@ object Streaming {
 
   private def ev(s: SparkSession, d: String): DataFrame = events(s, d)
 
-  private val maxTsCache =
-    scala.collection.concurrent.TrieMap.empty[String, java.sql.Timestamp]
   private def maxTs(s: SparkSession, d: String): java.sql.Timestamp =
-    maxTsCache.getOrElseUpdate(s"${s.hashCode()}|$d",
-      ev(s, d).agg(max("ts")).head().getTimestamp(0))
+    Memo.context(s, s"$d|maxTs")(ev(s, d).agg(max("ts")).head().getTimestamp(0))
 
   /** Run `body` with the RocksDB state-store provider (transformWithState
     * needs multiple column families — state + timers — which only RocksDB

@@ -192,9 +192,12 @@ case class BroadcastAsOfJoinExec(
 
     left.execute().mapPartitions({ lIter =>
       // built once per EXECUTOR per (broadcast, plan) — every subsequent
-      // task on this executor reuses it (computeIfAbsent; entries live as
-      // long as the executor, the same lifetime as the broadcast block
-      // itself). Tiny: the right side fits the broadcast threshold.
+      // task on this executor reuses it (computeIfAbsent). Entries are
+      // never evicted: they outlive the broadcast block, which the
+      // ContextCleaner removes, and each execution adds one (a new
+      // broadcast id). In local mode the executor is the driver, so every
+      // run of a broadcast as-of join grows the driver heap. Tiny per
+      // entry: the right side fits the broadcast threshold.
       val index = BroadcastAsOfJoinExec.indexCache.computeIfAbsent(cacheKey, _ => {
         val grouped = new java.util.HashMap[Any, java.util.ArrayList[InternalRow]]()
         broadcastRows.value.foreach { row =>
@@ -248,6 +251,7 @@ case class BroadcastAsOfJoinExec(
 object BroadcastAsOfJoinExec {
   /** Executor-side cache of built key→sorted-rows indexes, keyed by
     * (broadcast id, plan id) — one build per executor instead of per task.
+    * Never evicted (see the build site).
     */
   private[plans] val indexCache =
     new java.util.concurrent.ConcurrentHashMap[(Long, Int),

@@ -4,17 +4,18 @@ import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-7 verdict #2: the dedup family pins cached intermediates
-  * (tokenSetGroups, prefix candidates) and the verified set-pair memo in
-  * the SparkContext's shared CacheManager, one entry per (sfDir, token
-  * coding) for every session of the context. `LlmOps.unpersistAll(s)` is
-  * the eviction seam: it releases every entry of `s.sparkContext`,
-  * whichever session built it. This spec proves (a) eviction actually
-  * releases the pinned storage, (b) sweeping a SECOND sfDir then evicting
-  * leaves nothing behind, so a long-lived multi-tenant application does
-  * not accumulate pinned storage per corpus, and (c) after any release —
-  * `unpersistAll`, or `catalog.clearCache()` from another session — the
-  * memo rebuilds from its lineage instead of serving a released relation.
-  * Assertions are per-object (storage levels, registry counts), not
+  * (tokenSetGroups, prefix candidates) and the verified set-pair memo,
+  * and the eval family pins its Inference stages, in the SparkContext's
+  * shared CacheManager: one context-scoped `Memo` entry per key for every
+  * session of the context. `Memo.release(s)` is the eviction seam: it
+  * releases every cached entry of `s.sparkContext`, whichever session
+  * built it. This spec proves (a) eviction actually releases the pinned
+  * storage, (b) sweeping a SECOND sfDir then evicting leaves nothing
+  * behind, so a long-lived multi-tenant application does not accumulate
+  * pinned storage per corpus, and (c) after any release — `Memo.release`,
+  * or `catalog.clearCache()` from another session — the memos rebuild
+  * instead of serving a released relation. Assertions are per-object
+  * (storage levels, registry counts, jobs tagged to this thread), not
   * global block counts, so other suites sharing the context can't race
   * them.
   */
@@ -28,7 +29,7 @@ class CacheLifecycleSpec extends AnyFunSuite {
     SparkEntry.queries("dedup_canonical")(session, TestSpark.sf).collect()
       .map(_.toSeq.mkString("|")).toSeq
 
-  test("unpersistAll releases the context's dedup caches and set-pair memo") {
+  test("Memo.release releases the context's dedup caches and set-pair memo") {
     // build the full memoized pipeline at sf0.001 in a fresh session; the
     // entries belong to the context, so evicting through another session
     // of it releases them
@@ -36,11 +37,11 @@ class CacheLifecycleSpec extends AnyFunSuite {
     val pinnedAfterBuild = persistentRddCount()
     assert(pinnedAfterBuild > 0, "build should have pinned storage")
 
-    val evicted = ops.LlmOps.unpersistAll(s)
+    val evicted = Memo.release(s)
     assert(evicted >= 2,
       s"expected at least groups cache + set-pair memo, evicted $evicted")
     // a second call finds nothing — the registries are actually drained
-    assert(ops.LlmOps.unpersistAll(s) == 0)
+    assert(Memo.release(s) == 0)
 
     // the blocking unpersists must have released the blocks this module
     // pinned: strictly fewer persistent RDDs than right after the build
@@ -49,12 +50,12 @@ class CacheLifecycleSpec extends AnyFunSuite {
 
     // queries rebuild transparently after eviction
     assert(TestSpark.q("dedup_canonical").count() > 0)
-    ops.LlmOps.unpersistAll(s)
+    Memo.release(s)
   }
 
   test("second sfDir sweep does not accumulate pinned storage after eviction") {
     assert(TestSpark.q("dedup_canonical").count() > 0)
-    ops.LlmOps.unpersistAll(s)
+    Memo.release(s)
     val baseline = persistentRddCount()
 
     // sweep a different corpus in the same session, then evict
@@ -62,7 +63,7 @@ class CacheLifecycleSpec extends AnyFunSuite {
       .count() > 0)
     assert(persistentRddCount() > baseline,
       "second corpus should pin fresh storage while in use")
-    val evicted = ops.LlmOps.unpersistAll(s)
+    val evicted = Memo.release(s)
     assert(evicted >= 2)
     assert(persistentRddCount() <= baseline,
       "after eviction the second corpus must leave no pinned storage")
@@ -72,15 +73,15 @@ class CacheLifecycleSpec extends AnyFunSuite {
     val groups = ops.LlmOps.tokenSetGroups(s, TestSpark.sf)
     groups.count()
     assert(groups.storageLevel != StorageLevel.NONE, "cache should be active")
-    ops.LlmOps.unpersistAll(s)
+    Memo.release(s)
     assert(groups.storageLevel == StorageLevel.NONE,
-      "unpersistAll must clear the CacheManager entry for the groups plan")
+      "Memo.release must clear the CacheManager entry for the groups plan")
   }
 
-  test("the set-pair memo rebuilds after unpersistAll and still matches") {
+  test("the set-pair memo rebuilds after Memo.release and still matches") {
     val before = canonical(s.newSession())
     assert(before.size == 500, "dedup_canonical must return the oracle's 500 rows")
-    ops.LlmOps.unpersistAll(s)
+    Memo.release(s)
     val builds0 = ops.LlmOps.memoBuilds
     assert(canonical(s.newSession()) == before)
     assert(ops.LlmOps.memoBuilds - builds0 == 1, "a released memo must rebuild once")
@@ -94,6 +95,26 @@ class CacheLifecycleSpec extends AnyFunSuite {
     assert(canonical(s.newSession()) == before)
     assert(ops.LlmOps.memoBuilds - builds0 == 1,
       "a memo whose cache entry was cleared must rebuild, not serve the bare relation")
-    ops.LlmOps.unpersistAll(s)
+    Memo.release(s)
+  }
+
+  test("Inference stages are persisted again after clearCache from another session") {
+    // the eval family's warm job count holds only while `preds` is
+    // cached: a stage whose cache entry another session cleared must be
+    // persisted again, not served at StorageLevel.NONE and recomputed on
+    // every read
+    val session = s.newSession()
+    def perClass(): Int = TestSpark.jobsRunBy(
+      SparkEntry.queries("eval_per_class")(session, TestSpark.sf).count())
+    perClass()
+    val warm = perClass()
+    s.newSession().catalog.clearCache()
+    assert(ops.Inference.preds(session, TestSpark.sf).storageLevel != StorageLevel.NONE,
+      "preds must be persisted again after clearCache")
+    perClass()
+    val after = perClass()
+    assert(after == warm,
+      s"eval_per_class runs $after jobs warm after clearCache, $warm before")
+    Memo.release(s)
   }
 }

@@ -12,12 +12,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * `src/test/resources/job_budget.tsv` pins the five queries of the
   * benchmark's `board_sf01` slice. The pins are one-sided (`<=`); lower a
   * pin when a change removes jobs. Each query runs once to warm the
-  * session's memos and caches, then three measured times in a session of
-  * the shared test context (its own session, so the Inference cache
-  * entries it reads are its own, whatever other suites released). The
-  * filled entries are released afterwards: the cache manager is shared
-  * by every session, and a filled entry changes how the plans that read
-  * it print, which PlanGuardSpec's shuffle counts key on.
+  * memos and caches, then three measured times in a session of the
+  * shared test context. The Inference stages it reads are context-scoped
+  * `Memo` entries, persisted again if another suite released them, so
+  * the warm-up always refills them. The filled entries are released
+  * afterwards through `Memo.release`: the cache manager is shared by
+  * every session, and a filled entry changes how the plans that read it
+  * print, which PlanGuardSpec's shuffle counts key on.
   */
 class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
   import TestSpark._
@@ -27,8 +28,7 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val session = spark.newSession()
 
   override def afterAll(): Unit =
-    try Seq(ops.Inference.preds(session, sf), ops.Inference.scores(session, sf),
-      ops.Inference.centroids(session, sf)).foreach(_.unpersist(blocking = true))
+    try Memo.release(session)
     finally super.afterAll()
 
   test("job budget file names only declared queries") {

@@ -103,7 +103,7 @@ class OverlapBinJoinSpec extends AnyFunSuite {
   }
 
   test("no explicit bin width -> rule never fires (opt-in contract)") {
-    // clear any width leaked by join_overlap_auto earlier in the shared session
+    // clear any width another suite left set in the shared session
     spark.conf.unset("spark.graft.overlapBinJoin.binWidth")
     val plan = executedPlan(overlapJoin(as, bs))
     assert(plan.contains("NestedLoopJoin") && !plan.contains("Generate"))
@@ -160,5 +160,18 @@ class OverlapBinJoinSpec extends AnyFunSuite {
       assert(!executedPlan(df).contains("NestedLoopJoin"))
       assert(df.collect().length == 6)
     }
+  }
+
+  test("join_overlap_auto bins in a child session and leaves the caller's conf unset") {
+    val fresh = TestSpark.spark.newSession()
+    val q = SparkEntry.queries("join_overlap_auto")(fresh, TestSpark.sf)
+    val plan = executedPlan(q)
+    assert(!plan.contains("NestedLoopJoin"), s"rule did not fire:\n$plan")
+    assert(q.count() > 0)
+    for (k <- Seq("spark.graft.rangeBinJoin.binWidth", "spark.graft.overlapBinJoin.binWidth"))
+      assert(fresh.conf.getOption(k).isEmpty, s"join_overlap_auto set $k on the caller's session")
+    // same oracle as the hand-binned query
+    assert(q.collect().toSeq ==
+      SparkEntry.queries("join_interval_overlap")(fresh, TestSpark.sf).collect().toSeq)
   }
 }

@@ -20,7 +20,7 @@ class RangeBinJoinSpec extends AnyFunSuite {
 
   /** Disables BOTH bin-join rules for the body: the overlap rule treats a
     * point as a degenerate interval, so with a leaked overlap width (e.g.
-    * set by join_overlap_auto earlier in the shared session) it would
+    * one another suite left set in the shared session) it would
     * also rewrite these point-range joins and the NestedLoop expectations
     * here would test the wrong rule.
     */
@@ -164,5 +164,18 @@ class RangeBinJoinSpec extends AnyFunSuite {
         |ON v >= lo AND v < hi ORDER BY pid, iid""".stripMargin)
     assert(!executedPlan(df).contains("NestedLoopJoin"))
     assert(df.collect().length == 7)
+  }
+
+  test("join_range_auto bins in a child session and leaves the caller's conf unset") {
+    val fresh = TestSpark.spark.newSession()
+    val q = SparkEntry.queries("join_range_auto")(fresh, TestSpark.sf)
+    val plan = executedPlan(q)
+    assert(!plan.contains("NestedLoopJoin"), s"rule did not fire:\n$plan")
+    assert(q.count() > 0)
+    for (k <- Seq("spark.graft.rangeBinJoin.binWidth", "spark.graft.overlapBinJoin.binWidth"))
+      assert(fresh.conf.getOption(k).isEmpty, s"join_range_auto set $k on the caller's session")
+    // same oracle as the hand-binned query
+    assert(q.collect().toSeq ==
+      SparkEntry.queries("join_range_binned")(fresh, TestSpark.sf).collect().toSeq)
   }
 }

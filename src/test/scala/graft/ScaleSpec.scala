@@ -107,7 +107,7 @@ class ScaleSpec extends AnyFunSuite {
           s"would be ~${f}x, quadratic ~${f * f}x)")
     }
     // release the fixture corpora's pinned storage
-    ops.LlmOps.unpersistAll(s)
+    Memo.release(s)
   }
 
   test("dedup candidates stay linear and the band bucket stays bounded at 100x") {
@@ -187,7 +187,7 @@ class ScaleSpec extends AnyFunSuite {
     assert(w100 / r100 <= 25.0 * (w1 / r1) + 2.0,
       f"per-round wall grew ${w1 / r1}%.3f -> ${w100 / r100}%.3f s/round " +
         "at 100x edges — super-linear")
-    ops.LlmOps.unpersistAll(s)
+    Memo.release(s)
   }
 
   test("iterated checkpoints truncate STATS, not just lineage (round-14 bug guard)") {
@@ -307,7 +307,7 @@ class ScaleSpec extends AnyFunSuite {
     assert(p10 <= 6.0 * p1 + 2.0,
       f"pagerank wall grew $p1%.2f -> $p10%.2f s on 10x edges — " +
         "super-linear; the per-exchange floor should amortize first")
-    ops.LlmOps.unpersistAll(s)
+    Memo.release(s)
   }
 
   test("quantilePicks driver collect stays O(NB·groups) flat to 10x data") {

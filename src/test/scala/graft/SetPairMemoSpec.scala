@@ -37,7 +37,7 @@ class SetPairMemoSpec extends AnyFunSuite {
     // TestSpark loads GraftExtensions, so dropping the function from a
     // fresh session's registry is how a non-extension session looks;
     // releasing the memo makes the banded family build in that session
-    ops.LlmOps.unpersistAll(spark)
+    Memo.release(spark)
     val fresh = spark.newSession()
     val fn = FunctionIdentifier("sorted_intersect_count")
     fresh.sessionState.functionRegistry.dropFunction(fn)
@@ -45,11 +45,11 @@ class SetPairMemoSpec extends AnyFunSuite {
     for ((q, n) <- oracleRows)
       assert(SparkEntry.queries(q)(fresh, sf).count() == n,
         s"$q in a session without the function did not return the oracle's $n rows")
-    ops.LlmOps.unpersistAll(spark)
+    Memo.release(spark)
   }
 
   test("fresh sessions share one single-flight set-pair build") {
-    ops.LlmOps.unpersistAll(spark)
+    Memo.release(spark)
     val builds0 = ops.LlmOps.memoBuilds
     val n = 4
     val pool = Executors.newFixedThreadPool(n)
@@ -93,11 +93,11 @@ class SetPairMemoSpec extends AnyFunSuite {
     // and the default coding's entry still serves without a build
     assert(rows(spark.newSession()) == baseline)
     assert(ops.LlmOps.memoBuilds - builds0 == 1)
-    ops.LlmOps.unpersistAll(spark)
+    Memo.release(spark)
   }
 
   test("a cold construction runs the build's jobs (the job probe sees them)") {
-    ops.LlmOps.unpersistAll(spark)
+    Memo.release(spark)
     assert(jobsRunBy(SparkEntry.queries("dedup_canonical")(spark.newSession(), sf)) > 0)
   }
 }

@@ -37,12 +37,12 @@ class TokenCodingFallbackSpec extends AnyFunSuite {
     // fault conf actually governs the rebuild (the memo is keyed by
     // (session, dir) — a production-built entry would otherwise be
     // served verbatim and the fallback path never exercised)
-    ops.LlmOps.unpersistAll(spark)
+    Memo.release(spark)
     try body
     finally {
       spark.conf.unset(CONF)
       // and again on exit so later specs rebuild with production coding
-      ops.LlmOps.unpersistAll(spark)
+      Memo.release(spark)
     }
   }
 
@@ -117,7 +117,10 @@ class TokenCodingFallbackSpec extends AnyFunSuite {
 
   test("the seed memo is corpus-keyed: no session identity, no stopped-session retention") {
     ops.LlmOps.injectiveCodeSeed(spark, sf)
-    val keys = ops.LlmOps.injectiveSeedMemo.keySet
+    val seedEntries = Memo.keys.filter(_._2.endsWith("|codeSeed"))
+    assert(seedEntries.forall(_._1.isInstanceOf[org.apache.spark.SparkContext]),
+      s"the seed memo must be context-scoped, got: $seedEntries")
+    val keys = seedEntries.map(_._2)
     assert(keys.exists(_.startsWith(sf)), s"expected a $sf-keyed entry: $keys")
     // the key is (dir, fault-conf) only — nothing session-identity-shaped
     assert(keys.forall(k => k.startsWith("/") && !k.matches("^\\d+\\|.*")),
