@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.SparkEnv
-import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Fault drill for the localCheckpoint trade (round-10 verdict #3).
@@ -30,12 +29,8 @@ import org.apache.spark.sql.functions._
 object CheckpointFaultSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,1,1024]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder("local-cluster[2,1,1024]", 4)
       .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {

@@ -57,8 +57,10 @@ object MultiJvmSmoke {
     // round-11 additions — every family with process-boundary machinery:
     // RocksDB transformWithState state + event-time timers on executors
     "stream_stateful_tws", "stream_session_timers", "stream_liststate_lastn",
-    // RangeBin / OverlapBin optimizer-rule plans (GraftExtensions rules
-    // must rewrite identically when the exchange is a real netty transfer)
+    // RangeBin / OverlapBin optimizer-rule plans (the rules
+    // GraftExtensions.ensure installs in each query's child session, in
+    // the late "User Provided Optimizers" batch, must rewrite identically
+    // when the exchange is a real netty transfer)
     "join_range_auto", "join_overlap_auto",
     // TypedImperativeAggregate buffers serialized across the exchange —
     // exactly what a single JVM never exercises
@@ -78,13 +80,8 @@ object MultiJvmSmoke {
 
   private def run(master: String, extra: Map[String, String],
       sfDir: String, queryNames: Seq[String]): Map[String, Seq[String]] = {
-    val b = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val b = GraftSession.builder(master, 4)
       .config("spark.sql.catalog.mjcat", "graft.sources.MemCatalog")
-      .config("spark.ui.enabled", "false")
     extra.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     try {

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -96,15 +95,4 @@ case class CosineSimExpr(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSimExpr {
-  /** Imperative fallback registration (sessions without GraftExtensions). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", { exprs =>
-        require(exprs.length == 2,
-          s"cosine_sim expects 2 arguments (array<float>, array<float>), got ${exprs.length}")
-        CosineSimExpr(exprs(0), exprs(1))
-      }, "scala_udf")
 }

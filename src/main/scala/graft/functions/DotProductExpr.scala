@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -80,17 +79,4 @@ case class DotProductExpr(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object DotProductExpr {
-  /** Register `dot_product(a, b)` in the session's function registry so it
-    * is usable from SQL text and `expr(...)`.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", { exprs =>
-        require(exprs.length == 2,
-          s"dot_product expects 2 arguments (array<float>, array<float>), got ${exprs.length}")
-        DotProductExpr(exprs(0), exprs(1))
-      }, "scala_udf")
 }

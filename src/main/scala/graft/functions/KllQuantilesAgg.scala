@@ -4,7 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -235,9 +234,4 @@ object KllQuantilesAgg {
     } else DefaultK
     KllQuantilesAgg(exprs.head, exprs(1), k)
   }
-
-  /** Imperative fallback mirroring [[graft.GraftExtensions]]. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_quantiles", builder, "scala_udf")
 }

@@ -4,7 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -148,9 +147,4 @@ object MisraGriesAgg {
     require(k > 0, "mg_heavy_hitters: k must be positive")
     MisraGriesAgg(exprs.head, k)
   }
-
-  /** Imperative fallback mirroring [[graft.GraftExtensions]]. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mg_heavy_hitters", builder, "scala_udf")
 }

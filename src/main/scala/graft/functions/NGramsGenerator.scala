@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
@@ -70,15 +69,4 @@ case class NGramsGenerator(child: Expression, n: Expression)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0), n = newChildren(1))
-}
-
-object NGramsGenerator {
-  /** Imperative fallback registration (sessions without GraftExtensions). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngrams", { exprs =>
-        require(exprs.length == 2,
-          s"ngrams expects 2 arguments (array<string>, int), got ${exprs.length}")
-        NGramsGenerator(exprs(0), exprs(1))
-      }, "scala_udf")
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -115,23 +113,3 @@ case class SortedIntersectCountExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object SortedIntersectCountExpr {
-  private val id = FunctionIdentifier("sorted_intersect_count")
-
-  /** Check-then-register, called where the function is used: a session
-    * built with GraftExtensions (or one that already registered it) is
-    * left as it is; any other session gets the imperative registration.
-    * Idempotent, so every query that names the function can call it.
-    */
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(id)) register(spark)
-
-  /** Imperative fallback registration (sessions without GraftExtensions). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count", { exprs =>
-        require(exprs.length == 2,
-          s"sorted_intersect_count expects 2 arguments (same-type string or bigint arrays), got ${exprs.length}")
-        SortedIntersectCountExpr(exprs(0), exprs(1))
-      }, "scala_udf")
-}

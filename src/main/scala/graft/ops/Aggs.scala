@@ -394,7 +394,7 @@ object Aggs {
     // deterministically true and DuckDB states them literally.
     Spec("agg_kll_quantiles",
       (s, d) => {
-        graft.functions.KllQuantilesAgg.register(s)
+        graft.GraftExtensions.ensure(s)
         val li = t(s, d, "lineitem")
         val est = li.groupBy("l_returnflag")
           .agg(expr("kll_quantiles(l_extendedprice, array(0.5D, 0.9D, 0.99D))").as("est"))
@@ -436,7 +436,7 @@ object Aggs {
     // IEEE-exact on both engines (no libm drift).
     Spec("agg_heavy_hitters",
       (s, d) => {
-        graft.functions.MisraGriesAgg.register(s)
+        graft.GraftExtensions.ensure(s)
         val ev = t(s, d, "events")
           .select(col("event_type"), floor(sqrt(col("value"))).cast("long").as("item"))
         val cand = ev.groupBy("event_type")

@@ -430,7 +430,7 @@ object Analytics4 {
     // bit-identical numerics — the oracle is sim_cosine_topk's.
     Spec("sim_cosine_fused",
       (s, d) => {
-        graft.functions.CosineSimExpr.register(s)
+        graft.GraftExtensions.ensure(s)
         val v = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
         val p = v.where(col("vec_id") < 5)
           .select(col("vec_id").as("p_id"), col("embedding").as("p_emb"))

@@ -211,9 +211,8 @@ object Joins {
       (s0, d) => {
         // binning is OPT-IN: the rule fires only for (child) sessions that
         // set an explicit bin width (~ median interval width of THESE bands)
-        val s = s0.newSession()
-        graft.plans.RangeBinJoin.ensureRegistered(s)
-        s.conf.set("spark.graft.rangeBinJoin.binWidth", "8.0")
+        val s = graft.GraftSession.child(s0, "join_range_auto",
+          "spark.graft.rangeBinJoin.binWidth" -> "8.0")
         import s.implicits._
         val bands = Seq(
           (0, 0.0, 1.0), (1, 1.0, 2.0), (2, 2.0, 4.0), (3, 4.0, 8.0),
@@ -346,9 +345,8 @@ object Joins {
     Spec("join_overlap_auto",
       (s0, d) => {
         // opt-in width (child session) ~ the short side's span: 6 h in µs
-        val s = s0.newSession()
-        graft.plans.OverlapBinJoin.ensureRegistered(s)
-        s.conf.set("spark.graft.overlapBinJoin.binWidth", "2.16e10")
+        val s = graft.GraftSession.child(s0, "join_overlap_auto",
+          "spark.graft.overlapBinJoin.binWidth" -> "2.16e10")
         import s.implicits._
         val sess = t(s, d, "events")
           .groupBy(col("user_id"),
@@ -610,11 +608,10 @@ object Joins {
     // (asserted green here, bloom presence asserted in BloomJoinSpec).
     Spec("join_bloom_runtime",
       (s0, d) => {
-        val s = s0.newSession()
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        s.conf.set(
-          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+        val s = graft.GraftSession.child(s0, "join_bloom_runtime",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")
         val p = t(s, d, "part").where(col("p_size") <= 5)
         t(s, d, "lineitem")
           .join(p, col("l_partkey") === col("p_partkey"))

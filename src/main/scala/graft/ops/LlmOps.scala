@@ -407,7 +407,7 @@ object LlmOps {
     * [[injectiveCodeSeed]] for the exactness argument and fallback tiers.
     */
   private def verifySetPairs(groups: DataFrame, cand: DataFrame): DataFrame = {
-    graft.functions.SortedIntersectCountExpr.ensureRegistered(groups.sparkSession)
+    graft.GraftExtensions.ensure(groups.sparkSession)
     val g1 = codedSide(groups, "sa", "na")
     val g2 = codedSide(groups, "sb", "nb")
     // intersection size via the native merge expression: both th arrays

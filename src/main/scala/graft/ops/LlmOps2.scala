@@ -340,7 +340,7 @@ object LlmOps2 {
     // hot path here, and the fused expression halves the query's cost.
     Spec("dedup_embed_cosine",
       (s, d) => {
-        graft.functions.CosineSimExpr.register(s)
+        graft.GraftExtensions.ensure(s)
         val v = t(s, d, "embeddings").where(col("vec_id") < 200)
           .select(col("vec_id"), col("embedding"))
         val p = v.select(col("vec_id").as("p_id"), col("embedding").as("p_emb"))
@@ -410,7 +410,7 @@ object LlmOps2 {
     // sequential-fold numerics, one tight generated loop per row.
     Spec("sim_dot_native",
       (s, d) => {
-        graft.functions.DotProductExpr.register(s)
+        graft.GraftExtensions.ensure(s)
         val v = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding"),
             sqrt(expr("dot_product(embedding, embedding)")).as("nrm"))

@@ -401,7 +401,7 @@ object LlmOps3 {
     // integers; floor basis points.
     Spec("text_ngram_novelty",
       (s, d) => {
-        graft.functions.NGramsGenerator.register(s)
+        graft.GraftExtensions.ensure(s)
         t(s, d, "documents").createOrReplaceTempView("documents")
         // One gram-keyed exchange instead of three-and-a-join (round 15):
         // the old shape aggregated firsts(gram → min doc) and joined the

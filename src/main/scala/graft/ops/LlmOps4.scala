@@ -434,7 +434,7 @@ object LlmOps4 {
     // referee, the sim_cosine_topk pattern applied to set containment.
     Spec("dedup_containment",
       (s, d) => {
-        graft.functions.SortedIntersectCountExpr.ensureRegistered(s)
+        graft.GraftExtensions.ensure(s)
         val sets = t(s, d, "documents")
           .select(col("doc_id"), LlmOps.sortedTokenCodes(s, d,
             array_distinct(split(col("text"), " "))).as("ts"))

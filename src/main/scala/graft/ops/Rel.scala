@@ -392,9 +392,9 @@ object Rel {
     // ~100k footers and scanning every page of the fact table.
     Spec("scan_agg_pushdown",
       (s, d) => {
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.sources.useV1SourceList", "")
-        s2.conf.set("spark.sql.parquet.aggregatePushdown", "true")
+        val s2 = graft.GraftSession.child(s, "scan_agg_pushdown",
+          "spark.sql.sources.useV1SourceList" -> "",
+          "spark.sql.parquet.aggregatePushdown" -> "true")
         s2.read.parquet(s"$d/lineitem.parquet")
           .agg(count(lit(1)).as("n_rows"),
             min("l_orderkey").as("min_key"), max("l_orderkey").as("max_key"),

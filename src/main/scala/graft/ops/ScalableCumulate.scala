@@ -78,10 +78,10 @@ object ScalableCumulate {
     * since the last [[resetHiddenShuffles]] — the audit seam for the
     * checkpoint blind spot (round-9 advice): a localCheckpointed input is
     * a LogicalRDD in the final plan, so its upstream shuffles vanish from
-    * the plan string. PlanAudit and PlanGuardSpec add this ledger to the
-    * visible count, keeping the pinned per-query shuffle budgets honest
-    * end-to-end. Thread-local because sbt may build plans concurrently.
-    * (The two bounded helper jobs — the bounds aggregate and the NB-grain
+    * the plan string. `graft.Profile --budget` and PlanGuardSpec add this
+    * ledger to the visible count, keeping the pinned per-query shuffle
+    * budgets honest end-to-end. Thread-local because sbt may build plans
+    * concurrently. (The two bounded helper jobs — the bounds aggregate and the NB-grain
     * partials groupBy, both over the checkpointed relation — are fixed
     * O(NB·|groups|) shapes and stay outside the budget, as they were
     * before the rewrite.)
@@ -89,6 +89,13 @@ object ScalableCumulate {
   private val hiddenLedger = new ThreadLocal[Int] {
     override def initialValue(): Int = 0
   }
+
+  /** Shuffle exchanges (hash / range / single-partition, not
+    * BroadcastExchange) in an executed-plan string; a pinned budget
+    * counts these plus [[hiddenShuffles]]. */
+  def shuffleCount(plan: String): Int =
+    plan.linesIterator.count(l =>
+      l.contains("Exchange") && !l.contains("BroadcastExchange"))
 
   /** Observability seam for ScaleSpec (round-11 verdict #6): row count of
     * the most recent quantilePicks partials collect on this JVM. The
@@ -113,7 +120,7 @@ object ScalableCumulate {
     * `sbt test` runs suites sequentially in one forked JVM, so a
     * cross-thread write during a window is genuinely anomalous, never a
     * legitimate concurrent build; auditors close their window with
-    * [[endAudit]] (PlanGuardSpec in a per-test finally, PlanAudit.main
+    * [[endAudit]] (PlanGuardSpec in a per-test finally, `Profile --budget`
     * after its sweep) so unaudited construction elsewhere is never
     * policed.
     */
@@ -161,7 +168,7 @@ object ScalableCumulate {
     * a driver-collected pick), so the pinned budget still charges it.
     */
   def audited(df: DataFrame): DataFrame = {
-    record(graft.PlanAudit.shuffleCount(df.queryExecution.executedPlan.toString))
+    record(shuffleCount(df.queryExecution.executedPlan.toString))
     df
   }
 
@@ -238,7 +245,7 @@ object ScalableCumulate {
             "unpartitioned Window — checkpointing would hide a " +
             "single-task global sort from the plan guard; route that " +
             "cumulation through ScalableCumulate instead")
-        record(graft.PlanAudit.shuffleCount(qe.executedPlan.toString))
+        record(shuffleCount(qe.executedPlan.toString))
         df.localCheckpoint()
     }
 

@@ -109,7 +109,7 @@ object TextAnalysis {
     // semantics.
     Spec("text_ngram_native",
       (s, d) => {
-        graft.functions.NGramsGenerator.register(s)
+        graft.GraftExtensions.ensure(s)
         t(s, d, "documents").createOrReplaceTempView("documents")
         s.sql("""WITH tk AS (SELECT doc_id, split(text, ' ') AS toks
                              FROM documents),

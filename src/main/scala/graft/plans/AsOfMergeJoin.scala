@@ -283,22 +283,11 @@ class AsOfJoinStrategy extends SparkStrategy {
   * are resolved attributes and the plan drops straight into the analyzer.
   */
 object Asof {
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    // planner.strategies covers both seams: GraftExtensions' injected
-    // strategy AND a previous extraStrategies registration — skip if either
-    // already installed it, so the extension path stays the only hook in
-    // sessions built with spark.sql.extensions=graft.GraftExtensions.
-    if (!cs.sessionState.planner.strategies.exists(_.isInstanceOf[AsOfJoinStrategy]))
-      cs.experimental.extraStrategies =
-        cs.experimental.extraStrategies :+ new AsOfJoinStrategy
-  }
-
   def join(left: DataFrame, leftKey: String, leftTime: String,
            right: DataFrame, rightKey: String, rightTime: String,
            rightTieBreak: Seq[String] = Nil): DataFrame = {
     val ls = left.sparkSession.asInstanceOf[classic.SparkSession]
-    ensureRegistered(ls)
+    graft.GraftExtensions.ensure(ls)
     val lplan = left.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
     // This plan is assembled from ALREADY-ANALYZED children, so the
     // analyzer's DeduplicateRelations never sees it: a self-join would

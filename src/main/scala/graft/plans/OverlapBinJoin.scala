@@ -1,11 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Cast, Divide, EqualNullSafe, EqualTo, Explode, Expression, Floor, GreaterThan, GreaterThanOrEqual, Greatest, LessThan, LessThanOrEqual, Literal, PredicateHelper, Sequence}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.classic
 import org.apache.spark.sql.types.{DoubleType, LongType, NumericType}
 
 /** Optimizer rule: rewrites an interval-OVERLAP join — an inner join whose
@@ -128,21 +126,5 @@ class OverlapBinJoinRule extends Rule[LogicalPlan] with PredicateHelper {
             Project(j.output, Join(newLeft, newRight, Inner, Some(newCond), hint))
         }
     }
-  }
-}
-
-/** Imperative fallback registration for sessions built without
-  * `spark.sql.extensions=graft.GraftExtensions` — mirrors [[RangeBinJoin.ensureRegistered]].
-  */
-object OverlapBinJoin {
-  def ensureRegistered(spark: SparkSession): Unit = synchronized {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    val installed =
-      cs.sessionState.optimizer.extendedOperatorOptimizationRules
-        .exists(_.isInstanceOf[OverlapBinJoinRule]) ||
-      cs.experimental.extraOptimizations.exists(_.isInstanceOf[OverlapBinJoinRule])
-    if (!installed)
-      cs.experimental.extraOptimizations =
-        cs.experimental.extraOptimizations :+ new OverlapBinJoinRule
   }
 }

@@ -1,11 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, Cast, Divide, EqualNullSafe, EqualTo, Explode, Expression, Floor, GreaterThan, GreaterThanOrEqual, Greatest, LessThan, LessThanOrEqual, Literal, PredicateHelper, Sequence}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.classic
 import org.apache.spark.sql.types.{DoubleType, LongType, NumericType}
 
 /** Optimizer rule (`Rule[LogicalPlan]`, the `injectOptimizerRule` seam):
@@ -149,21 +147,5 @@ class RangeBinJoinRule extends Rule[LogicalPlan] with PredicateHelper {
           }
         }
     }
-  }
-}
-
-/** Imperative fallback registration for sessions built without
-  * `spark.sql.extensions=graft.GraftExtensions` — mirrors [[Asof.ensureRegistered]].
-  */
-object RangeBinJoin {
-  def ensureRegistered(spark: SparkSession): Unit = synchronized {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    val installed =
-      cs.sessionState.optimizer.extendedOperatorOptimizationRules
-        .exists(_.isInstanceOf[RangeBinJoinRule]) ||
-      cs.experimental.extraOptimizations.exists(_.isInstanceOf[RangeBinJoinRule])
-    if (!installed)
-      cs.experimental.extraOptimizations =
-        cs.experimental.extraOptimizations :+ new RangeBinJoinRule
   }
 }

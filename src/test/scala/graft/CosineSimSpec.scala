@@ -10,7 +10,7 @@ class CosineSimSpec extends AnyFunSuite {
   import TestSpark._
 
   test("cosine_sim equals the unfused dot/(||a||*||b||) chain bit-for-bit") {
-    graft.functions.CosineSimExpr.register(spark)
+    GraftExtensions.ensure(spark)
     def norm(c: String) = sqrt(aggregate(
       transform(col(c), x => x.cast("double") * x.cast("double")),
       lit(0.0), (a, x) => a + x))
@@ -28,7 +28,7 @@ class CosineSimSpec extends AnyFunSuite {
   }
 
   test("a NULL element poisons cosine_sim exactly like the HOF fold") {
-    graft.functions.CosineSimExpr.register(spark)
+    GraftExtensions.ensure(spark)
     val r = spark.sql(
       """SELECT cosine_sim(a, b) AS fused,
                 aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
@@ -43,7 +43,7 @@ class CosineSimSpec extends AnyFunSuite {
   }
 
   test("cosine_sim is null on null input and length mismatch") {
-    graft.functions.CosineSimExpr.register(spark)
+    GraftExtensions.ensure(spark)
     val r = spark.sql(
       """SELECT cosine_sim(CAST(NULL AS ARRAY<FLOAT>), array(CAST(1.0 AS FLOAT))) AS a,
                 cosine_sim(array(CAST(1.0 AS FLOAT)),

@@ -10,7 +10,7 @@ class DotProductSpec extends AnyFunSuite {
   import TestSpark._
 
   test("dot_product equals the zip_with fold bit-for-bit") {
-    graft.functions.DotProductExpr.register(spark)
+    GraftExtensions.ensure(spark)
     val e = Tables.t(spark, sf, "embeddings").select(col("vec_id"), col("embedding"))
     val p = e.select(col("vec_id").as("p_id"), col("embedding").as("p_emb"))
       .where(col("p_id") < 3)
@@ -24,7 +24,7 @@ class DotProductSpec extends AnyFunSuite {
   }
 
   test("a NULL element poisons dot_product exactly like the HOF fold") {
-    graft.functions.DotProductExpr.register(spark)
+    GraftExtensions.ensure(spark)
     val r = spark.sql(
       """SELECT dot_product(array(CAST(1.0 AS FLOAT), CAST(NULL AS FLOAT)),
                             array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT))) AS d""").head
@@ -32,7 +32,7 @@ class DotProductSpec extends AnyFunSuite {
   }
 
   test("dot_product handles nulls like a strict binary expression") {
-    graft.functions.DotProductExpr.register(spark)
+    GraftExtensions.ensure(spark)
     val r = spark.sql(
       "SELECT dot_product(CAST(NULL AS ARRAY<FLOAT>), array(CAST(1.0 AS FLOAT))) AS d").head
     assert(r.isNullAt(0))

@@ -6,7 +6,7 @@ import graft.functions.QuantileSketch
 
 /** KLL/MRL quantile sketch: error bound on known distributions, merge
   * behavior, serde roundtrip, and the TypedImperativeAggregate through
-  * SQL (registered by GraftExtensions — no imperative register call).
+  * SQL (installed by `GraftExtensions.ensure`).
   */
 class KllSketchSpec extends AnyFunSuite {
   import TestSpark._
@@ -63,6 +63,7 @@ class KllSketchSpec extends AnyFunSuite {
   }
 
   test("kll_quantiles works from SQL with group-by partial merge") {
+    GraftExtensions.ensure(spark)
     Tables.registerAll(spark, sf)
     val rows = spark.sql(
       """SELECT l_returnflag, kll_quantiles(l_quantity, array(0.5D, 0.9D)) AS est
@@ -79,6 +80,7 @@ class KllSketchSpec extends AnyFunSuite {
   }
 
   test("plain decimal probe literals work from SQL (array(0.5, 0.9))") {
+    GraftExtensions.ensure(spark)
     Tables.registerAll(spark, sf)
     val r = spark.sql(
       """SELECT kll_quantiles(l_quantity, array(0.5, 0.9)) AS est

@@ -50,6 +50,7 @@ class MisraGriesSpec extends AnyFunSuite {
   }
 
   test("mg_heavy_hitters from SQL (extension-registered) bounds output to k") {
+    GraftExtensions.ensure(spark)
     Tables.registerAll(spark, sf)
     val rows = spark.sql(
       """SELECT event_type, mg_heavy_hitters(CAST(floor(sqrt(value)) AS BIGINT), 4) AS c

@@ -11,7 +11,7 @@ class NGramsSpec extends AnyFunSuite {
   import TestSpark._
 
   private def grams(tokens: Seq[String], n: Int): Seq[(Int, String)] = {
-    graft.functions.NGramsGenerator.register(spark)
+    GraftExtensions.ensure(spark)
     import spark.implicits._
     Seq(tokens).toDF("toks").createOrReplaceTempView("ng_in")
     spark.sql(s"SELECT pos, gram FROM ng_in LATERAL VIEW ngrams(toks, $n) t AS pos, gram")
@@ -30,7 +30,7 @@ class NGramsSpec extends AnyFunSuite {
 
   test("short arrays and null arrays emit nothing; OUTER keeps the row") {
     assert(grams(Seq("only"), 2).isEmpty)
-    graft.functions.NGramsGenerator.register(spark)
+    GraftExtensions.ensure(spark)
     val df = spark.sql(
       """SELECT pos FROM (SELECT CAST(NULL AS ARRAY<STRING>) AS toks)
         |LATERAL VIEW ngrams(toks, 2) t AS pos, gram""".stripMargin)
@@ -42,7 +42,7 @@ class NGramsSpec extends AnyFunSuite {
   }
 
   test("plans as a Generate node with no exchange") {
-    graft.functions.NGramsGenerator.register(spark)
+    GraftExtensions.ensure(spark)
     val df = Tables.t(spark, sf, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
     df.createOrReplaceTempView("ng_docs")
@@ -50,11 +50,11 @@ class NGramsSpec extends AnyFunSuite {
       "SELECT doc_id, gram FROM ng_docs LATERAL VIEW ngrams(toks, 3) t AS pos, gram")
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("Generate ngrams"), plan.linesIterator.take(8).mkString("\n"))
-    assert(PlanAudit.shuffleCount(plan) == 0, "ngram generation must not shuffle")
+    assert(ops.ScalableCumulate.shuffleCount(plan) == 0, "ngram generation must not shuffle")
   }
 
   test("agrees with the lead()-window construction on real documents") {
-    graft.functions.NGramsGenerator.register(spark)
+    GraftExtensions.ensure(spark)
     import org.apache.spark.sql.expressions.Window
     val toks = Tables.t(spark, sf, "documents")
       .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "token")))

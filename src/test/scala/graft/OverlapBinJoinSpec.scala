@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class OverlapBinJoinSpec extends AnyFunSuite {
   private lazy val spark = {
     val s = TestSpark.spark
-    graft.plans.OverlapBinJoin.ensureRegistered(s)
+    GraftExtensions.ensure(s)
     s
   }
   import spark.implicits._

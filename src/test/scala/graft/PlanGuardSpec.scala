@@ -75,11 +75,11 @@ class PlanGuardSpec extends AnyFunSuite {
     "text_heaps_law")
 
   /** Pinned per-query shuffle budgets (round 8): the number of shuffle
-    * exchanges in each plan, as generated by `graft.PlanAudit`. A change
-    * that ADDS a shuffle to any query is the canonical silent scale
+    * exchanges in each plan, as generated by `graft.Profile --budget`. A
+    * change that ADDS a shuffle to any query is the canonical silent scale
     * regression — at 100 TB an extra shuffle is an extra full-data
     * redistribution — so it fails here by name until the budget is
-    * consciously regenerated (see PlanAudit scaladoc for the command).
+    * consciously regenerated (see Profile's scaladoc for the command).
     * Shrinking below budget is an improvement; the assert is one-sided.
     */
   private val shuffleBudget: Map[String, Int] = budgetTsv("/shuffle_budget.tsv").toMap
@@ -87,7 +87,7 @@ class PlanGuardSpec extends AnyFunSuite {
   /** Budget-exempt: these two queries' plans embed session cache state
     * (which shared dedup/inference intermediates are already persisted
     * when the plan is built), so their shuffle count differs between a
-    * fresh PlanAudit session and the suite's shared session. Their scale
+    * fresh `Profile --budget` session and the suite's shared session. Their scale
     * shape is guarded elsewhere: the memo-reuse test below and ScaleSpec's
     * measured sub-quadratic growth curve.
     */
@@ -143,21 +143,21 @@ class PlanGuardSpec extends AnyFunSuite {
       if (!bnljAllow(spec.name))
         assert(!plan.contains("BroadcastNestedLoopJoin"),
           s"${spec.name} plans a BroadcastNestedLoopJoin:\n${plan.linesIterator.take(30).mkString("\n")}")
-      // visible + hidden-behind-checkpoint (same recipe as PlanAudit.main,
+      // visible + hidden-behind-checkpoint (same recipe as Profile --budget,
       // so a shuffle regression UPSTREAM of a materialize() still trips
       // the pinned budget — round-9 advice #3)
       val shuffles =
-        PlanAudit.shuffleCount(plan) + ops.ScalableCumulate.hiddenShuffles
+        ops.ScalableCumulate.shuffleCount(plan) + ops.ScalableCumulate.hiddenShuffles
       if (!shuffleBudgetExempt(spec.name)) shuffleBudget.get(spec.name) match {
         case Some(budget) =>
           assert(shuffles <= budget,
             s"${spec.name} plans $shuffles shuffle exchanges, budget is " +
               s"$budget — a shuffle regression. Fix the plan, or if the " +
               "extra shuffle is intended, regenerate " +
-              "src/test/resources/shuffle_budget.tsv via graft.PlanAudit.")
+              "src/test/resources/shuffle_budget.tsv via graft.Profile --budget.")
         case None =>
           fail(s"${spec.name} has no shuffle budget — regenerate " +
-            "src/test/resources/shuffle_budget.tsv via graft.PlanAudit")
+            "src/test/resources/shuffle_budget.tsv via graft.Profile --budget")
       }
       } finally ops.ScalableCumulate.endAudit()
     }
@@ -172,9 +172,9 @@ class PlanGuardSpec extends AnyFunSuite {
     val orphans = budgeted -- declared
     val missing = declared -- budgeted
     assert(orphans.isEmpty,
-      s"shuffle_budget.tsv rows with no declared query: $orphans — regenerate via graft.PlanAudit")
+      s"shuffle_budget.tsv rows with no declared query: $orphans — regenerate via graft.Profile --budget")
     assert(missing.isEmpty,
-      s"declared queries with no budget row: $missing — regenerate via graft.PlanAudit")
+      s"declared queries with no budget row: $missing — regenerate via graft.Profile --budget")
   }
 
   test("shuffle counter sees shuffle exchanges, not broadcasts") {
@@ -186,7 +186,7 @@ class PlanGuardSpec extends AnyFunSuite {
         |      +- BroadcastExchange HashedRelationBroadcastMode(List(k))
         |         +- Exchange SinglePartition, ENSURE_REQUIREMENTS
         |""".stripMargin
-    assert(PlanAudit.shuffleCount(plan) == 3)
+    assert(ops.ScalableCumulate.shuffleCount(plan) == 3)
   }
 
   test("plan guard: scan_dpp keeps its DynamicPruningExpression") {

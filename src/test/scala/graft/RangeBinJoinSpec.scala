@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class RangeBinJoinSpec extends AnyFunSuite {
   private lazy val spark = {
     val s = TestSpark.spark
+    GraftExtensions.ensure(s)
     // the rewrite is opt-in: fires only with an explicit bin width
     s.conf.set("spark.graft.rangeBinJoin.binWidth", "8.0")
     s

@@ -60,7 +60,7 @@ class ScaleSpec extends AnyFunSuite {
     * relation of the N× fixture is exactly N disjoint copies.
     */
   private def probe(sfDir: String): (Long, Long, Long, Long, Double, Long) = {
-    graft.functions.SortedIntersectCountExpr.register(s)
+    GraftExtensions.ensure(s)
     val t0 = System.nanoTime()
     val groups = ops.LlmOps.tokenSetGroups(s, sfDir)
     val nSets = groups.count()
@@ -121,7 +121,7 @@ class ScaleSpec extends AnyFunSuite {
     // cross-replica 64-bit hash coincidence can merge two buckets, which
     // the 2× slack absorbs. Quadratic candidate growth would read
     // ~10,000×; linear reads ~100×.
-    graft.functions.SortedIntersectCountExpr.register(s)
+    GraftExtensions.ensure(s)
     def maxBucket(groups: DataFrame): Long =
       ops.LlmOps.minhashBands(groups)
         .groupBy("band", "h").count()

@@ -34,9 +34,10 @@ class SetPairMemoSpec extends AnyFunSuite {
     sc.getRDDStorageInfo.count(_.name.contains("Scan ExistingRDD[sa#"))
 
   test("sorted_intersect_count users run in a session that lacks the function") {
-    // TestSpark loads GraftExtensions, so dropping the function from a
-    // fresh session's registry is how a non-extension session looks;
-    // releasing the memo makes the banded family build in that session
+    // a fresh session of the suite's (extension-less) session lacks the
+    // function; the drop keeps that so should the suite session ever
+    // gain the extension. Releasing the memo makes the banded family
+    // build in that session
     Memo.release(spark)
     val fresh = spark.newSession()
     val fn = FunctionIdentifier("sorted_intersect_count")

@@ -12,7 +12,7 @@ class SortedIntersectSpec extends AnyFunSuite {
   import TestSpark._
 
   private def viaBoth(pairs: Seq[(Seq[String], Seq[String])]): Seq[(Long, Int)] = {
-    graft.functions.SortedIntersectCountExpr.register(spark)
+    GraftExtensions.ensure(spark)
     import spark.implicits._
     pairs.toDF("a", "b")
       .select(
@@ -53,7 +53,7 @@ class SortedIntersectSpec extends AnyFunSuite {
     // branch of the expression must count exactly |A ∩ B| for every
     // sorted-distinct pair, and coding a string pair then merging must
     // equal merging the strings (injective coding ⇒ same count).
-    graft.functions.SortedIntersectCountExpr.register(spark)
+    GraftExtensions.ensure(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     val cases = (0 until 200).map { _ =>
@@ -87,7 +87,7 @@ class SortedIntersectSpec extends AnyFunSuite {
   }
 
   test("null array -> null; null element poisons to null") {
-    graft.functions.SortedIntersectCountExpr.register(spark)
+    GraftExtensions.ensure(spark)
     import spark.implicits._
     val df = Seq((Some(Seq("a", "b")), Option.empty[Seq[String]]))
       .toDF("a", "b")
@@ -99,9 +99,9 @@ class SortedIntersectSpec extends AnyFunSuite {
   }
 
   test("whole-stage codegen path and interpreted path agree") {
-    graft.functions.SortedIntersectCountExpr.register(spark)
+    GraftExtensions.ensure(spark)
     val s2 = spark.newSession()
-    graft.functions.SortedIntersectCountExpr.register(s2)
+    GraftExtensions.ensure(s2)
     s2.conf.set("spark.sql.codegen.wholeStage", "false")
     val sql =
       """SELECT sorted_intersect_count(array('a','c','e','g'), array('b','c','d','e','f')) AS c"""

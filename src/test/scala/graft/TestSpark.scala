@@ -7,18 +7,15 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One shared local session for the whole test run (SURVEY.md §5.4). */
+/** One shared local session for the whole test run (SURVEY.md §5.4),
+  * built by the graded recipe ([[GraftSession]], no extensions) at
+  * `local[8]`, the core count the plan and job budgets are pinned at. */
 object TestSpark {
   val sf = "/root/testdata/sf0.001"
   lazy val spark: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft_warehouse_")
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = GraftSession.builder("local[8]", 8)
       .config("spark.sql.warehouse.dir", wh.toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
