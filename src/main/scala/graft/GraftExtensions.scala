@@ -46,6 +46,7 @@ object GraftExtensions {
   /** SQL functions: (identifier, info, builder with its arity check). */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
     binary("dot_product", classOf[DotProductExpr], "array<float>, array<float>")(DotProductExpr(_, _)),
+    binary("scaled_dot", classOf[ScaledDotExpr], "array<float>, array<double>")(ScaledDotExpr(_, _)),
     binary("cosine_sim", classOf[CosineSimExpr], "array<float>, array<float>")(CosineSimExpr(_, _)),
     binary("sorted_intersect_count", classOf[SortedIntersectCountExpr],
       "same-type string or bigint arrays")(SortedIntersectCountExpr(_, _)),

@@ -10,10 +10,13 @@ import scala.collection.mutable
   *   sbt "runMain graft.Profile [--plan] <sfDir> <query> [query ...]"
   *
   * Runs each query twice (the second, post-JIT pass is the one to read)
-  * and prints rows, wall time and job count, then every job's wall time
-  * and stages, every stage's IO volumes, and every cached block that left
-  * memory — so a multi-job query (materialize + eager picks + the
-  * returned plan) shows where its seconds go. `--plan` adds the executed
+  * and prints rows, build and total wall time and job count, then every
+  * job's wall time, phase and stages, every stage's IO volumes, and every
+  * cached block that left memory — so a multi-job query (materialize +
+  * eager picks + the returned plan) shows where its seconds go. A job's
+  * phase is the job description set while it was submitted, `<query>
+  * build` or `<query> action`; AQE's pool threads inherit it with the
+  * caller's local properties. `--plan` adds the executed
   * plan of the second pass's `count()` after it ran (AQE-final, with the
   * ReusedExchange/ReusedSubquery nodes a pre-action explain cannot show).
   *
@@ -60,7 +63,8 @@ object Profile {
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         starts(j.jobId) = (System.nanoTime(),
-          s"stages=${j.stageInfos.size} " +
+          s"[${Option(j.properties).map(_.getProperty("spark.job.description")).orNull}] " +
+            s"stages=${j.stageInfos.size} " +
             j.stageInfos.map(_.name.takeWhile(_ != '\n').take(60)).mkString(" | "))
       override def onJobEnd(j: SparkListenerJobEnd): Unit = {
         jobCount.incrementAndGet()
@@ -98,13 +102,17 @@ object Profile {
       (1 to 2).foreach { pass =>
         lines.clear()
         jobCount.set(0)
+        val sc = spark.sparkContext
         val t0 = System.nanoTime()
+        sc.setJobDescription(s"$name build")
         // what `count()` runs, kept so its executed plan can be printed
         val counted = SparkEntry.queries(name)(spark, sfDir).groupBy().count()
-        val n = counted.collect().head.getLong(0)
+        val build = (System.nanoTime() - t0) / 1e9
+        sc.setJobDescription(s"$name action")
+        val n = try counted.collect().head.getLong(0) finally sc.setJobDescription(null)
         val total = (System.nanoTime() - t0) / 1e9
         Thread.sleep(200) // let the listener bus drain before printing
-        println(f"[profile] $name pass=$pass rows=$n total=$total%.3f s " +
+        println(f"[profile] $name pass=$pass rows=$n build=$build%.3f s total=$total%.3f s " +
           s"jobs=${jobCount.get()} events=${lines.size}")
         lines.foreach(println)
         if (plan && pass == 2) println(counted.queryExecution.executedPlan.toString)

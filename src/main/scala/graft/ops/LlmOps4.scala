@@ -386,8 +386,8 @@ object LlmOps4 {
     // pairwise — which is the whole point of clustering first at 100 TB
     // (the τ-threshold variant that drops only score ≥ τ near-dups of the
     // representative reads the same `score` column from this relation).
-    // Reuses Inference's cached centroid→score→pred stages; the oracle
-    // extends the same CTE chain.
+    // Reuses Inference's cached preds stage; the oracle extends the same
+    // CTE chain.
     Spec("dedup_semantic_cluster",
       (s, d) => {
         val p = Inference.preds(s, d)

@@ -4,8 +4,9 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Expression, JoinedRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, ClusteredDistribution, Distribution, IdentityBroadcastMode, Partitioning, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, BroadcastMode, ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
@@ -150,14 +151,13 @@ case class AsOfMergeJoinExec(
 
 /** Broadcast as-of join: when the right side is dim-sized, the scale-
   * optimal plan shuffles NOTHING — the left (the 100 TB fact) is scanned
-  * in place. Each task receives the whole right side once
-  * (`BroadcastDistribution(IdentityBroadcastMode)` — Catalyst inserts the
-  * BroadcastExchange, AQE reuses it), builds a key → time-sorted row
-  * index lazily per executor, and answers each left row with a binary
-  * search (last right row with time <= t; bucket sorted by (time,
-  * tiebreaks) ascending so "last" realizes the max-tiebreak rule).
-  * Mirrors Spark's own BHJ-vs-SMJ selection: [[AsOfJoinStrategy]] picks
-  * this exec iff right's stats fit `autoBroadcastJoinThreshold`.
+  * in place. The right side is broadcast as its own index
+  * ([[AsOfIndexBroadcastMode]] — Catalyst inserts the BroadcastExchange,
+  * AQE reuses it). A task finds each key's row range once; each left row
+  * is then one binary search for the range's last row with time <= t
+  * (ties sorted by the tie-break columns ascending, so "last" realizes the
+  * max-tiebreak rule). Mirrors Spark's own BHJ-vs-SMJ selection: [[AsOfJoinStrategy]]
+  * picks this exec iff right's stats fit `autoBroadcastJoinThreshold`.
   */
 case class BroadcastAsOfJoinExec(
     leftKey: Expression, rightKey: Expression,
@@ -167,8 +167,11 @@ case class BroadcastAsOfJoinExec(
 
   override def output: Seq[Attribute] = left.output ++ right.output
 
+  private def bindRight(e: Expression) = BindReferences.bindReference(e, right.output)
+
   override def requiredChildDistribution: Seq[Distribution] =
-    UnspecifiedDistribution :: BroadcastDistribution(IdentityBroadcastMode) :: Nil
+    UnspecifiedDistribution :: BroadcastDistribution(AsOfIndexBroadcastMode(
+      bindRight(rightKey), bindRight(rightTime), rightTieBreak.map(bindRight))) :: Nil
 
   // left passes through untouched: its partitioning AND ordering survive
   override def outputPartitioning: Partitioning = left.outputPartitioning
@@ -179,83 +182,74 @@ case class BroadcastAsOfJoinExec(
     copy(left = newLeft, right = newRight)
 
   protected override def doExecute(): RDD[InternalRow] = {
-    val rKeyB = BindReferences.bindReference(rightKey, right.output)
-    val rTimeB = BindReferences.bindReference(rightTime, right.output)
-    val rTieB = rightTieBreak.map(BindReferences.bindReference(_, right.output))
+    val rKeyB = bindRight(rightKey)
+    val rTimeB = bindRight(rightTime)
     val lKeyB = BindReferences.bindReference(leftKey, left.output)
     val lTimeB = BindReferences.bindReference(leftTime, left.output)
+    val keyOrd = TypeUtils.getInterpretedOrdering(leftKey.dataType)
     val timeOrd = TypeUtils.getInterpretedOrdering(leftTime.dataType)
-    val tieOrds = rightTieBreak.map(e => TypeUtils.getInterpretedOrdering(e.dataType))
     val outAttrs = output
-    val broadcastRows = right.executeBroadcast[Array[InternalRow]]()
-    val cacheKey = (broadcastRows.id, id)
+    val broadcastIndex = right.executeBroadcast[Array[InternalRow]]()
 
     left.execute().mapPartitions({ lIter =>
-      // built once per EXECUTOR per (broadcast, plan) — every subsequent
-      // task on this executor reuses it (computeIfAbsent). Entries are
-      // never evicted: they outlive the broadcast block, which the
-      // ContextCleaner removes, and each execution adds one (a new
-      // broadcast id). In local mode the executor is the driver, so every
-      // run of a broadcast as-of join grows the driver heap. Tiny per
-      // entry: the right side fits the broadcast threshold.
-      val index = BroadcastAsOfJoinExec.indexCache.computeIfAbsent(cacheKey, _ => {
-        val grouped = new java.util.HashMap[Any, java.util.ArrayList[InternalRow]]()
-        broadcastRows.value.foreach { row =>
-          val k = rKeyB.eval(row)
-          if (k != null && rTimeB.eval(row) != null) {
-            var bucket = grouped.get(k)
-            if (bucket == null) { bucket = new java.util.ArrayList[InternalRow](); grouped.put(k, bucket) }
-            bucket.add(row)
-          }
+      val index = broadcastIndex.value
+      // first index in [lo, hi) whose row is past `pastIt`
+      def bound(lo0: Int, hi0: Int)(pastIt: InternalRow => Boolean): Int = {
+        var lo = lo0; var hi = hi0
+        while (lo < hi) { val mid = (lo + hi) >>> 1; if (pastIt(index(mid))) hi = mid else lo = mid + 1 }
+        lo
+      }
+      // a key's rows are one range of `index`: searched once per task
+      val ranges = new java.util.HashMap[Any, (Int, Int)]()
+      def rangeOf(k: Any): (Int, Int) = {
+        var r = ranges.get(k)
+        if (r == null) {
+          val start = bound(0, index.length)(row => keyOrd.compare(rKeyB.eval(row), k) >= 0)
+          r = (start, bound(start, index.length)(row => keyOrd.compare(rKeyB.eval(row), k) > 0))
+          ranges.put(InternalRow.copyValue(k), r)
         }
-        val cmp = new java.util.Comparator[InternalRow] {
-          override def compare(a: InternalRow, b: InternalRow): Int = {
-            var c = timeOrd.compare(rTimeB.eval(a), rTimeB.eval(b))
-            var i = 0
-            while (c == 0 && i < rTieB.length) {
-              c = tieOrds(i).compare(rTieB(i).eval(a), rTieB(i).eval(b)); i += 1
-            }
-            c
-          }
-        }
-        val built = new java.util.HashMap[Any, Array[InternalRow]]()
-        grouped.forEach { (k, bucket) =>
-          bucket.sort(cmp)
-          built.put(k, bucket.toArray(new Array[InternalRow](bucket.size())))
-        }
-        built
-      })
+        r
+      }
       val joined = new JoinedRow
       val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
       lIter.flatMap { l =>
         val lk = lKeyB.eval(l)
         val lt = lTimeB.eval(l)
-        val bucket = if (lk == null || lt == null) null else index.get(lk)
-        if (bucket == null) Iterator.empty
+        if (lk == null || lt == null) Iterator.empty
         else {
-          // binary search: last row with time <= lt
-          var lo = 0; var hi = bucket.length - 1; var ans = -1
-          while (lo <= hi) {
-            val mid = (lo + hi) >>> 1
-            if (timeOrd.compare(rTimeB.eval(bucket(mid)), lt) <= 0) { ans = mid; lo = mid + 1 }
-            else hi = mid - 1
-          }
-          if (ans < 0) Iterator.empty
-          else Iterator.single(resultProj(joined(l, bucket(ans))))
+          // the last row of the key's range with time <= lt
+          val (start, end) = rangeOf(lk)
+          val at = bound(start, end)(row => timeOrd.compare(rTimeB.eval(row), lt) > 0) - 1
+          if (at < start) Iterator.empty
+          else Iterator.single(resultProj(joined(l, index(at))))
         }
       }
     }, preservesPartitioning = true)
   }
 }
 
-object BroadcastAsOfJoinExec {
-  /** Executor-side cache of built key→sorted-rows indexes, keyed by
-    * (broadcast id, plan id) — one build per executor instead of per task.
-    * Never evicted (see the build site).
-    */
-  private[plans] val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[(Long, Int),
-      java.util.HashMap[Any, Array[InternalRow]]]()
+/** The right side of a [[BroadcastAsOfJoinExec]] as its broadcast value:
+  * its rows without a NULL key or time, sorted by (key, time,
+  * tie-breaks), so each key's rows are one time-ordered range. The
+  * broadcast exchange builds it once on the driver, as Spark's
+  * `HashedRelationBroadcastMode` builds its hash table, and the index
+  * lives exactly as long as the broadcast. It stays an array of the
+  * child's UnsafeRows, the one value besides a HashedRelation that the
+  * exchange knows how to size. Expressions are bound to the right side's
+  * output.
+  */
+case class AsOfIndexBroadcastMode(key: Expression, time: Expression, tieBreak: Seq[Expression])
+    extends BroadcastMode {
+
+  override def transform(rows: Array[InternalRow]): Array[InternalRow] =
+    rows.filter(r => key.eval(r) != null && time.eval(r) != null)
+      .sorted(GenerateOrdering.generate((key +: time +: tieBreak).map(SortOrder(_, Ascending))))
+
+  override def transform(rows: Iterator[InternalRow], sizeHint: Option[Long]): Array[InternalRow] =
+    transform(rows.toArray)
+
+  override def canonicalized: BroadcastMode =
+    AsOfIndexBroadcastMode(key.canonicalized, time.canonicalized, tieBreak.map(_.canonicalized))
 }
 
 /** Planner strategy for [[AsOfJoinPlan]] — the documented public seam

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Native as-of join — both physical paths (size-based selection like
   * Spark's own join planning):
   *  - BroadcastAsOfJoinExec: right fits the broadcast threshold → zero
-  *    left-side shuffle, per-task key→sorted-time index + binary search.
+  *    left-side shuffle, the right side broadcast as a (key, time)-sorted
+  *    index, one binary search per left row.
   *  - AsOfMergeJoinExec: co-partitioned single-pass merge.
   * Result parity with the relational rewrite (cond-join + window top-1),
   * plan shape, and edge semantics (null keys/times drop, unmatched left

@@ -72,7 +72,13 @@ class PlanGuardSpec extends AnyFunSuite {
     "evt_dow_seasonality",
     // text_heaps_law: 1-row corpus-max aggregate broadcast back onto the
     // vocab relation (replaced the unpartitioned max window — round 9).
-    "text_heaps_law")
+    "text_heaps_law",
+    // The inference family: every embedding crossed with the broadcast
+    // 1-row model (Inference.model, labels × dim doubles) and scored in
+    // its row — directly, or through the cached preds stage.
+    "infer_score", "infer_argmax", "infer_ensemble_vote", "eval_accuracy",
+    "eval_confusion", "eval_per_class", "eval_topk_err", "eval_kappa_mcc",
+    "sim_ivf", "dedup_semantic_cluster")
 
   /** Pinned per-query shuffle budgets (round 8): the number of shuffle
     * exchanges in each plan, as generated by `graft.Profile --budget`. A
