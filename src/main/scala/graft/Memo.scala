@@ -3,8 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, classic}
-import org.apache.spark.sql.graftshim.DatasetShim
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** The engine's one driver-side memo, keyed by (scope, key). The scope
@@ -54,9 +53,8 @@ object Memo {
     * is rebuilt: one CacheManager lookup per hit. The handle comes back
     * re-rooted into `s`, unless `s` owns it. */
   def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val h = get[DataFrame](s.sparkContext, key, _.storageLevel != StorageLevel.NONE)(build)
-    if (h.sparkSession eq s) h
-    else DatasetShim.ofRows(s.asInstanceOf[classic.SparkSession], h.queryExecution.logical)
+    GraftSession.reroot(s,
+      get[DataFrame](s.sparkContext, key, _.storageLevel != StorageLevel.NONE)(build))
   }
 
   /** Unpersist and forget every cached relation of `s`'s context,

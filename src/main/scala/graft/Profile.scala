@@ -43,10 +43,9 @@ object Profile {
       // visible shuffles in the final plan + shuffles hidden behind any
       // ScalableCumulate.materialize checkpoint built during construction
       // (round-9 advice: the checkpoint must not create a budget blind
-      // spot) — PlanGuardSpec reproduces this exact recipe.
+      // spot) — PlanGuardSpec counts with the same budgetCount.
       ops.ScalableCumulate.resetHiddenShuffles()
-      val plan = sp.fn(spark, sfDir).queryExecution.executedPlan.toString
-      println(s"${sp.name}\t${ops.ScalableCumulate.shuffleCount(plan) + ops.ScalableCumulate.hiddenShuffles}")
+      println(s"${sp.name}\t${ops.ScalableCumulate.budgetCount(sp.fn(spark, sfDir))}")
     }
     ops.ScalableCumulate.endAudit()
     spark.stop()

@@ -32,11 +32,12 @@ object Tables {
     * mutable source should go through a catalog table. A stopped
     * context's entries are dropped on the next memo miss (round-13
     * ADVICE: stopped sessions and their file indexes were retained).
+    * `events` comes back with `ts` normalised; see [[events]].
     */
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
     Memo.session(spark, s"$sfDir|$name|reader") {
-      if (name == "events") eventsFresh(spark, sfDir)
-      else parquet(spark, sfDir, name)
+      val df = parquet(spark, sfDir, name)
+      if (name == "events") microsLtz(df) else df
     }
 
   /** Live reader entries over all sessions (tests, benchmark gauges). */
@@ -45,38 +46,31 @@ object Tables {
   /** Reads with the table's inferred schema, a context-scoped entry: the
     * inference is the job `spark.read.parquet` runs, so a fresh session
     * runs none. The plan is the same either way, so cached relations
-    * built over one session's read match another's. (`events` is not
-    * shared: its schema depends on a session conf.) */
+    * built over one session's read match another's. */
   private def parquet(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     val schema = Memo.context(spark, s"$sfDir|$name|schema")(spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 
-  /** `events.ts` precision has varied across testdata generations:
-    * nanosecond-precision parquet (which Spark's vectorized reader refuses —
-    * PARQUET_TYPE_ILLEGAL) and plain microsecond TimestampType. Handle both:
-    * with the legacy conf set, a nanos column surfaces as LongType and is
-    * rebuilt into a µs TimestampType (the generated data has zero
-    * sub-microsecond digits, so no precision is lost); a native µs column
-    * already reads as TimestampType and passes through untouched. DuckDB
-    * surfaces the column as a µs TIMESTAMP either way, so both engines see
-    * bit-identical values.
+  /** The `events` reader: `ts` as a µs TIMESTAMP (LTZ) whichever way the
+    * parquet stores it. The fixtures hold tz-less µs timestamps, which
+    * Spark reads as TIMESTAMP_NTZ; older testdata generations held
+    * nanoseconds, which the session recipe's reading policy
+    * ([[GraftSession.builder]]) surfaces as LongType. Both are rebuilt
+    * into µs TIMESTAMP: the generated data has zero sub-microsecond
+    * digits, and the session clock is pinned to UTC, so the instant is
+    * unchanged and `unix_micros`/`window()` consumers see the type they
+    * expect. DuckDB surfaces the column as a µs TIMESTAMP either way, so
+    * both engines see bit-identical values.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame =
     t(spark, sfDir, "events")
 
-  private def eventsFresh(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/events.parquet")
-    df.schema("ts").dataType match {
-      case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      // tz-less µs parquet reads as TIMESTAMP_NTZ; cast to TIMESTAMP (LTZ).
-      // The session timezone is pinned to UTC, so the instant is unchanged
-      // and downstream unix_micros/window() calls see the type they expect.
-      case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
-      case _                => df
-    }
+  private def microsLtz(df: DataFrame): DataFrame = df.schema("ts").dataType match {
+    case LongType         => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+    case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
+    case _                => df
   }
 
   /** Register all tables as temp views (for spark.sql-shaped queries). */

@@ -37,7 +37,7 @@ object Analytics6 {
     // relation (a log-scale bucketHint replaces the bounds job) and
     // windows only the crossing buckets — the part grain never passes
     // through a full window at any scale. The boundary row is ONE row,
-    // so it is collect()ed under noAqe and the three class rows are
+    // so it is collect()ed in the helper session and the three class rows are
     // composed on the driver in exact BigDecimal / Long arithmetic (the
     // agg_mad driver-composed-relation pattern — the caller then
     // executes a LocalRelation, not a join+window cascade, cutting the
@@ -66,13 +66,13 @@ object Analytics6 {
           .agg(sum("u").cast(DecimalType(38, 0)).as("rev"))
           .persist()
         val p = try {
-          ScalableCumulate.noAqe(s)(ScalableCumulate.audited(
+          ScalableCumulate.audited(ScalableCumulate.inHelper(
             ScalableCumulate.quantilePicks(rev, col("rev"),
               Seq(desc("rev"), asc("l_partkey")), col("rev"),
               Seq((8L, 10L), (95L, 100L)), ascending = false, strict = true,
               metrics = Seq("cnt" -> lit(1L)), totalName = "w",
-              bucketHint = Some(-ScalableCumulate.log2Bucket(col("rev")))))
-            .collect())(0)
+              bucketHint = Some(-ScalableCumulate.log2Bucket(col("rev"))))))
+            .collect()(0)
         } finally { rev.unpersist(); () }
         def dec(n: String) = BigDecimal(p.getAs[java.math.BigDecimal](n))
         val (pick0, cum0, cnt0) = (dec("pick_0"), dec("cum_0"), p.getAs[Long]("cnt_0"))
@@ -357,7 +357,7 @@ object Analytics6 {
     // value bands, monotone, no bounds job and no prior knowledge of
     // the range; hints only shape bucket sizes, never results), so the
     // first pick's partials pass doubles as the cache fill; the picks
-    // run under noAqe and are collect()ed rather than head()ed
+    // run in the helper session and are collect()ed rather than head()ed
     // (CollectLimit's scale-up retries would re-launch up to three jobs
     // hunting the one constant-key output partition). The first pick is
     // one scalar — the bounded driver-collect class — so the deviation
@@ -376,11 +376,11 @@ object Analytics6 {
           // (monotone-preserving) gives it bucket 0 of its own instead of
           // log2Bucket's shared non-positive bucket.
           def pick(df: org.apache.spark.sql.DataFrame, c: String) =
-            ScalableCumulate.noAqe(s)(ScalableCumulate.audited(
+            ScalableCumulate.audited(ScalableCumulate.inHelper(
               ScalableCumulate.quantilePicks(df, col(c), Seq(col(c)),
                 lit(1L), Seq((1L, 2L)), bucketHint = Some(
-                  ScalableCumulate.log2Bucket(col(c).cast("double") + 1))))
-              .collect())(0).getLong(0)
+                  ScalableCumulate.log2Bucket(col(c).cast("double") + 1)))))
+              .collect()(0).getLong(0)
           val m = pick(o, "x")
           val mad = pick(o.select(abs(col("x") - lit(m)).as("dev")), "dev")
           s.range(1).select((lit(m) / lit(100.0)).as("median_price"),

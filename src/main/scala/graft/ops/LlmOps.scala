@@ -599,37 +599,32 @@ object LlmOps {
     // one exchange fewer per round, paid once here with |V| extra edge
     // rows. Isolated vertices ride their self-loop through the join, so
     // the all-vertices left join is not needed either.
-    val edges = setPairs.select(col("sa").as("sid"), col("sb").as("nb"))
-      .unionByName(setPairs.select(col("sb").as("sid"), col("sa").as("nb")))
-      .unionByName(setIds.select(col("set_id").as("sid"),
+    //
+    // Static-plan tier for the TINY contracted graph (round 15): when p
+    // collapsed to 1 (< 250k set pairs — KBs of label/edge data), the
+    // loop runs in the helper session (ScalableCumulate.inHelper: AQE
+    // off, shuffle width 1 = p) with explicit broadcast hints on the
+    // label side, and its labels move back to the caller's session at
+    // the end. The r13 "AQE off is catastrophic" finding holds only for
+    // full-width (32) static SMJ plans with no hints; with width 1 +
+    // hinted BroadcastHashJoin the static plan is 3 tiny jobs/round with
+    // zero AQE replanning latency (JobProf at sf0.1: see
+    // OPTIMIZATION_r15.md). At scale p grows past 1, `tiny` is false and
+    // the loop keeps the caller's session and the measured AQE path
+    // (runtime broadcast conversion, skew handling) — labels are O(|V|)
+    // there and must never carry a broadcast hint.
+    val tiny = p == 1
+    def inLoop(df: DataFrame): DataFrame = if (tiny) ScalableCumulate.inHelper(df) else df
+    def maybeB(df: DataFrame): DataFrame = if (tiny) broadcast(df) else df
+    val pairs = inLoop(setPairs)
+    val ids = inLoop(setIds)
+    val edges = pairs.select(col("sa").as("sid"), col("sb").as("nb"))
+      .unionByName(pairs.select(col("sb").as("sid"), col("sa").as("nb")))
+      .unionByName(ids.select(col("set_id").as("sid"),
         col("set_id").as("nb")))
       .repartition(p).localCheckpoint()
-    var labels = setIds.select(col("set_id").as("sid"),
+    var labels = ids.select(col("set_id").as("sid"),
       col("set_id").as("lbl")).repartition(p).localCheckpoint()
-    // Static-plan tier for the TINY contracted graph (round 15): when p
-    // collapsed to 1 (< 250k set pairs — KBs of label/edge data), every
-    // per-round action runs with AQE off, shuffle width p, and explicit
-    // broadcast hints on the label side. The r13 "AQE off is
-    // catastrophic" finding holds only for full-width (32) static SMJ
-    // plans with no hints; with width 1 + hinted BroadcastHashJoin the
-    // static plan is 3 tiny jobs/round with zero AQE replanning
-    // latency (JobProf at sf0.1: see OPTIMIZATION_r15.md). At scale p
-    // grows past 1, `tiny` is false and the loop keeps the measured
-    // AQE path (runtime broadcast conversion, skew handling) — labels
-    // are O(|V|) there and must never carry a broadcast hint.
-    val tiny = p == 1
-    val sess = setPairs.sparkSession
-    def maybeB(df: DataFrame): DataFrame = if (tiny) broadcast(df) else df
-    def scoped[T](f: => T): T =
-      if (!tiny) f
-      else {
-        val kA = "spark.sql.adaptive.enabled"
-        val kP = "spark.sql.shuffle.partitions"
-        val pA = sess.conf.get(kA, "true")
-        val pP = sess.conf.get(kP)
-        sess.conf.set(kA, "false"); sess.conf.set(kP, p.toString)
-        try f finally { sess.conf.set(kA, pA); sess.conf.set(kP, pP) }
-      }
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < 50) {
@@ -672,7 +667,7 @@ object LlmOps {
         .join(maybeB(lab.select(col("sid").as("nb"), col("lbl").as("nlbl"))),
           "nb")
         .groupBy("sid").agg(min("nlbl").as("lbl"))
-      val (next, nChanged) = scoped {
+      val (next, nChanged) = {
         val stepped = ckptStatsTruncated(hop(labels)
           .join(maybeB(labels.select(col("sid"), col("lbl").as("prev"))),
             "sid"))
@@ -705,7 +700,7 @@ object LlmOps {
         "changing — component labels may be NON-CONVERGED")
     else
       System.err.println(s"[graft] labelPropLoop converged after $iter rounds")
-    (labels, iter)
+    (graft.GraftSession.reroot(setPairs.sparkSession, labels), iter)
   }
 
   val all: Seq[Spec] = Seq(

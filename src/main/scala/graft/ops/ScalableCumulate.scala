@@ -3,6 +3,10 @@ package graft.ops
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -90,12 +94,29 @@ object ScalableCumulate {
     override def initialValue(): Int = 0
   }
 
-  /** Shuffle exchanges (hash / range / single-partition, not
-    * BroadcastExchange) in an executed-plan string; a pinned budget
-    * counts these plus [[hiddenShuffles]]. */
-  def shuffleCount(plan: String): Int =
-    plan.linesIterator.count(l =>
-      l.contains("Exchange") && !l.contains("BroadcastExchange"))
+  /** Shuffle exchanges (hash / range / single-partition, not broadcast)
+    * in a physical plan, each counted once: the walk enters subqueries
+    * and cached relations' plans, and an adaptive plan counts its initial
+    * plan whether or not it has run. (Counting lines of the printed plan
+    * counted a cached relation that an earlier query had filled twice:
+    * its adaptive plan prints as Final Plan and Initial Plan.) */
+  def shuffleCount(plan: SparkPlan): Int = {
+    def walk(p: QueryPlan[_]): Int = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.initialPlan)
+      case r: ReusedExchangeExec => if (r.child.isInstanceOf[ShuffleExchangeLike]) 1 else 0
+      case _ =>
+        (if (p.isInstanceOf[ShuffleExchangeLike]) 1 else 0) +
+          (p.children ++ p.innerChildren).map(c => walk(c.asInstanceOf[QueryPlan[_]])).sum
+    }
+    walk(plan)
+  }
+
+  /** A query's pinned shuffle budget count: the exchanges of its
+    * executed plan plus [[hiddenShuffles]], read in the audit window it
+    * was built in. `graft.Profile --budget` writes it and PlanGuardSpec
+    * enforces it. */
+  def budgetCount(df: DataFrame): Int =
+    shuffleCount(df.queryExecution.executedPlan) + hiddenShuffles
 
   /** Observability seam for ScaleSpec (round-11 verdict #6): row count of
     * the most recent quantilePicks partials collect on this JVM. The
@@ -168,58 +189,40 @@ object ScalableCumulate {
     * a driver-collected pick), so the pinned budget still charges it.
     */
   def audited(df: DataFrame): DataFrame = {
-    record(shuffleCount(df.queryExecution.executedPlan.toString))
+    record(shuffleCount(df.queryExecution.executedPlan))
     df
   }
 
-  /** Run `f` with adaptive execution OFF, restoring the previous setting.
+  /** `df` re-rooted into the helper session, where the eager helper
+    * collects run: a [[graft.GraftSession.child]] of `df`'s session with
+    * adaptive execution off and shuffle width 1. Never used for a
+    * returned query plan, so callers keep AQE and their own width on the
+    * plan that does real work.
     *
-    * The eager helper jobs here are fixed O(NB·|groups|) driver-collect
-    * shapes: AQE cannot improve them (nothing to re-plan at that size)
-    * but it EXECUTES each of their stages as a separate Spark job, and at
-    * fixture scale the per-job driver overhead — scheduling, listener
-    * round-trips, the adaptive re-optimization loop — dominates the work
-    * itself (round-11 measurement: agg_mad ran 18-20 jobs for five
-    * logical actions, with more wall time between jobs than in them).
-    * Session-conf toggling is safe here because `sbt test` runs suites
-    * sequentially in one forked JVM (the audit canary above documents the
-    * same invariant) and Verify/Bench execute queries one at a time; the
-    * RETURNED pick/cumulation plan is not executed inside the window, so
-    * callers still get AQE on the plan that does real work.
-    */
-  private[ops] def noAqe[T](spark: org.apache.spark.sql.SparkSession)(
-      f: => T): T = {
-    val k = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(k, "true")
-    spark.conf.set(k, "false")
-    try f finally spark.conf.set(k, prev)
-  }
-
-  /** Run `f` with shuffle width 1, restoring the previous setting — for
-    * the eager helper collects ONLY (round 16, guide §2.2 "fewer, larger
-    * reduce partitions" taken to its bounded limit). Their reduce side
-    * holds O(NB·|groups|) rows (≤ maxPartials, enforced) bound for a
-    * driver collect, so spreading it over the session's full shuffle
-    * width just pays ~cores task dispatches to partition rows the driver
-    * is about to deserialize anyway; width 1 is the scale-correct shape
-    * for a bounded driver-bound relation AT ANY cluster size — the map
-    * side (the real scan work) keeps its input-split parallelism. Never
-    * applied to a returned query plan. Same session-conf-toggle
-    * concurrency caveat as [[noAqe]].
+    * The helper jobs are fixed O(NB·|groups|) driver-collect shapes. AQE
+    * cannot improve them (nothing to re-plan at that size), but it
+    * executes each of their stages as a separate Spark job, and at
+    * fixture scale the per-job driver overhead dominates the work itself
+    * (round-11 measurement: agg_mad ran 18-20 jobs for five logical
+    * actions, with more wall time between jobs than in them). Their
+    * reduce side holds O(NB·|groups|) rows (≤ maxPartials, enforced)
+    * bound for the driver, so spreading it over the session's full
+    * shuffle width only pays ~cores task dispatches (round 16, guide §2.2
+    * "fewer, larger reduce partitions" taken to its bounded limit); the
+    * map side keeps its input-split parallelism.
     *
     * Caveat — merge fan-in: only the POST-merge output is driver-bounded.
     * The one reduce task still merges every map task's partials,
     * O(numMapTasks × NB × |groups|) rows, and that count grows with the
     * number of input splits; at many splits the merge serializes onto one
     * task. Perf only, results unaffected; a small constant width (e.g.
-    * min(cores, 8)) would spread it if it ever shows.
+    * min(cores, 8)) in this recipe would spread it if it ever shows.
     */
-  private[ops] def narrow[T](spark: org.apache.spark.sql.SparkSession)(
-      f: => T): T = {
-    val k = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(k)
-    spark.conf.set(k, "1")
-    try f finally spark.conf.set(k, prev)
+  private[ops] def inHelper(df: DataFrame): DataFrame = {
+    val helper = graft.GraftSession.child(df.sparkSession, "helper",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "1")
+    graft.GraftSession.reroot(helper, df)
   }
 
   /** Materialize `df` once via eager localCheckpoint, recording its
@@ -245,7 +248,7 @@ object ScalableCumulate {
             "unpartitioned Window — checkpointing would hide a " +
             "single-task global sort from the plan guard; route that " +
             "cumulation through ScalableCumulate instead")
-        record(shuffleCount(qe.executedPlan.toString))
+        record(shuffleCount(qe.executedPlan))
         df.localCheckpoint()
     }
 
@@ -316,10 +319,6 @@ object ScalableCumulate {
     * the same bucket, so ordering is never violated). `ascending` must match
     * the sort direction of `primary` inside `orderCols`. Inputs are assumed
     * non-null in `primary` (every call site cumulates over non-null keys).
-    *
-    * Not safe to run concurrently with other queries on the SAME
-    * SparkSession — see the CONCURRENCY note on [[quantilePicks]] (the
-    * eager helper jobs toggle the shared session's AQE conf).
     */
   def cumSum(
       df: DataFrame,
@@ -470,17 +469,6 @@ object ScalableCumulate {
     * same near-all-ties case the percentile bounds already accept. The
     * partials pass carries the NaN/null guard exactly as for
     * boundsHint. Mutually exclusive with boundsHint.
-    *
-    * CONCURRENCY (round-11 advice #2): the eager helper jobs run under
-    * [[noAqe]], which toggles `spark.sql.adaptive.enabled` on the SHARED
-    * session conf for their duration. A concurrent query executing on
-    * the same SparkSession inside that window would plan without AQE (or
-    * race on the restore). Call sites must not run quantilePicks /
-    * cumSum / rowNumber concurrently with other work on one session —
-    * the library's own surfaces (Verify, Bench, sbt suites) are
-    * sequential by construction; a multi-tenant caller should use a
-    * separate session per thread (`spark.newSession()` shares the
-    * SparkContext but isolates the conf).
     */
   def quantilePicks(
       df: DataFrame,
@@ -541,9 +529,9 @@ object ScalableCumulate {
       val bounds: Seq[Double] = boundsHint.getOrElse {
         val qs = (1 until nbv).map(i => i.toDouble / nbv)
         val qsSafe = if (qs.isEmpty) Seq(0.5) else qs
-        val boundsRow = noAqe(spark)(narrow(spark)(audited(in.agg(
+        val boundsRow = audited(inHelper(in.agg(
           percentile_approx(pd, array(qsSafe.map(lit): _*), lit(1000)).as("b"),
-          count(when(pd.isNull || isnan(pd), 1)).as("bad"))).head()))
+          count(when(pd.isNull || isnan(pd), 1)).as("bad")))).head()
         require(boundsRow.getLong(1) == 0L,
           s"quantilePicks: ${boundsRow.getLong(1)} NaN/null primary keys")
         if (qs.isEmpty || boundsRow.isNullAt(0)) Seq.empty
@@ -579,7 +567,7 @@ object ScalableCumulate {
     val ng = groupCols.size
     zero(partSchema("__s").dataType) // reject non-exact partial types
     mNames.foreach(n => zero(partSchema(s"__sm_$n").dataType))
-    val partRows = noAqe(spark)(narrow(spark)(audited(part).collect()))
+    val partRows = audited(inHelper(part)).collect()
     lastPartialsRows = partRows.length
     // Hard cap on the driver collect (round 15; r14 verdict #2): the
     // 100 TB argument is "O(NB·|groups|) rows, independent of input
@@ -775,9 +763,9 @@ object ScalableCumulate {
     // accuracy 1000: bounds only shape bucket SIZES (results depend solely
     // on value order — ScalableCumulateSpec pins bit-identity across
     // bucket layouts), so the cheaper sketch is free
-    val boundsRow = noAqe(spark)(narrow(spark)(in.agg(
+    val boundsRow = inHelper(in.agg(
       percentile_approx(pd, array(qsSafe.map(lit): _*), lit(1000)).as("b"),
-      count(when(pd.isNull || isnan(pd), 1)).as("bad")).head()))
+      count(when(pd.isNull || isnan(pd), 1)).as("bad"))).head()
     require(boundsRow.getLong(1) == 0L,
       s"ScalableCumulate: ${boundsRow.getLong(1)} NaN/null primary order " +
         "keys — bucket assignment cannot rank them; filter or impute " +
@@ -801,7 +789,7 @@ object ScalableCumulate {
     cumTypes.foreach(zero) // reject non-exact partial types up front
 
     val byGroup: Map[Seq[Any], Array[Row]] =
-      noAqe(spark)(narrow(spark)(part.collect()))
+      inHelper(part).collect()
         .groupBy(r => (0 until ng).map(r.get).toSeq)
     val offRows = mutable.ArrayBuffer.empty[Row]
     val grandTotals = mutable.Map.empty[Seq[Any], Map[String, Any]]

@@ -29,33 +29,6 @@ object Streaming {
   private def maxTs(s: SparkSession, d: String): java.sql.Timestamp =
     Memo.context(s, s"$d|maxTs")(ev(s, d).agg(max("ts")).head().getTimestamp(0))
 
-  /** Run `body` with the RocksDB state-store provider (transformWithState
-    * needs multiple column families — state + timers — which only RocksDB
-    * provides), restoring the previous provider afterwards.
-    */
-  private def withRocksDB[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val track = "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
-    val prev = s.conf.getOption(key)
-    val prevTrack = s.conf.getOption(track)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // skip the get-before-put RocksDB does solely to maintain the
-    // numTotalStateRows metric — the documented production knob for
-    // write-heavy state (we assert results, not state-row metrics)
-    s.conf.set(track, "false")
-    try body finally {
-      prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None => s.conf.unset(key)
-      }
-      prevTrack match {
-        case Some(p) => s.conf.set(track, p)
-        case None => s.conf.unset(track)
-      }
-    }
-  }
-
   /** Gaps-and-islands session CTEs (5-min gap, µs): shared by the
     * stream_session and stream_session_timers oracles — callers append
     * their final SELECT over `g` (grouping by user_id, grp).
@@ -367,20 +340,18 @@ object Streaming {
         val e = ev(s, d)
         val b1 = e.where(col("event_id") % 2 === 0)
         val b2 = e.where(col("event_id") % 2 === 1)
-        withRocksDB(s) {
-          val out = StreamRunner.run(s, Seq(b1, b2), e.schema, "update",
-            cacheKey = s"stateful|$d", statePartitions = 1,
-            drainKey = s"stateful_tws|$d") { src =>
-            import s.implicits._
-            src.as[Event]
-              .groupByKey(_.user_id)
-              .transformWithState(new RunningCountProcessor, TimeMode.None(),
-                OutputMode.Update(), Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-              .toDF("user_id", "n_running")
-          }
-          out.groupBy("user_id").agg(max("n_running").as("n_events"))
-            .orderBy("user_id")
+        val out = StreamRunner.run(s, Seq(b1, b2), e.schema, "update",
+          cacheKey = s"stateful|$d", state = StreamRunner.RocksDB,
+          drainKey = s"stateful_tws|$d") { src =>
+          import s.implicits._
+          src.as[Event]
+            .groupByKey(_.user_id)
+            .transformWithState(new RunningCountProcessor, TimeMode.None(),
+              OutputMode.Update(), Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+            .toDF("user_id", "n_running")
         }
+        out.groupBy("user_id").agg(max("n_running").as("n_events"))
+          .orderBy("user_id")
       },
       Some("""SELECT user_id, count(*) AS n_events FROM events
               GROUP BY user_id ORDER BY user_id""")),
@@ -395,21 +366,19 @@ object Streaming {
     // start, count) grain. RocksDB provider: transformWithState needs
     // multiple column families (state + timers).
     Spec("stream_session_timers",
-      (s, d) => withRocksDB(s) {
-        StreamRunner.run(s,
-          Seq(ev(s, d), sentinel(s, d), ev(s, d).where(lit(false))),
-          schemaOf(s, d), "update", cacheKey = s"session|$d",
-          statePartitions = 1, drainKey = s"session_tws|$d") { src =>
-          import s.implicits._
-          src.withWatermark("ts", "1 second")
-            .as[Event]
-            .groupByKey(_.user_id)
-            .transformWithState(new SessionTimerProcessor(300000000L),
-              TimeMode.EventTime(), OutputMode.Update(),
-              Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong))
-            .toDF("user_id", "ss_us", "n")
-        }.where(col("user_id") >= 0).orderBy("user_id", "ss_us")
-      },
+      (s, d) => StreamRunner.run(s,
+        Seq(ev(s, d), sentinel(s, d), ev(s, d).where(lit(false))),
+        schemaOf(s, d), "update", cacheKey = s"session|$d",
+        state = StreamRunner.RocksDB, drainKey = s"session_tws|$d") { src =>
+        import s.implicits._
+        src.withWatermark("ts", "1 second")
+          .as[Event]
+          .groupByKey(_.user_id)
+          .transformWithState(new SessionTimerProcessor(300000000L),
+            TimeMode.EventTime(), OutputMode.Update(),
+            Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong))
+          .toDF("user_id", "ss_us", "n")
+      }.where(col("user_id") >= 0).orderBy("user_id", "ss_us"),
       Some(s"""$sessionIslandsSql
                SELECT user_id, min(tus) AS ss_us, count(*) AS n
                FROM g GROUP BY user_id, grp ORDER BY user_id, ss_us""")),
@@ -518,21 +487,19 @@ object Streaming {
         val e = ev(s, d)
         val b1 = e.where(col("event_id") % 2 === 0)
         val b2 = e.where(col("event_id") % 2 === 1)
-        withRocksDB(s) {
-          val out = StreamRunner.run(s, Seq(b1, b2), e.schema, "update",
-            cacheKey = s"stateful|$d", statePartitions = 1,
-            drainKey = s"liststate|$d") { src =>
-            import s.implicits._
-            src.as[Event].groupByKey(_.user_id)
-              .transformWithState(new LastNProcessor(3), TimeMode.None(),
-                OutputMode.Update(),
-                Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.STRING))
-              .toDF("user_id", "n_seen", "last3")
-          }
-          out.groupBy("user_id")
-            .agg(expr("max_by(last3, n_seen)").as("last3_ids"))
-            .orderBy("user_id")
+        val out = StreamRunner.run(s, Seq(b1, b2), e.schema, "update",
+          cacheKey = s"stateful|$d", state = StreamRunner.RocksDB,
+          drainKey = s"liststate|$d") { src =>
+          import s.implicits._
+          src.as[Event].groupByKey(_.user_id)
+            .transformWithState(new LastNProcessor(3), TimeMode.None(),
+              OutputMode.Update(),
+              Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.STRING))
+            .toDF("user_id", "n_seen", "last3")
         }
+        out.groupBy("user_id")
+          .agg(expr("max_by(last3, n_seen)").as("last3_ids"))
+          .orderBy("user_id")
       },
       Some("""WITH r AS (
                 SELECT user_id, event_id, epoch_us(ts) AS tus,

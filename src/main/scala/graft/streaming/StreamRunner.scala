@@ -4,7 +4,7 @@ import java.io.File
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.Memo
+import graft.{GraftSession, Memo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -23,6 +23,10 @@ import org.apache.spark.sql.types.StructType
   * window emission — is reproducible run to run. Callers that need final
   * windows flushed append a far-future sentinel row (filtered back out of
   * the result) to push the watermark past all real data.
+  *
+  * Session: each stream runs in a child of the caller's session built
+  * from a [[StreamRunner.State]] recipe (its state-store width and
+  * provider), so no stream sets a conf on the caller's session.
   *
   * At scale the same query text runs unchanged against a real unbounded
   * source (kafka/files); only this test-feed plumbing is local-mode.
@@ -46,13 +50,41 @@ object StreamRunner {
     tmp
   }
 
+  /** The session recipe a stream runs under: the child of the caller's
+    * session its query starts in. State-store partition count is pinned
+    * per query at first batch from the shuffle width, so the width is the
+    * knob here.
+    */
+  sealed abstract class State(val name: String, val confs: (String, String)*)
+
+  /** Width 8: the local test feed is small, so 8 state partitions cut
+    * per-batch state-store overhead ~4× against a full-width default (at
+    * production scale this rises with key volume). */
+  case object Default extends State("stream", "spark.sql.shuffle.partitions" -> "8")
+
+  /** The RocksDB state-store provider, which `transformWithState` needs
+    * (multiple column families — state + timers — only RocksDB provides),
+    * at width 1: RocksDB opens one native store per state partition, and
+    * 1 covers the local feed's ~150 keys. It skips the get-before-put
+    * RocksDB does solely to maintain the numTotalStateRows metric — the
+    * documented production knob for write-heavy state (results are
+    * asserted, not state-row metrics). */
+  case object RocksDB extends State("stream_rocksdb",
+    "spark.sql.shuffle.partitions" -> "1",
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false")
+
   /** Run `build(stream)` over the given file-batches, drain, return sink.
+    * The stream runs in `state`'s child of `spark`, so the caller's conf
+    * is never touched; the sink is read there and comes back re-rooted
+    * into `spark`.
     * `cacheKey` (e.g. query-name|sfDir) memoizes the written batch files
     * for the context, so repeat invocations skip the prepare step.
     * `drainKey` additionally memoizes the COMPLETED drain itself, per
-    * session (the sink's temp view lives there): two declared queries
-    * whose (feed, build) coincide — or a repeat invocation of the same
-    * query in one session — reuse the drained sink table instead of
+    * session (the sink's temp view lives in the child): two declared
+    * queries whose (feed, build) coincide — or a repeat invocation of the
+    * same query in one session — reuse the drained sink table instead of
     * paying the fixed micro-batch + state-store cost again. The feed is
     * driver-fixed and the drain is Trigger.AvailableNow, so the sink
     * content is identical on every re-drain; memoizing is pure
@@ -60,27 +92,21 @@ object StreamRunner {
     */
   def run(spark: SparkSession, batches: Seq[DataFrame], schema: StructType,
           outputMode: String, cacheKey: String = "",
-          statePartitions: Int = 8, drainKey: String = "")
+          state: State = Default, drainKey: String = "")
          (build: DataFrame => DataFrame): DataFrame = {
+    val cs = GraftSession.child(spark, state.name, state.confs: _*)
     def drain(): String = {
       val tmp =
         if (cacheKey.isEmpty) writeBatches(batches)
         else Memo.context(spark, s"$cacheKey|batches")(writeBatches(batches))
-      val src = spark.readStream.schema(schema)
+      val src = cs.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(tmp.getPath)
       val name = s"graft_sink_${counter.incrementAndGet()}"
-      // State-store partition count is pinned per query at first batch; the
-      // local test feed is small, so 8 partitions cut per-batch state-store
-      // overhead ~4× (at production scale this knob rises with key volume).
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-      val q =
-        try build(src).writeStream
-          .format("memory").queryName(name).outputMode(outputMode)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      val q = build(src).writeStream
+        .format("memory").queryName(name).outputMode(outputMode)
+        .trigger(Trigger.AvailableNow())
+        .start()
       q.awaitTermination()
       val prog = q.recentProgress
       System.err.println(s"[stream] $name microbatches=${prog.length} " +
@@ -89,7 +115,7 @@ object StreamRunner {
     }
     val name =
       if (drainKey.isEmpty) drain()
-      else Memo.session(spark, s"$drainKey|sink")(drain())
-    spark.table(name)
+      else Memo.session(cs, s"$drainKey|sink")(drain())
+    GraftSession.reroot(spark, cs.table(name))
   }
 }

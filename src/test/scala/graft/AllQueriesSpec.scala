@@ -14,6 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (shared by every session) and session-scoped ones (readers, stream
   * sinks), and catches a query that depends on state an earlier query
   * left in the shared session (a conf, a registered function or view).
+  * The fresh session's conf must read the same after the query is built
+  * and collected as before: a step that needs other confs runs in a
+  * `GraftSession.child`, never by setting them on the caller's session.
   */
 class AllQueriesSpec extends AnyFunSuite {
   import TestSpark._
@@ -33,10 +36,17 @@ class AllQueriesSpec extends AnyFunSuite {
         spec.fn(s, sf).collect().map(_.toString).toSeq.sorted
       val shared = rows(spark)
       if (!mayBeEmpty(spec.name)) assert(shared.nonEmpty, s"${spec.name} returned 0 rows")
-      val fresh = rows(spark.newSession())
+      val session = spark.newSession()
+      val confBefore = session.conf.getAll
+      val fresh = rows(session)
       assert(fresh == shared, s"${spec.name} returns different rows in a fresh session " +
         s"(${fresh.size} rows fresh, ${shared.size} shared; first difference " +
         s"${fresh.diff(shared).headOption.orElse(shared.diff(fresh).headOption)})")
+      val confAfter = session.conf.getAll
+      val changed = (confBefore.keySet ++ confAfter.keySet)
+        .filter(k => confBefore.get(k) != confAfter.get(k))
+      assert(changed.isEmpty, s"${spec.name} changed the conf of the session it ran in: " +
+        changed.toSeq.sorted.map(k => s"$k ${confBefore.get(k)} -> ${confAfter.get(k)}").mkString(", "))
     }
   }
 }

@@ -9,8 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftSessionSpec extends AnyFunSuite {
   import TestSpark._
 
+  /** The join children, the helper collects' child (agg_weighted_median's
+    * picks) and both stream recipes (stream_tumbling's default,
+    * stream_stateful_tws's RocksDB). */
   private val childQueries =
-    Seq("join_bloom_runtime", "scan_agg_pushdown", "join_range_auto", "join_overlap_auto")
+    Seq("join_bloom_runtime", "scan_agg_pushdown", "join_range_auto", "join_overlap_auto",
+      "agg_weighted_median", "stream_tumbling", "stream_stateful_tws")
+
+  private def children: Int = Memo.keys.count(_._2.endsWith("|child"))
 
   test("child-session queries reuse one child per caller session") {
     val caller = spark.newSession()
@@ -22,12 +28,16 @@ class GraftSessionSpec extends AnyFunSuite {
     }
     val first = round()
     val readers = Tables.readerMemoSize
+    val sessions = children
     round()
     assert(round() == first)
     assert(Tables.readerMemoSize == readers,
       "building the queries again added reader entries (a new child session per construction)")
+    assert(children == sessions, "building the queries again added child sessions")
     assert(caller.conf.getAll == confBefore)
     for (k <- Seq("spark.graft.rangeBinJoin.binWidth", "spark.graft.overlapBinJoin.binWidth"))
       assert(caller.conf.getOption(k).isEmpty, s"a child conf $k reached the caller")
+    assert(!caller.conf.get("spark.sql.streaming.stateStore.providerClass").contains("RocksDB"),
+      "the RocksDB stream recipe reached the caller")
   }
 }

@@ -48,8 +48,8 @@ class NGramsSpec extends AnyFunSuite {
     df.createOrReplaceTempView("ng_docs")
     val q = spark.sql(
       "SELECT doc_id, gram FROM ng_docs LATERAL VIEW ngrams(toks, 3) t AS pos, gram")
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("Generate ngrams"), plan.linesIterator.take(8).mkString("\n"))
+    val plan = q.queryExecution.executedPlan
+    assert(plan.toString.contains("Generate ngrams"), plan.toString.linesIterator.take(8).mkString("\n"))
     assert(ops.ScalableCumulate.shuffleCount(plan) == 0, "ngram generation must not shuffle")
   }
 

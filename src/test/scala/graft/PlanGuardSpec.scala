@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.{broadcast, col, max}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-regression tripwire (round-4 verdict #5): asserts, for EVERY
@@ -128,7 +129,8 @@ class PlanGuardSpec extends AnyFunSuite {
       // cross-thread ledger canary in a later suite
       ops.ScalableCumulate.resetHiddenShuffles()
       try {
-      val qe = spec.fn(spark, sf).queryExecution
+      val df = spec.fn(spark, sf)
+      val qe = df.queryExecution
       val unpart = qe.optimizedPlan.collect {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window
             if w.partitionSpec.isEmpty => w
@@ -149,11 +151,10 @@ class PlanGuardSpec extends AnyFunSuite {
       if (!bnljAllow(spec.name))
         assert(!plan.contains("BroadcastNestedLoopJoin"),
           s"${spec.name} plans a BroadcastNestedLoopJoin:\n${plan.linesIterator.take(30).mkString("\n")}")
-      // visible + hidden-behind-checkpoint (same recipe as Profile --budget,
+      // visible + hidden-behind-checkpoint (same count as Profile --budget,
       // so a shuffle regression UPSTREAM of a materialize() still trips
       // the pinned budget — round-9 advice #3)
-      val shuffles =
-        ops.ScalableCumulate.shuffleCount(plan) + ops.ScalableCumulate.hiddenShuffles
+      val shuffles = ops.ScalableCumulate.budgetCount(df)
       if (!shuffleBudgetExempt(spec.name)) shuffleBudget.get(spec.name) match {
         case Some(budget) =>
           assert(shuffles <= budget,
@@ -184,15 +185,29 @@ class PlanGuardSpec extends AnyFunSuite {
   }
 
   test("shuffle counter sees shuffle exchanges, not broadcasts") {
-    val plan =
-      """AdaptiveSparkPlan isFinalPlan=false
-        |+- Exchange rangepartitioning(a ASC NULLS FIRST, 8)
-        |   +- BroadcastHashJoin [k], [k], Inner, BuildRight, false
-        |      :- Exchange hashpartitioning(k, 8), ENSURE_REQUIREMENTS
-        |      +- BroadcastExchange HashedRelationBroadcastMode(List(k))
-        |         +- Exchange SinglePartition, ENSURE_REQUIREMENTS
-        |""".stripMargin
-    assert(ops.ScalableCumulate.shuffleCount(plan) == 3)
+    // a hash exchange on the probe side, a single-partition exchange
+    // under the build side's broadcast (which is not counted itself) and
+    // a range exchange for the sort
+    val build = spark.range(5).agg(max("id").as("k"))
+    val df = spark.range(100).select((col("id") % 5).as("k"))
+      .repartition(4, col("k"))
+      .join(broadcast(build), "k")
+      .orderBy("k")
+    assert(ops.ScalableCumulate.shuffleCount(df.queryExecution.executedPlan) == 3)
+  }
+
+  test("plan guard: infer_score counts the same shuffles whether or not its model memo is filled") {
+    // infer_mapp_argmax's construction collects the model row, filling the
+    // cached model that infer_score's plan reads; the filled cache's
+    // adaptive plan prints as Final and Initial Plan, and each exchange in
+    // it must still count once
+    def count(): Int = ops.ScalableCumulate.shuffleCount(q("infer_score").queryExecution.executedPlan)
+    Memo.release(spark)
+    try {
+      val released = count()
+      q("infer_mapp_argmax")
+      assert(count() == released)
+    } finally Memo.release(spark)
   }
 
   test("plan guard: scan_dpp keeps its DynamicPruningExpression") {

@@ -62,30 +62,22 @@ class StreamingSinksSpec extends AnyFunSuite {
   }
 
   test("windowed-agg state is backend-agnostic: RocksDB == default provider") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
     val default = q("stream_tumbling").collect().toSeq
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // q("stream_tumbling") is drain-memoized (StreamRunner drainKey), so
-      // a second call would return the already-drained sink without ever
-      // touching RocksDB — run the same build as a FRESH drain instead
-      // (empty drainKey bypasses the sink cache; cacheKey still reuses the
-      // batch files).
-      val e = Tables.events(spark, sf)
-      val rocks = graft.streaming.StreamRunner.run(
-        spark, Seq(e), e.schema, "complete", cacheKey = s"single|$sf") { src =>
-        src.groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-          .agg(count(lit(1)).as("n"), Tables.msum(col("value")).as("sum_value"))
-          .select(unix_timestamp(col("window.start")).as("ws"),
-            col("event_type"), col("n"), col("sum_value"))
-      }.orderBy("ws", "event_type").collect().toSeq
-      assert(rocks == default)
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    // q("stream_tumbling") is drain-memoized (StreamRunner drainKey), so
+    // a second call would return the already-drained sink without ever
+    // touching RocksDB — run the same build as a FRESH drain under the
+    // RocksDB recipe instead (empty drainKey bypasses the sink cache;
+    // cacheKey still reuses the batch files).
+    val e = Tables.events(spark, sf)
+    val rocks = graft.streaming.StreamRunner.run(
+      spark, Seq(e), e.schema, "complete", cacheKey = s"single|$sf",
+      state = graft.streaming.StreamRunner.RocksDB) { src =>
+      src.groupBy(window(col("ts"), "5 minutes"), col("event_type"))
+        .agg(count(lit(1)).as("n"), Tables.msum(col("value")).as("sum_value"))
+        .select(unix_timestamp(col("window.start")).as("ws"),
+          col("event_type"), col("n"), col("sum_value"))
+    }.orderBy("ws", "event_type").collect().toSeq
+    assert(rocks == default)
   }
 
   test("foreachBatch sink: arbitrary per-microbatch logic with batch ids") {
