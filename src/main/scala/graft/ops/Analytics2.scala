@@ -103,17 +103,11 @@ object Analytics2 {
         // rows through quantilePicks (cum ≥ ⌈n/2⌉ ⟺ 2·cum ≥ n for
         // integer counts), per-group totals free, no window outside the
         // crossing bucket of each priority
-        // log-octave bucketHint (round 16, the agg_cvar derivation):
-        // o_totalprice > 0 always, floor(64·log₂ x) is monotone in x and
-        // a pure function of the value (so monotone within every
-        // priority group) — skips the bounds job: one fewer full pass
-        // over the fact column per execution at ANY scale
         ScalableCumulate.quantilePicks(
             t(s, d, "orders").select("o_orderpriority", "o_totalprice"),
             col("o_totalprice"), Seq(col("o_totalprice")), lit(1L),
             Seq((1L, 2L)), groupCols = Seq("o_orderpriority"),
-            totalName = "n",
-            bucketHint = Some(ScalableCumulate.log2Bucket(col("o_totalprice"))))
+            totalName = "n")
           .select(col("o_orderpriority"),
             col("pick_0").as("median_price"), col("n"))
           .orderBy("o_orderpriority")
@@ -145,7 +139,7 @@ object Analytics2 {
     // value-histogram materialization at all (prices are near-unique, so
     // that "compression" moved data-sized rows through a shuffle for
     // nothing); per-(flag, bucket) weight partials reduce map-side to
-    // NB·|flags| rows, the crossing bucket is found driver-exact, and
+    // buckets·|flags| rows, the crossing bucket is found driver-exact, and
     // the only window runs over that one bucket per flag. The grand
     // total rides back as the picks' `total` column — one lineitem scan
     // per job, zero data-sized shuffles.
@@ -164,13 +158,9 @@ object Analytics2 {
         val li = t(s, d, "lineitem")
           .select(col("l_returnflag"), col("l_extendedprice"),
             wdec.as("w"))
-        // log-octave bucketHint (round 16, the agg_cvar derivation):
-        // l_extendedprice > 0 always — skips the bounds job, one fewer
-        // full fact-column pass per execution at any scale
         ScalableCumulate.quantilePicks(li, col("l_extendedprice"),
             Seq(col("l_extendedprice")), col("w"), Seq((1L, 2L)),
-            groupCols = Seq("l_returnflag"), totalName = "wtot",
-            bucketHint = Some(ScalableCumulate.log2Bucket(col("l_extendedprice"))))
+            groupCols = Seq("l_returnflag"), totalName = "wtot")
           .select(col("l_returnflag"),
             col("pick_0").as("wmedian_price"),
             col("wtot").cast(DoubleType).as("total_weight"))

@@ -34,9 +34,8 @@ object Analytics6 {
     // total by pure arithmetic (A = everything before boundary 1; B =
     // between; C = the rest). quantilePicks finds both boundaries with
     // ONE map-side partials pass over the persisted part-revenue
-    // relation (a log-scale bucketHint replaces the bounds job) and
-    // windows only the crossing buckets — the part grain never passes
-    // through a full window at any scale. The boundary row is ONE row,
+    // relation and windows only the crossing buckets — the part grain
+    // never passes through a full window at any scale. The boundary row is ONE row,
     // so it is collect()ed in the helper session and the three class rows are
     // composed on the driver in exact BigDecimal / Long arithmetic (the
     // agg_mad driver-composed-relation pattern — the caller then
@@ -51,13 +50,11 @@ object Analytics6 {
       (s, d) => {
         import org.apache.spark.sql.types.DecimalType
         import s.implicits._
-        // persist, not materialize, and a log-scale bucketHint instead of
-        // a bounds job: the picks' PARTIALS pass doubles as the cache
-        // fill, so the whole query is two Spark actions — partials+fill,
-        // boundary-pick collect. Bucket id −floor(64·log₂(rev)) is
-        // anti-monotone in revenue (the scan is descending) and needs no
-        // prior knowledge of the range; 1/64-octave bands keep the
-        // crossing-bucket window a sliver of the part grain.
+        // persist, not materialize: the picks' PARTIALS pass doubles as
+        // the cache fill, so the whole query is two Spark actions —
+        // partials+fill, boundary-pick collect. The kernel's 1/64-octave
+        // buckets keep the crossing-bucket window a sliver of the part
+        // grain.
         val rev = t(s, d, "lineitem")
           .select(col("l_partkey"),
             round(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
@@ -70,8 +67,7 @@ object Analytics6 {
             ScalableCumulate.quantilePicks(rev, col("rev"),
               Seq(desc("rev"), asc("l_partkey")), col("rev"),
               Seq((8L, 10L), (95L, 100L)), ascending = false, strict = true,
-              metrics = Seq("cnt" -> lit(1L)), totalName = "w",
-              bucketHint = Some(-ScalableCumulate.log2Bucket(col("rev"))))))
+              metrics = Seq("cnt" -> lit(1L)), totalName = "w")))
             .collect()(0)
         } finally { rev.unpersist(); () }
         def dec(n: String) = BigDecimal(p.getAs[java.math.BigDecimal](n))
@@ -352,11 +348,8 @@ object Analytics6 {
     // ScalableCumulate.quantilePicks (bucket partials over raw rows,
     // driver-exact crossing search, window over one bucket). Round-11
     // job-count shave — four bounded Spark actions instead of seven,
-    // each exactly ONE job: the projection is persist()ed, both picks
-    // take a log-scale bucketHint (floor(64·log₂(v+1)) — 1/64-octave
-    // value bands, monotone, no bounds job and no prior knowledge of
-    // the range; hints only shape bucket sizes, never results), so the
-    // first pick's partials pass doubles as the cache fill; the picks
+    // each exactly ONE job: the projection is persist()ed, so the first
+    // pick's partials pass doubles as the cache fill; the picks
     // run in the helper session and are collect()ed rather than head()ed
     // (CollectLimit's scale-up retries would re-launch up to three jobs
     // hunting the one constant-key output partition). The first pick is
@@ -369,17 +362,14 @@ object Analytics6 {
           .select(round(col("o_totalprice") * 100, 0).cast("long").as("x"))
           .persist()
         try {
-          // log-scale bucketHints need no bounds job at all: the first
-          // pick's PARTIALS pass doubles as the cache fill, so the whole
-          // query is four bounded actions (partials+fill, pick 1,
-          // partials 2, pick 2). dev can be 0: the one-cent shift
-          // (monotone-preserving) gives it bucket 0 of its own instead of
-          // log2Bucket's shared non-positive bucket.
+          // the first pick's PARTIALS pass doubles as the cache fill, so
+          // the whole query is four bounded actions (partials+fill, pick
+          // 1, partials 2, pick 2). dev can be 0: zero has a bucket of
+          // its own under log2Bucket.
           def pick(df: org.apache.spark.sql.DataFrame, c: String) =
             ScalableCumulate.audited(ScalableCumulate.inHelper(
               ScalableCumulate.quantilePicks(df, col(c), Seq(col(c)),
-                lit(1L), Seq((1L, 2L)), bucketHint = Some(
-                  ScalableCumulate.log2Bucket(col(c).cast("double") + 1)))))
+                lit(1L), Seq((1L, 2L)))))
               .collect()(0).getLong(0)
           val m = pick(o, "x")
           val mad = pick(o.select(abs(col("x") - lit(m)).as("dev")), "dev")
@@ -432,12 +422,8 @@ object Analytics6 {
         import org.apache.spark.sql.types.DecimalType
         val o = t(s, d, "orders")
           .select(col("o_totalprice").cast(DecimalType(30, 2)).as("x"))
-        // log-octave bucketHint (the agg_abc_class derivation, ascending
-        // so no negation): o_totalprice > 0 always, floor(64·log₂ x) is
-        // monotone in x — skips the bounds job, one fewer eager action
         val thr = ScalableCumulate.quantilePicks(o, col("x"), Seq(col("x")),
-            lit(1L), Seq((19L, 20L)),
-            bucketHint = Some(ScalableCumulate.log2Bucket(col("x"))))
+            lit(1L), Seq((19L, 20L)))
           .select(col("pick_0").as("p95"))
         o.crossJoin(broadcast(thr))
           .where(col("x") >= col("p95"))
@@ -501,7 +487,7 @@ object Analytics6 {
 
     // Winsorized mean — the robust-mean companion to agg_mad/agg_cvar:
     // clamp to the exact p05/p95 order-statistic picks (both fracs
-    // share ONE bounds job and ONE partials job in
+    // share ONE partials job in
     // ScalableCumulate.quantilePicks; the final window touches only the
     // two crossing buckets), then an exact decimal mean of the clamped
     // values. Clamping (least/greatest) is closed over the
@@ -513,9 +499,7 @@ object Analytics6 {
         val o = t(s, d, "orders")
           .select(col("o_totalprice").cast(DecimalType(30, 2)).as("x"))
         val thr = ScalableCumulate.quantilePicks(o, col("x"), Seq(col("x")),
-            lit(1L), Seq((1L, 20L), (19L, 20L)),
-            // log-octave hint, same derivation as agg_cvar
-            bucketHint = Some(ScalableCumulate.log2Bucket(col("x"))))
+            lit(1L), Seq((1L, 20L), (19L, 20L)))
           .select(col("pick_0").as("p05"), col("pick_1").as("p95"))
         o.crossJoin(broadcast(thr))
           .select(col("p05"), col("p95"),
@@ -553,12 +537,12 @@ object Analytics6 {
 
     // Exact percentile ladder (p25/p50/p75/p95/p99) — the engine-exact
     // answer to "approx_percentile, but auditable": all five picks share
-    // ONE bounds job and ONE map-side partials pass in
+    // ONE map-side partials pass in
     // ScalableCumulate.quantilePicks (cross-multiplied den·cum ≥ num·n
     // conditions, the lower-value no-interpolation pick convention both
     // engines state identically), and the final window touches only the
-    // ≤5 crossing buckets. Scale shape: two scans plus a ~5/NB-filtered
-    // scan, O(NB) rows moved — no value histogram, no global sort,
+    // ≤5 crossing buckets. Scale shape: two scans, O(octave buckets)
+    // rows moved — no value histogram, no global sort,
     // regardless of how many fractions ride along.
     Spec("agg_exact_percentiles",
       (s, d) => {
@@ -568,9 +552,7 @@ object Analytics6 {
         ScalableCumulate.quantilePicks(o, col("x"), Seq(col("x")),
             lit(1L),
             Seq((1L, 4L), (1L, 2L), (3L, 4L), (19L, 20L), (99L, 100L)),
-            totalName = "n_rows",
-            // log-octave hint, same derivation as agg_cvar
-            bucketHint = Some(ScalableCumulate.log2Bucket(col("x"))))
+            totalName = "n_rows")
           .select(col("pick_0").cast("double").as("p25"),
             col("pick_1").cast("double").as("p50"),
             col("pick_2").cast("double").as("p75"),
@@ -600,8 +582,8 @@ object Analytics6 {
     // agg_exact_percentiles: p50/p90 of order value per priority, via
     // quantilePicks' group path (partials at the (group, bucket) grain,
     // one crossing bucket per group per fraction, per-group totals free).
-    // At 100 TB the moved rows stay NB·|groups| — group count multiplies
-    // the BOUNDED side only, never the scanned side.
+    // At 100 TB the moved rows stay buckets·|groups| — group count
+    // multiplies the BOUNDED side only, never the scanned side.
     Spec("agg_grouped_percentiles",
       (s, d) => {
         import org.apache.spark.sql.types.DecimalType
@@ -609,11 +591,7 @@ object Analytics6 {
           col("o_totalprice").cast(DecimalType(30, 2)).as("x"))
         ScalableCumulate.quantilePicks(o, col("x"), Seq(col("x")), lit(1L),
             Seq((1L, 2L), (9L, 10L)), groupCols = Seq("o_orderpriority"),
-            totalName = "n_orders",
-            // log-octave hint, same derivation as agg_cvar (the hint is
-            // a pure function of the value, so it is monotone within
-            // every group by construction)
-            bucketHint = Some(ScalableCumulate.log2Bucket(col("x"))))
+            totalName = "n_orders")
           .select(col("o_orderpriority"),
             col("pick_0").cast("double").as("p50"),
             col("pick_1").cast("double").as("p90"),

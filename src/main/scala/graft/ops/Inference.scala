@@ -324,9 +324,10 @@ object Inference {
     // Tie-safe by construction: every row of a tie group carries the same
     // r2, so row_number's arbitrary order within ties cannot leak out.
     // Scale: exact AUC requires a total order on scores — provided by
-    // ScalableCumulate's bucketed two-pass row number (16-way parallel,
-    // no single-partition window). Tied scores rank arbitrarily WITHIN a
-    // bucket, but ties never straddle buckets, so the per-score
+    // ScalableCumulate's bucketed row number (one window per log-octave
+    // score band on either side of zero, no single-partition window).
+    // Tied scores rank arbitrarily WITHIN a bucket, but ties never
+    // straddle buckets, so the per-score
     // min(rn)+max(rn) midrank is exact — the same tie-insensitivity the
     // single-window formulation relied on.
     Spec("eval_auc",

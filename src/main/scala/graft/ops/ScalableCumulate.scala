@@ -1,7 +1,5 @@
 package graft.ops
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.execution.SparkPlan
@@ -11,84 +9,71 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Bucketed two-pass replacement for unpartitioned running-sum windows —
-  * `win_rank_scalable`'s machinery (ops/Windows.scala) lifted into a shared
-  * helper so every global-order cumulation in the repo runs partitioned.
+/** Bucketed prefix replacement for unpartitioned running-sum windows:
+  * every global-order cumulation, row number, rank and order-statistic
+  * pick in the repo runs partitioned through one private kernel,
+  * [[bucketed]].
   *
   * The hazard it retires: `Window.orderBy(x)` with no partition key plans
   * `Exchange SinglePartition` + a single-task sort of the ENTIRE input — fine
   * on a dim table, a one-executor bottleneck on any unbounded grain (order
-  * values, users, vocabulary, eval vectors) at 100 TB. The two-pass shape:
+  * values, users, vocabulary, eval vectors) at 100 TB. The kernel's shape:
   *
-  *  - Pass 0 (bounded driver job): approx-percentile bounds of the primary
-  *    order column split the domain into [[NB]] order-compatible buckets.
-  *    Equal values never straddle a bucket (strict `<` against each bound),
-  *    so bucket-local cumulation + a per-bucket offset equals the global
-  *    cumulation. Bounds only shape bucket SIZES — the output depends solely
-  *    on value order, so results are deterministic even though the sketch
-  *    is not guaranteed to be.
-  *  - Pass 1 (bounded driver job): per-(group, bucket) partial sums — at most
-  *    |groups|·NB rows — collected and prefix-summed on the driver in EXACT
-  *    arithmetic (Long / Integer / BigDecimal only; Double partials are
-  *    rejected because float prefix-reassociation would change bits).
-  *  - Pass 2 (the query's plan): broadcast the offsets back, run the window
-  *    `partitionBy(group, bucket)` — NB-way (× groups) parallel, no
-  *    SinglePartition exchange anywhere.
+  *  - Buckets: the row's [[log2Bucket]] of the primary order column
+  *    (negated for a descending scan) — 1/64-octave value bands, computed
+  *    row by row with no prior knowledge of the range and no job. The id
+  *    is a monotone pure function of the value, so equal values never
+  *    straddle a bucket and bucket-local cumulation + a per-bucket offset
+  *    equals the global cumulation. The layout only shapes bucket SIZES,
+  *    never rows.
+  *  - One bounded driver job: per-(group, bucket) partial sums — at most
+  *    |groups| × the octave buckets the values occupy, never data-sized
+  *    (capped by `spark.graft.cumulate.maxPartials`) — collected and
+  *    prefix-summed on the driver in EXACT arithmetic (Long / Integer /
+  *    BigDecimal only; Double partials are rejected because float
+  *    prefix-reassociation would change bits). The same job counts
+  *    NaN/null primaries and null summed values and fails loudly on
+  *    either.
+  *  - The query's plan: broadcast the offsets back (null-safe join), run
+  *    the window `partitionBy(group, bucket)` — no SinglePartition
+  *    exchange anywhere.
   *
-  * The two driver collects are the same bounded class as the centroid-model
-  * collect (InferMapPartitions.scala): O(NB·|groups|) longs/decimals, never
-  * data-sized. PlanGuardSpec's unpartitioned-window guard enforces that the
-  * routed queries stay on this path.
+  * The consumers differ only in what they do with the offsets:
+  * [[cumSum]] and [[rowNumber]] add `sum(..).over(w)` to every bucket,
+  * [[globalRank]] adds `rank().over(w)`, and [[quantilePicks]] keeps only
+  * the crossing buckets and aggregates its picks from them.
+  * PlanGuardSpec's unpartitioned-window guard enforces that the routed
+  * queries stay on this path.
   *
-  * Input materialization (round-10, the r9 bench finding): the three
-  * actions above would otherwise each re-execute the INPUT's lineage —
-  * and every call site feeds a derived aggregate (a value histogram, a
-  * per-user rollup), so the upstream scan+aggregate ran three times per
-  * execution (agg_mad, chaining two cumSum calls, ran it six times).
-  * [[materialize]] localCheckpoints the input once, so the bounds job,
-  * the partials collect, and the final query all read the materialized
-  * relation. On a cluster, localCheckpoint stores each partition on the
-  * executor that computed it — O(data/executors) transient local storage,
-  * strictly cheaper than recomputing the dominant stage twice more. (The
-  * blocks are not resilient to executor loss; a lost block fails the job
-  * and the batch retries — the standard localCheckpoint trade. That
-  * failure path is EXERCISED, not just documented: CheckpointFaultSmoke /
-  * CheckpointFaultSpec hard-kill one executor of a local-cluster[2,1]
-  * after materialize() and verify the consumer fails loudly with
-  * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — never silently wrong — while the
-  * live lineage still recomputes correctly via ordinary task retry.)
+  * Input (round 10, the r9 bench finding): the partials job and the
+  * returned plan each execute the input's lineage. A bare, optionally
+  * projected or filtered scan (or a persisted relation) is read as-is;
+  * anything else — every derived aggregate a call site feeds, a value
+  * histogram, a per-user rollup — is [[materialize]]d once, so the
+  * upstream scan+aggregate never runs twice per execution. On a cluster,
+  * localCheckpoint stores each partition on the executor that computed
+  * it — O(data/executors) transient local storage, strictly cheaper than
+  * recomputing the dominant stage. (The blocks are not resilient to
+  * executor loss; a lost block fails the job and the batch retries — the
+  * standard localCheckpoint trade. That failure path is EXERCISED, not
+  * just documented: CheckpointFaultSmoke / CheckpointFaultSpec hard-kill
+  * one executor of a local-cluster[2,1] after materialize() and verify
+  * the consumer fails loudly with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND —
+  * never silently wrong — while the live lineage still recomputes
+  * correctly via ordinary task retry.)
   */
 object ScalableCumulate {
 
-  /** Default bucket fan-out. 16 ≥ local[8]/local[32] parallelism per
-    * group; at a real 1000-executor deployment raise
-    * `spark.graft.cumulate.buckets` (shuffle width is NB·|groups| tasks)
-    * — no code edit needed, see [[buckets]].
-    */
-  val NB = 16
-
-  /** Effective bucket fan-out: `spark.graft.cumulate.buckets` if set
-    * (session conf, validated ≥ 1), else [[NB]]. Bucket count only shapes
-    * task sizes, never results — ScalableCumulateSpec pins bit-identity
-    * across NB values.
-    */
-  def buckets(spark: org.apache.spark.sql.SparkSession): Int = {
-    val n = spark.conf.get("spark.graft.cumulate.buckets", NB.toString).toInt
-    require(n >= 1, s"spark.graft.cumulate.buckets must be >= 1, got $n")
-    n
-  }
-
-  /** Shuffle exchanges hidden behind this thread's [[materialize]] calls
-    * since the last [[resetHiddenShuffles]] — the audit seam for the
-    * checkpoint blind spot (round-9 advice): a localCheckpointed input is
-    * a LogicalRDD in the final plan, so its upstream shuffles vanish from
-    * the plan string. `graft.Profile --budget` and PlanGuardSpec add this
-    * ledger to the visible count, keeping the pinned per-query shuffle
-    * budgets honest end-to-end. Thread-local because sbt may build plans
-    * concurrently. (The two bounded helper jobs — the bounds aggregate and the NB-grain
-    * partials groupBy, both over the checkpointed relation — are fixed
-    * O(NB·|groups|) shapes and stay outside the budget, as they were
-    * before the rewrite.)
+  /** Shuffle exchanges hidden from a query's final plan since this
+    * thread's last [[resetHiddenShuffles]] — the audit seam for two blind
+    * spots (round-9 advice): a [[materialize]]d input is a LogicalRDD in
+    * the final plan, so its upstream shuffles vanish from the plan; and an
+    * eager helper job (the kernel's partials collect, a call site's
+    * driver-collected pick) never reaches the plan at all. Both record
+    * here — [[materialize]] itself, helper jobs through [[audited]] — and
+    * `graft.Profile --budget` and PlanGuardSpec add this ledger to the
+    * visible count, keeping the pinned per-query shuffle budgets honest
+    * end-to-end. Thread-local because sbt may build plans concurrently.
     */
   private val hiddenLedger = new ThreadLocal[Int] {
     override def initialValue(): Int = 0
@@ -119,12 +104,12 @@ object ScalableCumulate {
     shuffleCount(df.queryExecution.executedPlan) + hiddenShuffles
 
   /** Observability seam for ScaleSpec (round-11 verdict #6): row count of
-    * the most recent quantilePicks partials collect on this JVM. The
-    * 100 TB argument for the pick machinery is that the driver collect is
-    * O(NB·|groups|) — independent of input rows — and this counter lets a
-    * test MEASURE that (flat at 1× vs 10× data; bytes = rows × fixed
-    * schema width). Diagnostic only: never read by query logic. The
-    * contract is also ENFORCED: the collect fails loudly past
+    * the most recent partials collect of the kernel on this JVM. The
+    * 100 TB argument for the machinery is that the driver collect is
+    * O(octave buckets·|groups|) — independent of input rows — and this
+    * counter lets a test MEASURE that (flat at 1× vs 10× data; bytes =
+    * rows × fixed schema width). Diagnostic only: never read by query
+    * logic. The contract is also ENFORCED: the collect fails loudly past
     * `spark.graft.cumulate.maxPartials` (default 1M rows) instead of
     * OOMing the driver on a data-sized group key — see the guard at the
     * collect site and ScalableCumulateSpec's high-cardinality test.
@@ -185,8 +170,8 @@ object ScalableCumulate {
 
   /** Record `df`'s plan's shuffle exchanges in the hidden ledger and
     * return it unchanged — for an EAGER helper job whose plan never
-    * reaches the returned query (a bounds aggregate, a partials collect,
-    * a driver-collected pick), so the pinned budget still charges it.
+    * reaches the returned query (the kernel's partials collect, a
+    * driver-collected pick), so the pinned budget still charges it.
     */
   def audited(df: DataFrame): DataFrame = {
     record(shuffleCount(df.queryExecution.executedPlan))
@@ -199,13 +184,13 @@ object ScalableCumulate {
     * returned query plan, so callers keep AQE and their own width on the
     * plan that does real work.
     *
-    * The helper jobs are fixed O(NB·|groups|) driver-collect shapes. AQE
+    * The helper jobs are fixed O(buckets·|groups|) driver-collect shapes. AQE
     * cannot improve them (nothing to re-plan at that size), but it
     * executes each of their stages as a separate Spark job, and at
     * fixture scale the per-job driver overhead dominates the work itself
     * (round-11 measurement: agg_mad ran 18-20 jobs for five logical
     * actions, with more wall time between jobs than in them). Their
-    * reduce side holds O(NB·|groups|) rows (≤ maxPartials, enforced)
+    * reduce side holds O(buckets·|groups|) rows (≤ maxPartials, enforced)
     * bound for the driver, so spreading it over the session's full
     * shuffle width only pays ~cores task dispatches (round 16, guide §2.2
     * "fewer, larger reduce partitions" taken to its bounded limit); the
@@ -213,10 +198,10 @@ object ScalableCumulate {
     *
     * Caveat — merge fan-in: only the POST-merge output is driver-bounded.
     * The one reduce task still merges every map task's partials,
-    * O(numMapTasks × NB × |groups|) rows, and that count grows with the
-    * number of input splits; at many splits the merge serializes onto one
-    * task. Perf only, results unaffected; a small constant width (e.g.
-    * min(cores, 8)) in this recipe would spread it if it ever shows.
+    * O(numMapTasks × octave buckets × |groups|) rows, and that count grows
+    * with the number of input splits; at many splits the merge serializes
+    * onto one task. Perf only, results unaffected; a small constant width
+    * (e.g. min(cores, 8)) in this recipe would spread it if it ever shows.
     */
   private[ops] def inHelper(df: DataFrame): DataFrame = {
     val helper = graft.GraftSession.child(df.sparkSession, "helper",
@@ -276,7 +261,7 @@ object ScalableCumulate {
     * persist()ed relation at ANY lineage shape (round-11): re-execution
     * hits the block cache, and the FIRST consumer job doubles as the
     * cache fill, which is exactly how agg_abc_class folds its input
-    * materialization into the bounds job instead of paying a separate
+    * materialization into the partials job instead of paying a separate
     * checkpoint action. Anything else (an uncached join, aggregate,
     * window, generate, union…) does real work per execution and must be
     * materialized before a multi-action consumer.
@@ -308,17 +293,128 @@ object ScalableCumulate {
       s"non-exact or mismatched partials: ${x.getClass} + ${y.getClass}")
   }
 
-  /** Core rewrite. Returns `df` plus, for each [[Cum]], its global running
-    * sum over `orderCols` (ROWS UNBOUNDED PRECEDING..CURRENT ROW, within
-    * `groupCols` if given) and, for each entry in `totals` (cum name →
-    * total column name), the group-wide grand total — all WITHOUT an
-    * unpartitioned window. The transient `__bkt` column is dropped.
+  /** One group's driver-side prefix: its key, its bucket ids in scan
+    * order, and per kernel sum `j` the bucket partials `parts(j)`, their
+    * exclusive prefix offsets `offs(j)` and the group total `tots(j)` —
+    * all exact. */
+  private final case class Prefix(
+      key: Seq[Any],
+      bkts: IndexedSeq[Long],
+      parts: IndexedSeq[IndexedSeq[Any]],
+      offs: IndexedSeq[IndexedSeq[Any]],
+      tots: IndexedSeq[Any])
+
+  /** The bucketed-prefix kernel behind every consumer. Tags the input
+    * (as-is where [[cheapRescan]] allows, else [[materialize]]d) with
+    * `__bkt` = [[log2Bucket]] of `primary`, negated when the scan is
+    * descending; runs ONE audited partials collect in the helper session
+    * — per-(group, bucket) `sum` of each `sums` column, guarded against
+    * NaN/null primaries, null summed values and more than
+    * `spark.graft.cumulate.maxPartials` rows; folds exact per-group
+    * prefixes on the driver; and joins the kept buckets back, null-safe,
+    * to a broadcast relation of `__off_<name>` (exclusive prefix) and
+    * `__tot_<name>` (group total) per sum plus the consumer's `extra`
+    * columns.
+    *
+    * `keep` picks, per group, the bucket indices to join (with their
+    * `extra` values); rows of every other bucket drop out of the join.
+    * Returns the joined input and the per-group prefixes.
+    */
+  private def bucketed(
+      df: DataFrame,
+      primary: Column,
+      ascending: Boolean,
+      groupCols: Seq[String],
+      sums: Seq[(String, Column)])(
+      keep: Prefix => Seq[(Int, Seq[Any])],
+      extra: Seq[StructField] = Nil): (DataFrame, Seq[Prefix]) = {
+    val spark = df.sparkSession
+    val in = if (cheapRescan(df)) df else materialize(df)
+    val pd = primary.cast(DoubleType)
+    val bkt = if (ascending) log2Bucket(primary) else -log2Bucket(primary)
+    val withB = in.withColumn("__bkt", bkt)
+    val ng = groupCols.size
+    val aggs = sums.indices.map(j => sum(sums(j)._2).as(s"__p$j")) ++ Seq(
+      count(when(pd.isNull || isnan(pd), 1)).as("__bad"),
+      count(when(sums.map(_._2.isNull).reduce(_ || _), 1)).as("__nullv"))
+    val part = withB.groupBy((groupCols :+ "__bkt").map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+    val types = sums.indices.map(j => part.schema(s"__p$j").dataType)
+    types.foreach(zero) // reject non-exact partial types up front
+    val rows = audited(inHelper(part)).collect()
+    lastPartialsRows = rows.length
+    // Hard cap on the driver collect (round 15; r14 verdict #2): the
+    // 100 TB argument is "O(buckets·|groups|) rows, independent of input
+    // size" — true for every current caller, but nothing else stops a
+    // future caller from passing a high-cardinality group key and
+    // turning this collect into a silent driver OOM. Generous default
+    // (1M rows ≈ tens of MB of partials), conf-overridable; misuse now
+    // fails with a named error instead of an executor-sized heap dump.
+    val maxPart = spark.conf
+      .get("spark.graft.cumulate.maxPartials", "1000000").toLong
+    require(rows.length <= maxPart,
+      s"ScalableCumulate: partials collect returned ${rows.length} rows " +
+        s"(> spark.graft.cumulate.maxPartials=$maxPart) — the group key " +
+        "is too high-cardinality for a driver-side prefix; cumulate at a " +
+        "coarser grain or raise the conf if the driver truly has the heap")
+    // NaN sorts last but a null primary has no bucket to rank it in:
+    // every call site cumulates over non-null keys, so fail loudly
+    // instead of quietly misplacing them.
+    val bad = rows.map(_.getAs[Long]("__bad")).sum
+    require(bad == 0L, s"ScalableCumulate: $bad NaN/null primary order keys — bucket " +
+      "assignment cannot rank them; filter or impute upstream")
+    // `sum` skips nulls, so a null summed value would silently drop out of
+    // its cumulative and total (e.g. a weight that overflows its decimal
+    // cast in a non-ANSI session) — and restart a running sum at a bucket
+    // start where the unpartitioned window would not.
+    val nullV = rows.map(_.getAs[Long]("__nullv")).sum
+    require(nullV == 0L, s"ScalableCumulate: $nullV null `value` rows — summed " +
+      "values must be non-null (a null would be silently skipped)")
+
+    val prefixes = rows.groupBy(r => (0 until ng).map(r.get)).toSeq.map {
+      case (key, grs) =>
+        val sorted = grs.sortBy(_.getLong(ng))
+        val parts = sums.indices.map(j => sorted.map(_.get(ng + 1 + j)).toIndexedSeq)
+        Prefix(key, sorted.map(_.getLong(ng)).toIndexedSeq, parts,
+          parts.zip(types).map { case (p, t) => p.scanLeft(zero(t))(plus).init },
+          parts.zip(types).map { case (p, t) => p.foldLeft(zero(t))(plus) })
+    }
+    val auxRows = for (p <- prefixes; (i, ext) <- keep(p))
+      yield Row.fromSeq(p.key ++ (p.bkts(i) +: sums.indices.map(j => p.offs(j)(i))) ++
+        p.tots ++ ext)
+    val auxSchema = StructType(
+      groupCols.map(g => part.schema(g)) ++
+        (StructField("__bkt", LongType, nullable = false) +:
+          sums.zip(types).map { case ((n, _), t) => StructField(s"__off_$n", t) }) ++
+        sums.zip(types).map { case ((n, _), t) => StructField(s"__tot_$n", t) } ++
+        extra)
+    val aux = spark.createDataFrame(java.util.Arrays.asList(auxRows: _*), auxSchema)
+    (nullSafeJoin(withB, aux, groupCols :+ "__bkt"), prefixes)
+  }
+
+  /** The per-(group, bucket) window every consumer runs over. */
+  private def bucketWindow(groupCols: Seq[String], orderCols: Seq[Column]) =
+    Window.partitionBy((groupCols :+ "__bkt").map(col): _*).orderBy(orderCols: _*)
+
+  private def runningWindow(groupCols: Seq[String], orderCols: Seq[Column]) =
+    bucketWindow(groupCols, orderCols)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  /** Every bucket of a group, no extra aux columns. */
+  private def allBuckets(p: Prefix): Seq[(Int, Seq[Any])] =
+    p.bkts.indices.map(_ -> Nil)
+
+  /** `df` plus, for each [[Cum]], its global running sum over `orderCols`
+    * (ROWS UNBOUNDED PRECEDING..CURRENT ROW, within `groupCols` if given)
+    * and, for each entry in `totals` (cum name → total column name), the
+    * group-wide grand total — all WITHOUT an unpartitioned window.
     *
     * `primary` must be the leading order column (numeric; cast to double
-    * only for bucket ASSIGNMENT — double cast is monotone, and ties map to
-    * the same bucket, so ordering is never violated). `ascending` must match
-    * the sort direction of `primary` inside `orderCols`. Inputs are assumed
-    * non-null in `primary` (every call site cumulates over non-null keys).
+    * only for bucket ASSIGNMENT — the cast and [[log2Bucket]] are
+    * monotone, and ties map to the same bucket, so ordering is never
+    * violated). `ascending` must match the sort direction of `primary`
+    * inside `orderCols`. `primary` and every cum value must be non-null
+    * (enforced by the partials job).
     */
   def cumSum(
       df: DataFrame,
@@ -327,26 +423,54 @@ object ScalableCumulate {
       orderCols: Seq[Column],
       cums: Seq[Cum],
       groupCols: Seq[String] = Nil,
-      totals: Map[String, String] = Map.empty): DataFrame =
-    core(df, primary, ascending, orderCols, cums, groupCols, totals)._1
+      totals: Map[String, String] = Map.empty): DataFrame = {
+    val (j, _) = bucketed(df, primary, ascending, groupCols,
+      cums.map(c => c.name -> c.value))(allBuckets)
+    val w = runningWindow(groupCols, orderCols)
+    val out = cums.foldLeft(j)((d, c) =>
+      d.withColumn(c.name, sum(c.value).over(w) + col(s"__off_${c.name}")))
+    val named = totals.foldLeft(out) { case (d, (c, t)) =>
+      d.withColumnRenamed(s"__tot_$c", t)
+    }
+    named.drop(("__bkt" +: cums.flatMap(c =>
+      Seq(s"__off_${c.name}", s"__tot_${c.name}"))): _*)
+  }
 
-  /** Global row number (1-based, ungrouped) over `orderCols`, plus the total
-    * row count (driver-side, free — it is the last prefix offset). The
-    * scalable form of `row_number().over(Window.orderBy(...))`; feed the
-    * count to [[ntileOf]] / cume-dist picks.
+  /** Global row number (1-based, ungrouped, LongType) over `orderCols`,
+    * plus the total row count (driver-side, free — it is the kernel's
+    * group total). The scalable form of
+    * `row_number().over(Window.orderBy(...))`; feed the count to
+    * [[ntileOf]] / cume-dist picks.
     */
   def rowNumber(
       df: DataFrame,
       primary: Column,
       ascending: Boolean,
       orderCols: Seq[Column],
-      out: String): (DataFrame, Long) = {
-    val (res, tot) = core(df, primary, ascending, orderCols,
-      Seq(Cum(out, lit(1L))), Nil, Map.empty)
-    val n = tot.getOrElse(Seq.empty, Map.empty)
-      .getOrElse(out, java.lang.Long.valueOf(0L))
-      .asInstanceOf[java.lang.Long].longValue()
-    (res, n)
+      out: String): (DataFrame, Long) =
+    numbered(df, primary, ascending, out)(
+      sum(lit(1L)).over(runningWindow(Nil, orderCols)))
+
+  /** Global `rank()` (ungrouped, LongType) over `orderCols` as column
+    * `out`, plus the total row count: bucket-local rank + the count of
+    * every earlier bucket. Exact because ties share a bucket, so a tie
+    * group's rank never depends on rows in another bucket.
+    */
+  def globalRank(
+      df: DataFrame,
+      primary: Column,
+      ascending: Boolean,
+      orderCols: Seq[Column],
+      out: String): (DataFrame, Long) =
+    numbered(df, primary, ascending, out)(rank().over(bucketWindow(Nil, orderCols)))
+
+  /** `out` = a bucket-local numbering `within` + the row count of every
+    * earlier bucket, and the total row count. */
+  private def numbered(df: DataFrame, primary: Column, ascending: Boolean,
+      out: String)(within: Column): (DataFrame, Long) = {
+    val (j, ps) = bucketed(df, primary, ascending, Nil, Seq("n" -> lit(1L)))(allBuckets)
+    (j.withColumn(out, within + col("__off_n")).drop("__bkt", "__off_n", "__tot_n"),
+      ps.headOption.fold(0L)(_.tots.head.asInstanceOf[java.lang.Long].longValue()))
   }
 
   /** Exact integer division of a non-negative long column by a positive
@@ -371,22 +495,27 @@ object ScalableCumulate {
         .otherwise(lit(r) + idiv(rn - 1 - lit((q + 1) * r), q) + 1)
   }
 
-  /** Bucket id of every non-positive value under [[log2Bucket]]: below
-    * floor(64·log₂ x) of the smallest positive double (−68736), and far
-    * from Long overflow when a caller negates it.
+  /** Bucket id of zero under [[log2Bucket]]: between every negative
+    * value's bucket (at most −2^21 + 68736) and every positive one (at
+    * least floor(64·log₂) of the smallest positive double, −68736), and
+    * far from Long overflow when a caller negates it.
     */
   val NonPositiveBucket: Long = -(1L << 20)
 
-  /** Log-octave `bucketHint` for [[quantilePicks]]: floor(64·log₂ x), so
-    * 1/64-octave value bands with no prior knowledge of the range. Total
-    * on non-null input — every non-positive value shares the single
-    * bucket [[NonPositiveBucket]], below every positive bucket — so the
-    * id stays monotone non-decreasing in x; NULL stays NULL. For a
-    * descending scan pass the negation.
+  /** The kernel's bucket id: floor(64·log₂ x) for x > 0 — 1/64-octave
+    * value bands with no prior knowledge of the range — mirrored below
+    * zero as −2^21 − floor(64·log₂(−x)) for x < 0, and
+    * [[NonPositiveBucket]] for zero (either sign). Magnitudes are clamped
+    * to the largest finite double first, so ±∞ share the extreme finite
+    * buckets; NaN, which Spark orders above +∞, shares +∞'s. Total on
+    * non-null input and monotone non-decreasing in x under Spark's
+    * ordering; NULL stays NULL. Equal values always share a bucket.
     */
   def log2Bucket(x: Column): Column = {
     val v = x.cast(DoubleType)
-    when(v > 0, floor(log(2.0, v) * 64))
+    def octave(a: Column) = floor(log(2.0, least(a, lit(Double.MaxValue))) * 64)
+    when(v > 0, octave(v))
+      .when(v < 0, lit(-(1L << 21)) - octave(-v))
       .when(v.isNotNull, lit(NonPositiveBucket))
   }
 
@@ -395,33 +524,26 @@ object ScalableCumulate {
     * [[cumSum]] answers "running sum on EVERY row", which forces the full
     * relation through a window; median/p95-style queries only need "the
     * first `primary` value (ascending) whose cumulative `value` sum
-    * crosses num/den of the total". That needs no checkpoint and no
-    * data-sized shuffle at all:
-    *
-    *  - Job 1 (bounds): approx-percentile bucket bounds of `primary` over
-    *    the RAW input + the NaN/null guard. No groupBy, no shuffle of
-    *    data.
-    *  - Job 2 (partials): per-(group, bucket) `sum(value)` — map-side
-    *    combine straight to NB·|groups| rows, collected and prefix-summed
-    *    on the driver in exact arithmetic. The crossing bucket b* per
-    *    (group, frac) — the first b with den·(off(b)+s(b)) ≥ num·W — is
-    *    then DRIVER-known, and s(b*) > 0 by construction.
-    *  - Job 3 (the returned plan): inner-join a broadcast aux relation of
-    *    the needed (group, bucket, offset, W) rows — filtering the scan
-    *    to the crossing buckets (~1/NB of rows) — cumulate within them,
-    *    and pick `min(primary)` where den·(off+cum) ≥ num·W. Exact long /
-    *    decimal comparisons end-to-end; the approx bounds only decide
-    *    bucket SIZES, never the result.
+    * crosses num/den of the total". On the kernel's one partials job —
+    * per-(group, bucket) `value` sum, row count and metric sums, reduced
+    * map-side and prefix-summed on the driver in exact arithmetic — the
+    * crossing bucket b* per (group, frac), the first b with
+    * den·(off(b)+s(b)) ≥ num·W, is DRIVER-known, and s(b*) > 0 by
+    * construction. The returned plan joins only the crossing buckets'
+    * rows to the broadcast offsets (a sliver of the input), cumulates
+    * within them, and picks `min(primary)` where den·(off+cum) ≥ num·W —
+    * exact long / decimal comparisons end-to-end, no checkpoint of a
+    * bare input and no data-sized shuffle.
     *
     * Ties in `primary` always share a bucket (the bucket id is a pure
     * function of the value), and the pick is the first value at which
     * ANY row qualifies — so the result equals the histogram pick
     * regardless of how tie rows are ordered within the bucket window.
     *
-    * At 100 TB: two full scans + one 1/NB-filtered scan (the bucket
-    * range-filter on `primary` is min/max-prunable at the parquet
-    * row-group level), with only O(NB·|groups|) rows ever moved —
-    * strictly cheaper than materializing a near-unique value histogram.
+    * At 100 TB: two full scans (the partials job and the returned plan's
+    * scan, whose crossing-bucket filter is the join), with only
+    * O(buckets·|groups|) rows ever moved — strictly cheaper than
+    * materializing a near-unique value histogram.
     *
     * `fracs` are (num, den) with 0 < num ≤ den; the crossing condition
     * is den·cum ≥ num·total, or strictly `>` with `strict = true` (the
@@ -441,34 +563,8 @@ object ScalableCumulate {
     * metrics are requested, `orderCols` must be a TOTAL order (else the
     * metric cums at a tied boundary are order-dependent).
     *
-    * Returns one row per group. The eager bounds and partials jobs
-    * register their shuffles in the hidden ledger, so the pinned budgets
-    * stay honest.
-    *
-    * `boundsHint` (round-11): caller-supplied bucket split points that
-    * SKIP the bounds job entirely — one fewer sequential Spark action.
-    * Bounds only ever shape bucket SIZES (the crossing search and the
-    * final window are exact over whatever buckets exist), so ANY finite
-    * values are correct; badly placed ones merely unbalance the final
-    * filtered scan. Callers use it when split points are derivable from
-    * work already done — agg_mad folds the first pick's bounds around
-    * the median for the deviation pick. The NaN/null primary guard that
-    * the bounds job carried moves into the partials job (checked before
-    * any partial sum is trusted), so hinted calls stay exactly as loud.
-    *
-    * `bucketHint` (round-11, generalizes boundsHint): a caller-supplied
-    * INTEGER bucket-id expression, monotone non-decreasing in `primary`
-    * along the scan direction (so anti-monotone in the raw value when
-    * `ascending = false`) and never null on non-null input. Lets a call
-    * site bucket with arithmetic instead of a split-point fold — e.g.
-    * the negated [[log2Bucket]] of `rev` gives 1/64-octave value bands
-    * with NO prior knowledge of the range and no bounds job. Equal values
-    * always share a bucket (the id is a pure function of the value), so
-    * the tie argument above is untouched; a distribution concentrated
-    * inside one 2^(1/64) ratio band degenerates to one bucket — the
-    * same near-all-ties case the percentile bounds already accept. The
-    * partials pass carries the NaN/null guard exactly as for
-    * boundsHint. Mutually exclusive with boundsHint.
+    * Returns one row per group. The eager partials job registers its
+    * shuffles in the hidden ledger, so the pinned budgets stay honest.
     */
   def quantilePicks(
       df: DataFrame,
@@ -480,125 +576,18 @@ object ScalableCumulate {
       totalName: String = "total",
       ascending: Boolean = true,
       strict: Boolean = false,
-      metrics: Seq[(String, Column)] = Nil,
-      boundsHint: Option[Seq[Double]] = None,
-      bucketHint: Option[Column] = None): DataFrame = {
+      metrics: Seq[(String, Column)] = Nil): DataFrame = {
     require(fracs.nonEmpty && fracs.forall { case (n, d) => n > 0 && n <= d },
       s"fracs must satisfy 0 < num <= den, got $fracs")
     // strict + num == den is vacuous ("first row strictly over 100% of the
     // total" — no row ever crosses since cum ≤ W): the driver search would
-    // fall back to the last bucket while Job 3's aggregate returns NULL
+    // fall back to the last bucket while the returned aggregate has NULL
     // picks, two different answers for one input (round-10 advice #1).
     // Reject it loudly instead of picking one arbitrarily.
     require(!strict || fracs.forall { case (n, d) => n < d },
       s"strict=true requires num < den (num == den can never cross " +
         s"strictly — cum <= total); got $fracs")
-    val spark = df.sparkSession
-    val nbv = buckets(spark)
-
-    // Derived-input guard (round-10 verdict): the three jobs below (bounds,
-    // partials, the returned plan) each re-execute the input's lineage.
-    // A bare scan — optionally column-pruned / filtered — is cheap to
-    // re-read (pushdown reaches the files all three times); anything with
-    // a join/aggregate/window upstream would silently run that work three
-    // times per execution (the exact r9 bench-regression class), so it is
-    // checkpointed once here. No-op for the existing call sites (bare
-    // projections or already-materialized inputs).
-    val in = if (cheapRescan(df)) df else materialize(df)
-    val pd = primary.cast(DoubleType)
-
-    // Job 1: bounds + NaN/null guard (accuracy 1000: bounds only shape
-    // bucket sizes, so a cheaper sketch costs nothing in exactness).
-    // Skipped entirely under a bounds/bucket hint — the guard then rides
-    // the partials job instead (see __bad below).
-    require(boundsHint.isEmpty || bucketHint.isEmpty,
-      "quantilePicks: boundsHint and bucketHint are mutually exclusive")
-    require(boundsHint.forall(_.forall(b => !b.isNaN && !b.isInfinite)),
-      s"quantilePicks: boundsHint must be finite, got $boundsHint")
-    val hinted = boundsHint.isDefined || bucketHint.isDefined
-    // Bucket ids stay LONG end-to-end (round-11 advice #1): a cast to
-    // IntegerType under non-ANSI semantics silently WRAPS a hint
-    // expression whose ids exceed Int range, breaking the documented
-    // monotone-bucket contract with no loud failure — and the wrap
-    // happens executor-side BEFORE grouping, so no driver-side range
-    // check on collected ids could catch it. LongType makes the wrap
-    // impossible for any practical hint (a Long-overflowing bucket
-    // arithmetic would first overflow in the caller's own expression);
-    // the unhinted fold produces 0..NB ints, losslessly widened.
-    val bkt = bucketHint.map(_.cast(LongType)).getOrElse {
-      val bounds: Seq[Double] = boundsHint.getOrElse {
-        val qs = (1 until nbv).map(i => i.toDouble / nbv)
-        val qsSafe = if (qs.isEmpty) Seq(0.5) else qs
-        val boundsRow = audited(inHelper(in.agg(
-          percentile_approx(pd, array(qsSafe.map(lit): _*), lit(1000)).as("b"),
-          count(when(pd.isNull || isnan(pd), 1)).as("bad")))).head()
-        require(boundsRow.getLong(1) == 0L,
-          s"quantilePicks: ${boundsRow.getLong(1)} NaN/null primary keys")
-        if (qs.isEmpty || boundsRow.isNullAt(0)) Seq.empty
-        else boundsRow.getSeq[Double](0)
-      }
-      bounds.foldLeft(lit(0L)) { (acc, b) =>
-        if (ascending) acc + when(lit(b) < pd, 1).otherwise(0)
-        else acc + when(pd < lit(b), 1).otherwise(0)
-      }
-    }
-
-    // Job 2: per-(group, bucket) partials (value + row count + metrics) →
-    // driver prefix + crossing bucket per (group, frac), exact arithmetic.
-    val withB = in.withColumn("__bkt", bkt)
-    val keyCols = groupCols.map(col) :+ col("__bkt")
     val mNames = metrics.map(_._1)
-    // Under a bounds/bucket hint the bounds job (and its guard) never
-    // ran: count NaN/null primaries here — they'd land in bucket 0 via
-    // the when() fold (or a null bucket under bucketHint) — and fail
-    // loudly BEFORE any partial sum is used. Null `value` rows are
-    // counted on every call: `sum` would skip them, silently dropping
-    // their weight from the cumulative and the total (e.g. a weight that
-    // overflows its decimal cast in a non-ANSI session). Both guards are
-    // appended last so every positional index below is hint-independent.
-    val partAggs = (sum(value).as("__s") +: count(lit(1)).as("__n") +:
-      metrics.map { case (n, c) => sum(c).as(s"__sm_$n") }) ++
-      (if (hinted)
-         Seq(count(when(pd.isNull || isnan(pd), 1)).as("__bad"))
-       else Nil) :+
-      count(when(value.isNull, 1)).as("__nullv")
-    val part = withB.groupBy(keyCols: _*).agg(partAggs.head, partAggs.tail: _*)
-    val partSchema = part.schema
-    val ng = groupCols.size
-    zero(partSchema("__s").dataType) // reject non-exact partial types
-    mNames.foreach(n => zero(partSchema(s"__sm_$n").dataType))
-    val partRows = audited(inHelper(part)).collect()
-    lastPartialsRows = partRows.length
-    // Hard cap on the driver collect (round 15; r14 verdict #2): the
-    // 100 TB argument is "O(NB·|groups|) rows, independent of input
-    // size" — true for every current caller, but nothing else stops a
-    // future caller from passing a high-cardinality group key and
-    // turning this collect into a silent driver OOM. Generous default
-    // (1M rows ≈ tens of MB of partials), conf-overridable; misuse now
-    // fails with a named error instead of an executor-sized heap dump.
-    val maxPart = spark.conf
-      .get("spark.graft.cumulate.maxPartials", "1000000").toLong
-    require(partRows.length <= maxPart,
-      s"quantilePicks: partials collect returned ${partRows.length} rows " +
-        s"(> spark.graft.cumulate.maxPartials=$maxPart) — the group key " +
-        "is too high-cardinality for a driver-side pick; cumulate at a " +
-        "coarser grain or raise the conf if the driver truly has the heap")
-    val nullV = partRows.map(_.getLong(partSchema.fieldIndex("__nullv"))).sum
-    require(nullV == 0L, s"quantilePicks: $nullV null `value` rows — " +
-      "value must be non-null (a null weight would be silently skipped)")
-    if (hinted) {
-      val bad = partRows.map(_.getLong(partSchema.fieldIndex("__bad"))).sum
-      require(bad == 0L, s"quantilePicks: $bad NaN/null primary keys")
-      // a null bucket id (a bucketHint expression that nulls on non-null
-      // input) would crash the Long bucket-id read below (getLong on a
-      // null cell, post the round-12 Int→Long widening) with a
-      // misleading error — name it
-      require(partRows.forall(!_.isNullAt(ng)),
-        "quantilePicks: bucketHint produced a NULL bucket id on non-null " +
-          "primary input — the hint expression must be total")
-    }
-    val byGroup: Map[Seq[Any], Array[Row]] =
-      partRows.groupBy(r => (0 until ng).map(r.get).toSeq)
 
     def cmp(a: Any, b: Any): Int = (a, b) match {
       case (x: java.lang.Long, y: java.lang.Long) => x.compareTo(y)
@@ -617,16 +606,16 @@ object ScalableCumulate {
     // crossing: >= target, or strictly > when `strict`
     def crosses(cum: Any, target: Any): Boolean =
       if (strict) cmp(cum, target) > 0 else cmp(cum, target) >= 0
-    // Magnitude guard (round-10 advice #2): Job 3 re-evaluates den·cum and
-    // num·W on EXECUTORS in unchecked arithmetic — non-ANSI Long multiply
-    // wraps silently and decimal(38,s)·long overflows to NULL — while the
-    // driver side uses multiplyExact/BigDecimal. Worse, the driver's find()
-    // short-circuits at the first crossing bucket, so a bucket emitted into
-    // aux for a LATER frac evaluates earlier fracs' products only in Spark.
-    // Validate here, in exact driver arithmetic, the extreme magnitude every
-    // executor-side product can reach (cum ≤ off+s within an aux bucket,
-    // monotone since value ≥ 0): an overflowing call site fails loudly
-    // instead of returning a wrong or NULL pick.
+    // Magnitude guard (round-10 advice #2): the returned plan re-evaluates
+    // den·cum and num·W on EXECUTORS in unchecked arithmetic — non-ANSI
+    // Long multiply wraps silently and decimal(38,s)·long overflows to
+    // NULL — while the driver side uses multiplyExact/BigDecimal. Worse,
+    // the driver's find() short-circuits at the first crossing bucket, so
+    // a bucket kept for a LATER frac evaluates earlier fracs' products
+    // only in Spark. Validate here, in exact driver arithmetic, the
+    // extreme magnitude every executor-side product can reach (cum ≤ off+s
+    // within a kept bucket, monotone since value ≥ 0): an overflowing call
+    // site fails loudly instead of returning a wrong or NULL pick.
     def checkMag(a: Any, k: Long): Unit = a match {
       case null => ()
       case x: java.lang.Long =>
@@ -646,85 +635,49 @@ object ScalableCumulate {
             "reduce the value column's scale")
       case _ => ()
     }
-
-    // aux rows: (group..., bkt, off, rnoff, moffs..., W, mtots...,
-    //            need_0..need_{k-1})
-    val sDt = partSchema("__s").dataType
-    val mDts = mNames.map(n => partSchema(s"__sm_$n").dataType)
-    val auxRows = mutable.ArrayBuffer.empty[Row]
-    for ((gkey, grs) <- byGroup) {
-      val sorted = grs.sortBy(_.getLong(ng))
-      val zeroV = zero(sDt)
-      // a bucket whose values are all null sums to null — treat as zero
-      // contribution, matching SQL sum semantics in the prefix fold
-      def series(colIdx: Int, z: Any) = {
-        val s = sorted.map(r => Option(r.get(colIdx)).getOrElse(z))
-        (s, s.scanLeft(z)(plus).init, s.foldLeft(z)(plus))
-      }
-      val (sums, offs, w) = series(ng + 1, zeroV)
-      val (_, rnOffs, _) = series(ng + 2, java.lang.Long.valueOf(0L))
-      val mSeries = mNames.indices.map(m =>
-        series(ng + 3 + m, zero(mDts(m))))
-      val crossing: Seq[Int] = fracs.map { case (num, den) =>
+    // Keep only each group's crossing buckets, flagged with the fracs
+    // that cross in them (sum 0 is `value`).
+    def crossing(p: Prefix): Seq[(Int, Seq[Any])] = {
+      val (s, off, w) = (p.parts(0), p.offs(0), p.tots(0))
+      val at: Seq[Int] = fracs.map { case (num, den) =>
         val target = times(w, num)
-        val idx = sorted.indices.find(i =>
-          crosses(times(plus(offs(i), sums(i)), den), target))
-        idx.getOrElse(sorted.length - 1)
+        s.indices.find(i => crosses(times(plus(off(i), s(i)), den), target))
+          .getOrElse(s.length - 1)
       }
-      for (i <- sorted.indices if crossing.contains(i); (num, den) <- fracs) {
-        checkMag(plus(offs(i), sums(i)), den) // max den·cum in this bucket
-        checkMag(w, num)                      // num·W, evaluated per row
+      for (i <- s.indices if at.contains(i)) yield {
+        for ((num, den) <- fracs) {
+          checkMag(plus(off(i), s(i)), den) // max den·cum in this bucket
+          checkMag(w, num)                  // num·W, evaluated per row
+        }
+        i -> fracs.indices.map(f => at(f) == i)
       }
-      for (i <- sorted.indices if crossing.contains(i))
-        auxRows += Row.fromSeq(gkey ++
-          Seq(sorted(i).getLong(ng), offs(i), rnOffs(i)) ++
-          mSeries.map(_._2(i)) ++ Seq(w) ++ mSeries.map(_._3) ++
-          fracs.indices.map(f => crossing(f) == i))
     }
-    val auxSchema = StructType(
-      groupCols.map(g => partSchema(g)) ++
-        Seq(StructField("__bkt", LongType, nullable = false),
-          StructField("__off", sDt),
-          StructField("__rnoff", LongType, nullable = false)) ++
-        mNames.zip(mDts).map { case (n, dt) => StructField(s"__moff_$n", dt) } ++
-        Seq(StructField("__W", sDt)) ++
-        mNames.zip(mDts).map { case (n, dt) => StructField(s"${n}_total", dt) } ++
-        fracs.indices.map(f =>
-          StructField(s"__need_$f", BooleanType, nullable = false)))
-    val auxDf = spark.createDataFrame(
-      java.util.Arrays.asList(auxRows.toSeq: _*), auxSchema)
+    val (joined, _) = bucketed(df, primary, ascending, groupCols,
+      ("v" -> value) +: ("rn" -> lit(1L)) +: metrics.map { case (n, c) => s"m_$n" -> c })(
+      crossing,
+      fracs.indices.map(f => StructField(s"__need_$f", BooleanType, nullable = false)))
 
-    // Job 3 (returned): crossing-bucket-only window; the first qualifying
-    // row per frac is selected as the MIN of a struct led by the strictly
-    // increasing row-number cumulation (unique → deterministic even
-    // through zero-`value` runs), carrying the pick value and every
-    // requested cumulative along in one aggregate.
-    val w = Window
-      .partitionBy((groupCols :+ "__bkt").map(col): _*)
-      .orderBy(orderCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // Null-safe equi-join (round-10 advice #3): a plain using-columns join
-    // drops a NULL group key — the partials groupBy retains the null group
-    // and an aux row is built for it, but EqualTo never matches nulls, so
-    // that group would silently vanish from the output. <=> keeps it, and
-    // the tiny broadcast side still hash-joins.
-    val joined = nullSafeJoin(withB, auxDf, groupCols :+ "__bkt")
-      .withColumn("__cum", sum(value).over(w) + col("__off"))
-      .withColumn("__rn", sum(lit(1L)).over(w) + col("__rnoff"))
-    val withM = metrics.foldLeft(joined) { case (d, (n, c)) =>
-      d.withColumn(s"__mc_$n", sum(c).over(w) + col(s"__moff_$n"))
+    // The first qualifying row per frac is selected as the MIN of a struct
+    // led by the strictly increasing row-number cumulation (unique →
+    // deterministic even through zero-`value` runs), carrying the pick
+    // value and every requested cumulative along in one aggregate.
+    val w = runningWindow(groupCols, orderCols)
+    val withM = metrics.foldLeft(joined
+        .withColumn("__cum", sum(value).over(w) + col("__off_v"))
+        .withColumn("__rn", sum(lit(1L)).over(w) + col("__off_rn"))) {
+      case (d, (n, c)) => d.withColumn(s"__mc_$n", sum(c).over(w) + col(s"__off_m_$n"))
     }
     val selStruct = struct(
       (col("__rn").as("r") +: primary.as("p") +: col("__cum").as("c") +:
         mNames.map(n => col(s"__mc_$n").as(n))): _*)
     val pickAggs = fracs.zipWithIndex.map { case ((num, den), f) =>
       val cond =
-        if (strict) col("__cum") * lit(den) > col("__W") * lit(num)
-        else col("__cum") * lit(den) >= col("__W") * lit(num)
+        if (strict) col("__cum") * lit(den) > col("__tot_v") * lit(num)
+        else col("__cum") * lit(den) >= col("__tot_v") * lit(num)
       min(when(col(s"__need_$f") && cond, selStruct)).as(s"__sel_$f")
     }
     val grouped = withM
-      .groupBy(((groupCols :+ "__W") ++ mNames.map(n => s"${n}_total"))
+      .groupBy(((groupCols :+ "__tot_v") ++ mNames.map(n => s"__tot_m_$n"))
         .map(col): _*)
       .agg(pickAggs.head, pickAggs.tail: _*)
     grouped.select((groupCols.map(col) ++
@@ -732,105 +685,7 @@ object ScalableCumulate {
         col(s"__sel_$f.p").as(s"pick_$f") +:
           col(s"__sel_$f.c").as(s"cum_$f") +:
           mNames.map(n => col(s"__sel_$f.$n").as(s"${n}_$f"))) ++
-      mNames.map(n => col(s"${n}_total")) :+
-      col("__W").as(totalName)): _*)
-  }
-
-  private def core(
-      df: DataFrame,
-      primary: Column,
-      ascending: Boolean,
-      orderCols: Seq[Column],
-      cums: Seq[Cum],
-      groupCols: Seq[String],
-      totals: Map[String, String])
-      : (DataFrame, Map[Seq[Any], Map[String, Any]]) = {
-    val spark = df.sparkSession
-    val pd = primary.cast(DoubleType)
-    val in = materialize(df)
-
-    // Pass 0: percentile bounds of the primary order key. Duplicate bounds
-    // (low-cardinality keys) just yield empty buckets — harmless. The same
-    // job counts NaN/null primaries: `lit(b) < pd` is false for NaN and
-    // null for null, so such rows would silently land in bucket 0 while
-    // sorting LAST ascending — misranked. Every call site cumulates over
-    // non-null keys, so this fails loudly instead of quietly misplacing.
-    val nbv = buckets(spark)
-    val qs = (1 until nbv).map(i => i.toDouble / nbv)
-    // nbv == 1 degenerates to a single bucket (no bounds needed); feed the
-    // aggregate a placeholder percentile so the NaN check still runs.
-    val qsSafe = if (qs.isEmpty) Seq(0.5) else qs
-    // accuracy 1000: bounds only shape bucket SIZES (results depend solely
-    // on value order — ScalableCumulateSpec pins bit-identity across
-    // bucket layouts), so the cheaper sketch is free
-    val boundsRow = inHelper(in.agg(
-      percentile_approx(pd, array(qsSafe.map(lit): _*), lit(1000)).as("b"),
-      count(when(pd.isNull || isnan(pd), 1)).as("bad"))).head()
-    require(boundsRow.getLong(1) == 0L,
-      s"ScalableCumulate: ${boundsRow.getLong(1)} NaN/null primary order " +
-        "keys — bucket assignment cannot rank them; filter or impute " +
-        "upstream")
-    val bounds: Seq[Double] =
-      if (qs.isEmpty || boundsRow.isNullAt(0)) Seq.empty
-      else boundsRow.getSeq[Double](0)
-    val bkt = bounds.foldLeft(lit(0)) { (acc, b) =>
-      if (ascending) acc + when(lit(b) < pd, 1).otherwise(0)
-      else acc + when(pd < lit(b), 1).otherwise(0)
-    }
-    val withB = in.withColumn("__bkt", bkt)
-
-    // Pass 1: per-(group, bucket) exact partials → driver prefix sums.
-    val aggExprs = cums.map(c => sum(c.value).as(c.name))
-    val keyCols = groupCols.map(col) :+ col("__bkt")
-    val part = withB.groupBy(keyCols: _*).agg(aggExprs.head, aggExprs.tail: _*)
-    val partSchema = part.schema
-    val ng = groupCols.size
-    val cumTypes = cums.map(c => partSchema(c.name).dataType)
-    cumTypes.foreach(zero) // reject non-exact partial types up front
-
-    val byGroup: Map[Seq[Any], Array[Row]] =
-      inHelper(part).collect()
-        .groupBy(r => (0 until ng).map(r.get).toSeq)
-    val offRows = mutable.ArrayBuffer.empty[Row]
-    val grandTotals = mutable.Map.empty[Seq[Any], Map[String, Any]]
-    for ((gkey, grs) <- byGroup) {
-      val sorted = grs.sortBy(_.getInt(ng))
-      var running: Seq[Any] = cumTypes.map(zero)
-      val pending = mutable.ArrayBuffer.empty[(Int, Seq[Any])]
-      for (r <- sorted) {
-        pending += ((r.getInt(ng), running))
-        running = cums.indices.map(i => plus(running(i), r.get(ng + 1 + i)))
-      }
-      grandTotals(gkey) =
-        cums.indices.map(i => cums(i).name -> running(i)).toMap
-      for ((b, offs) <- pending)
-        offRows += Row.fromSeq(gkey ++ Seq(b) ++ offs ++
-          cums.indices.collect {
-            case i if totals.contains(cums(i).name) => running(i)
-          })
-    }
-
-    val offSchema = StructType(
-      groupCols.map(g => partSchema(g)) ++
-        Seq(StructField("__bkt", IntegerType, nullable = false)) ++
-        cums.map(c =>
-          StructField("__off_" + c.name, partSchema(c.name).dataType)) ++
-        cums.collect {
-          case c if totals.contains(c.name) =>
-            StructField(totals(c.name), partSchema(c.name).dataType)
-        })
-    val offDf = spark.createDataFrame(
-      java.util.Arrays.asList(offRows.toSeq: _*), offSchema)
-
-    // Pass 2: broadcast offsets, partitioned window, exact offset add.
-    val w = Window
-      .partitionBy((groupCols :+ "__bkt").map(col): _*)
-      .orderBy(orderCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // null-safe on the group keys — see the Job-3 comment in quantilePicks
-    var out = nullSafeJoin(withB, offDf, groupCols :+ "__bkt")
-    for (c <- cums)
-      out = out.withColumn(c.name, sum(c.value).over(w) + col("__off_" + c.name))
-    (out.drop(cums.map("__off_" + _.name): _*).drop("__bkt"), grandTotals.toMap)
+      mNames.map(n => col(s"__tot_m_$n").as(s"${n}_total")) :+
+      col("__tot_v").as(totalName)): _*)
   }
 }

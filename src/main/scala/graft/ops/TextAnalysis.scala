@@ -181,8 +181,8 @@ object TextAnalysis {
     // magnitude of slack over the accumulated drift.
     Spec("text_zipf",
       (s, d) => {
-        // materialize the 500-row top-k so the two helper passes (bounds +
-        // bucket partials) re-scan 500 rows, not the corpus; via the
+        // materialize the 500-row top-k so the helper partials pass and
+        // the returned plan re-scan 500 rows, not the corpus; via the
         // ScalableCumulate ledger so the corpus-scale tokenize/top-k
         // shuffles hidden behind the checkpoint still count toward the
         // pinned shuffle budget (round-9 advice #3)

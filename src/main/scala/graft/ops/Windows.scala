@@ -233,40 +233,22 @@ object Windows {
                 count(*) AS n
               FROM g GROUP BY user_id, grp ORDER BY user_id, ss_us""")),
 
-    // Scalable GLOBAL rank/percent_rank over a fact table — the two-pass
+    // Scalable GLOBAL rank/percent_rank over a fact table — the bucketed
     // rewrite for the one window shape that cannot partition by a key
     // (win_percentiles' unpartitioned window is fine on a dim table but
-    // single-executor on a fact). Pass 1: approx_percentile bucket bounds
-    // (bounds only shape bucket sizes — ranks depend solely on value
-    // order, so the OUTPUT is deterministic even though the sketch isn't
-    // guaranteed to be) + per-bucket counts, prefix-summed on the driver
-    // (bounded: one long per bucket — same class as the centroid-model
-    // collect). Pass 2: per-bucket parallel windows + broadcast offsets.
-    // Equal values land in one bucket (strict `<` on bounds), so ties
-    // never straddle buckets and bucket-local rank + offset = global rank.
+    // single-executor on a fact). ScalableCumulate.globalRank buckets by
+    // the price's log-octave, collects one count per bucket (bounded —
+    // the same class as the centroid-model collect), and adds the
+    // driver-prefixed counts to per-bucket parallel windows. Equal values
+    // share a bucket, so ties never straddle buckets and bucket-local
+    // rank + offset = global rank.
     Spec("win_rank_scalable",
       (s, d) => {
         val li = t(s, d, "lineitem")
           .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
-        val nb = 16
-        val qs = (1 until nb).map(i => i.toDouble / nb)
-        val bounds = li.agg(expr(
-            s"approx_percentile(l_extendedprice, array(${qs.mkString(",")}), 10000)"))
-          .head().getSeq[Double](0)
-        val bkt = bounds.foldLeft(lit(0)) { (acc, b) =>
-          acc + when(lit(b) < col("l_extendedprice"), 1).otherwise(0)
-        }
-        val withB = li.withColumn("bkt", bkt)
-        val counts = withB.groupBy("bkt").count()
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val n = counts.values.sum
-        val offsets = (0 until nb).scanLeft(0L)((acc, b) => acc + counts.getOrElse(b, 0L))
-        import s.implicits._
-        val offDf = (0 until nb).map(b => (b, offsets(b))).toDF("bkt", "off")
-        val w = Window.partitionBy("bkt").orderBy("l_extendedprice")
-        withB.join(broadcast(offDf), "bkt")
-          .withColumn("rnk", rank().over(w) + col("off"))
-          .withColumn("pct", (col("rnk") - 1).cast("double") / lit((n - 1).toDouble))
+        val (rk, n) = ScalableCumulate.globalRank(li, col("l_extendedprice"),
+          ascending = true, Seq(col("l_extendedprice")), "rnk")
+        rk.withColumn("pct", (col("rnk") - 1).cast("double") / lit((n - 1).toDouble))
           .select("l_orderkey", "l_linenumber", "l_extendedprice", "rnk", "pct")
           .orderBy("l_orderkey", "l_linenumber", "l_extendedprice", "rnk", "pct")
       },

@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `shuffle_budget.tsv` catches added exchanges.
   *
   * `src/test/resources/job_budget.tsv` pins the five queries of the
-  * benchmark's `board_sf01` slice. The pins are one-sided (`<=`); lower a
+  * benchmark's `board_sf01` slice and every query built on
+  * `ScalableCumulate`'s bucketed-prefix kernel (`cumSum`, `rowNumber`,
+  * `globalRank`, `quantilePicks`). The pins are one-sided (`<=`); lower a
   * pin when a change removes jobs. Each query runs once to warm the
   * memos and caches, then three measured times in a session of the
   * shared test context. The Inference stages it reads are context-scoped

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -117,42 +116,53 @@ class ScalableCumulateSpec extends AnyFunSuite {
   }
 
   test("NaN / null primary keys fail loudly instead of misranking") {
-    // `lit(b) < pd` is false for NaN (null for null), so both would land
-    // in bucket 0 while sorting LAST ascending — silent global misrank.
-    // The bounds job counts them and refuses (round-9 advice #1).
+    // A null primary has no bucket to rank it in, and NaN has no place in
+    // any call site's key domain: the kernel's partials job counts both
+    // and refuses (round-9 advice #1) — for every consumer, BEFORE any
+    // partial sum is trusted.
     import spark.implicits._
     val nan = Seq((1.0, 1L), (Double.NaN, 1L)).toDF("x", "v")
-    intercept[IllegalArgumentException] {
-      ScalableCumulate.cumSum(nan, col("x"), ascending = true,
-        Seq(col("x")), Seq(Cum("cum", col("v"))))
-    }
     val nul = Seq((Some(1.0), 1L), (Option.empty[Double], 2L)).toDF("x", "v")
-    intercept[IllegalArgumentException] {
-      ScalableCumulate.cumSum(nul, col("x"), ascending = true,
-        Seq(col("x")), Seq(Cum("cum", col("v"))))
+    for (df <- Seq(nan, nul)) {
+      val c = intercept[IllegalArgumentException] {
+        ScalableCumulate.cumSum(df, col("x"), ascending = true,
+          Seq(col("x")), Seq(Cum("cum", col("v"))))
+      }
+      assert(c.getMessage.contains("NaN/null"), c.getMessage)
+      val q = intercept[IllegalArgumentException] {
+        ScalableCumulate.quantilePicks(df, col("x"), Seq(col("x")),
+          col("v"), Seq((1L, 2L)))
+      }
+      assert(q.getMessage.contains("NaN/null"), q.getMessage)
     }
   }
 
-  test("bucket-count conf knob changes fan-out, never results") {
-    val h = t(spark, sf, "orders")
-      .groupBy(col("o_totalprice").as("x")).agg(count(lit(1)).as("cnt"))
-    val default = ScalableCumulate.cumSum(h, col("x"), ascending = true,
-      Seq(col("x")), Seq(Cum("cum", col("cnt"))))
-    val rows = sortedRows(default, "x", "cnt", "cum")
-    for (nb <- Seq("1", "3", "64")) {
-      spark.conf.set("spark.graft.cumulate.buckets", nb)
-      try {
-        val alt = ScalableCumulate.cumSum(h, col("x"), ascending = true,
-          Seq(col("x")), Seq(Cum("cum", col("cnt"))))
-        assert(sortedRows(alt, "x", "cnt", "cum") == rows,
-          s"results differ at $nb buckets")
-      } finally spark.conf.unset("spark.graft.cumulate.buckets")
+  test("bucket layout changes fan-out, never results") {
+    // One key set, two layouts: scaled into a single 1/64-octave band
+    // (one bucket) and spread sign-symmetrically over ±2^±20 (one bucket
+    // per distinct key). Both must equal the unpartitioned-window referee
+    // over the same total order, in both directions — the layout only
+    // shapes bucket sizes, never rows.
+    import spark.implicits._
+    val rnd = new scala.util.Random(1401)
+    val rows = (0 until 400).map(i =>
+      (i.toLong, rnd.nextInt(61) - 30, 1L + rnd.nextInt(9).toLong)) // (id, k, w)
+    val oneBand = (k: Int) => 1.0 + (k + 30) / 16384.0
+    val spread = (k: Int) =>
+      math.signum(k.toDouble) * math.pow(2.0, -20 + 40.0 * (math.abs(k) - 1) / 29)
+    for ((layout, f, fanOut) <- Seq(("one band", oneBand, (n: Int) => n == 1),
+        ("±2^±20", spread, (n: Int) => n > 30)); asc <- Seq(true, false)) {
+      val df = rows.map { case (id, k, w) => (id, f(k), w) }.toDF("id", "x", "w")
+      val ord = Seq(if (asc) col("x").asc else col("x").desc, col("id").asc)
+      val naive = df.withColumn("cum", sum("w").over(Window.orderBy(ord: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      val two = ScalableCumulate.cumSum(df, col("x"), ascending = asc, ord,
+        Seq(Cum("cum", col("w"))))
+      assert(fanOut(ScalableCumulate.lastPartialsRows),
+        s"$layout: ${ScalableCumulate.lastPartialsRows} buckets")
+      assert(sortedRows(two, "id", "cum") == sortedRows(naive, "id", "cum"),
+        s"$layout asc=$asc: results differ from the referee")
     }
-    spark.conf.set("spark.graft.cumulate.buckets", "0")
-    try intercept[IllegalArgumentException] {
-      ScalableCumulate.cumSum(h, col("x"), ascending = true,
-        Seq(col("x")), Seq(Cum("cum", col("cnt"))))
-    } finally spark.conf.unset("spark.graft.cumulate.buckets")
   }
 
   test("quantilePicks matches the naive histogram-cumulation pick") {
@@ -211,15 +221,15 @@ class ScalableCumulateSpec extends AnyFunSuite {
 
   test("quantilePicks: randomized differential vs the reference fold") {
     // 16 seeded trials: random weighted multisets (heavy ties by
-    // construction), random fraction, random bucket count, random
-    // direction / strictness / grouping — the pick must equal the
+    // construction, negative, zero and positive keys), random fraction,
+    // random direction / strictness / grouping — the pick must equal the
     // plain-Scala reference (per group: sort, prefix-sum, first value
     // with den·cum ≥ num·W, or > when strict) every time. Catches
     // crossing-bucket off-by-ones a fixture can't sweep, across every
     // variant axis of the API.
     import spark.implicits._
     val rnd = new scala.util.Random(421000)
-    var logMixed = 0 // log2Bucket trials with zeros/negatives and positives
+    var mixed = 0 // trials with zeros/negatives beside positives
     for (trial <- 1 to 16) {
       val n = 30 + rnd.nextInt(400)
       val dist = 1 + rnd.nextInt(12) // few distinct values → heavy ties
@@ -232,43 +242,20 @@ class ScalableCumulateSpec extends AnyFunSuite {
         rnd.nextInt(dist).toLong * 7, 1L + rnd.nextInt(5).toLong))
       val den = 2L + rnd.nextInt(99)
       val num0 = 1L + rnd.nextInt(den.toInt)
-      val nb = 1 + rnd.nextInt(8)
       val asc = rnd.nextBoolean()
       val strict = rnd.nextBoolean()
       // strict + num == den is a rejected input (vacuous crossing — the
       // require has its own fixture test); clamp without disturbing the
-      // RNG stream so the other 15 trials draw exactly what they used to
+      // RNG stream
       val num = if (strict && num0 == den) num0 - 1 else num0
       val grouped = rnd.nextBoolean()
-      // bounds/bucket hint axis (round-11): a separate RNG so the primary
-      // draw stream is untouched. A quarter of trials pass ARBITRARY split
-      // points (wrong range, duplicates, unsorted — anything finite), a
-      // quarter a monotone integer bucketHint expression (coarse integer
-      // division of x, direction-matched), a quarter the log-octave
-      // ScalableCumulate.log2Bucket, a quarter no hint; the hint contract
-      // says hints only shape bucket sizes, so every pick must still
-      // equal the reference fold bit-for-bit. Half the trials shift x
-      // down so zeros and negatives — one shared log2Bucket bucket —
-      // sit beside the positives.
+      // Half the trials shift x down (a separate RNG, so the primary
+      // draw stream is untouched) so zeros and negatives — mirrored
+      // log-octave buckets below zero's own — sit beside the positives.
       val rnd2 = new scala.util.Random(trial * 7919)
-      val hint = rnd2.nextInt(4)
-      val (boundsH, bucketH): (Option[Seq[Double]], Option[Column]) =
-        hint match {
-          case 0 => (None, None)
-          case 1 => (Some(Seq.fill(rnd2.nextInt(6))(
-            rnd2.nextDouble() * 200 - 50 * rnd2.nextInt(3))), None)
-          case 2 =>
-            val k = 1 + rnd2.nextInt(17) // bucket width: 1 (id = value!) .. 17
-            val raw = floor(col("x") / k)
-            (None, Some(if (asc) raw else -raw))
-          case _ =>
-            val raw = ScalableCumulate.log2Bucket(col("x"))
-            (None, Some(if (asc) raw else -raw))
-        }
       val shift = if (rnd2.nextBoolean()) -7L * (1 + rnd2.nextInt(dist)) else 0L
       val rows = rows0.map { case (g, x, wt) => (g, x + shift, wt) }
-      if (hint == 3 && rows.exists(_._2 <= 0) && rows.exists(_._2 > 0))
-        logMixed += 1
+      if (rows.exists(_._2 <= 0) && rows.exists(_._2 > 0)) mixed += 1
       def ref(rs: Seq[(String, Long, Long)]): Long = {
         val sorted = if (asc) rs.sortBy(_._2) else rs.sortBy(-_._2)
         val w = sorted.map(_._3).sum
@@ -281,43 +268,59 @@ class ScalableCumulateSpec extends AnyFunSuite {
       val expected: Map[String, Long] =
         if (grouped) rows.groupBy(_._1).map { case (g, rs) => g -> ref(rs) }
         else Map("" -> ref(rows))
-      spark.conf.set("spark.graft.cumulate.buckets", nb.toString)
-      try {
-        val ord = if (asc) col("x").asc else col("x").desc
-        val picks = ScalableCumulate.quantilePicks(rows.toDF("g", "x", "w"),
-          col("x"), Seq(ord), col("w"), Seq((num, den)),
-          groupCols = if (grouped) Seq("g") else Nil,
-          ascending = asc, strict = strict, boundsHint = boundsH,
-          bucketHint = bucketH)
-        val label = s"trial $trial: n=$n dist=$dist frac=$num/$den nb=$nb " +
-          s"asc=$asc strict=$strict grouped=$grouped"
-        if (grouped) {
-          val got = picks.select("g", "pick_0").collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toMap
-          assert(got == expected, s"$label: got $got, expected $expected")
-        } else {
-          val got = picks.select("pick_0", "total").head()
-          assert(got.getLong(0) == expected(""),
-            s"$label: got ${got.getLong(0)}, expected ${expected("")}")
-          assert(got.getLong(1) == rows.map(_._3).sum, s"$label total")
-        }
-      } finally spark.conf.unset("spark.graft.cumulate.buckets")
+      val ord = if (asc) col("x").asc else col("x").desc
+      val picks = ScalableCumulate.quantilePicks(rows.toDF("g", "x", "w"),
+        col("x"), Seq(ord), col("w"), Seq((num, den)),
+        groupCols = if (grouped) Seq("g") else Nil,
+        ascending = asc, strict = strict)
+      val label = s"trial $trial: n=$n dist=$dist shift=$shift " +
+        s"frac=$num/$den asc=$asc strict=$strict grouped=$grouped"
+      if (grouped) {
+        val got = picks.select("g", "pick_0").collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(got == expected, s"$label: got $got, expected $expected")
+      } else {
+        val got = picks.select("pick_0", "total").head()
+        assert(got.getLong(0) == expected(""),
+          s"$label: got ${got.getLong(0)}, expected ${expected("")}")
+        assert(got.getLong(1) == rows.map(_._3).sum, s"$label total")
+      }
     }
-    assert(logMixed > 0, "no log2Bucket trial mixed non-positive and positive x")
+    assert(mixed > 0, "no trial mixed non-positive and positive x")
   }
 
-  test("log2Bucket is total and monotone: one bucket below every positive value") {
+  test("log2Bucket is total and monotone, mirrored below zero's own bucket") {
     import spark.implicits._
-    val xs = Seq(Some(-1e300), Some(-3.0), Some(-0.0), Some(0.0), Some(Double.MinPositiveValue),
-      Some(1e-300), Some(0.5), Some(1.0), Some(1.5), Some(2.0), Some(1e300), None)
-    val ids = xs.toDF("x").select(ScalableCumulate.log2Bucket(col("x")))
-      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
-    val (nonPos, pos) = ids.init.map(_.get).splitAt(4)
-    assert(nonPos.forall(_ == ScalableCumulate.NonPositiveBucket), ids)
-    assert(pos.head > ScalableCumulate.NonPositiveBucket, ids)
-    assert(pos == pos.sorted && pos.distinct.size == pos.size, ids)
-    assert(pos.slice(2, 5) == Seq(-64L, 0L, 37L), ids)
-    assert(ids.last.isEmpty, "NULL input must stay a NULL bucket id")
+    val M = Double.MaxValue
+    val neg = Seq(-M, -1e300, -3.0, -1.0, -0.5, -1e-310, -Double.MinPositiveValue)
+    val pos = Seq(Double.MinPositiveValue, 1e-310, 1e-300, 0.5, 1.0, 1.5, 2.0,
+      1e300, M)
+    def ids(xs: Seq[Option[Double]]): Seq[Option[Long]] =
+      xs.toDF("x").select(ScalableCumulate.log2Bucket(col("x"))).collect()
+        .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+    val all = ids((neg ++ Seq(-0.0, 0.0) ++ pos).map(Some(_)) :+ None)
+    val (n, rest) = all.init.map(_.get).splitAt(neg.size)
+    val (z, p) = rest.splitAt(2)
+    val zero = ScalableCumulate.NonPositiveBucket
+    assert(z == Seq(zero, zero), all)
+    // strictly increasing within each sign: every value above sits in its
+    // own 1/64-octave band (subnormals and ±max double included)
+    for (side <- Seq(n, p))
+      assert(side.sliding(2).forall { case Seq(a, b) => a < b }, all)
+    assert(n.last < zero && zero < p.head, all)
+    assert(p.slice(3, 6) == Seq(-64L, 0L, 37L), all)
+    // negatives mirror positives: id(−x) = −2^21 − id(x)
+    assert(ids(pos.map(x => Some(-x))).map(_.get) ==
+      p.map(-(1L << 21) - _), all)
+    // infinities are clamped onto the extreme finite buckets, and NaN
+    // (above +∞ in Spark's order) shares the top one
+    assert(ids(Seq(Double.NegativeInfinity, Double.PositiveInfinity, Double.NaN)
+      .map(Some(_))).map(_.get) == Seq(n.head, p.last, p.last), all)
+    assert(all.last.isEmpty, "NULL input must stay a NULL bucket id")
+    // a half-negative input spreads below zero, not into one shared bucket
+    val half = ids((-1000 to 1000).map(i => Some(i / 7.0))).map(_.get)
+    assert(half.count(_ < zero) == 1000 && half.filter(_ <= zero).distinct.size > 1,
+      s"non-positive buckets: ${half.filter(_ <= zero).distinct.size}")
   }
 
   test("quantilePicks: randomized differential with metric cums (total order)") {
@@ -330,15 +333,15 @@ class ScalableCumulateSpec extends AnyFunSuite {
     for (trial <- 1 to 10) {
       val n = 20 + rnd.nextInt(300)
       val dist = 1 + rnd.nextInt(10) // heavy ties in the primary
+      // x spans negative, zero and positive keys
       val rows = (0 until n).map(i => (i.toLong,
-        rnd.nextInt(dist).toLong * 3, 1L + rnd.nextInt(4).toLong,
+        (rnd.nextInt(dist) - dist / 2).toLong * 3, 1L + rnd.nextInt(4).toLong,
         rnd.nextInt(100).toLong)) // (id, x, w, mv)
       val den = 2L + rnd.nextInt(50)
       val num0 = 1L + rnd.nextInt(den.toInt)
       val strict = rnd.nextBoolean()
       val num = if (strict && num0 == den) num0 - 1 else num0
       val asc = rnd.nextBoolean()
-      val nb = 1 + rnd.nextInt(6)
       val grouped = rnd.nextBoolean() // grouped + metrics combined axis
       def gOf(id: Long): String = "g" + (id % 3)
       // reference fold over the total order (x, id) within a group:
@@ -360,31 +363,28 @@ class ScalableCumulateSpec extends AnyFunSuite {
         if (grouped) rows.groupBy(r => gOf(r._1))
           .map { case (g, rs) => g -> ref(rs) }
         else Map("" -> ref(rows))
-      spark.conf.set("spark.graft.cumulate.buckets", nb.toString)
-      try {
-        val ord = Seq(if (asc) col("x").asc else col("x").desc, col("id").asc)
-        val df = rows.toDF("id", "x", "w", "mv")
-          .withColumn("g", concat(lit("g"), col("id") % 3))
-        val picks = ScalableCumulate.quantilePicks(df,
-          col("x"), ord, col("w"), Seq((num, den)), ascending = asc,
-          strict = strict, metrics = Seq("m" -> col("mv")),
-          groupCols = if (grouped) Seq("g") else Nil, totalName = "wtot")
-        val label = s"trial $trial: n=$n frac=$num/$den nb=$nb asc=$asc " +
-          s"strict=$strict grouped=$grouped"
-        val got: Map[String, (Long, Long, Long, Long, Long)] =
-          if (grouped) picks
-            .select("g", "pick_0", "cum_0", "m_0", "m_total", "wtot")
-            .collect().map(r => r.getString(0) ->
-              (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
-                r.getLong(5))).toMap
-          else Map("" -> {
-            val r = picks
-              .select("pick_0", "cum_0", "m_0", "m_total", "wtot").head()
-            (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-              r.getLong(4))
-          })
-        assert(got == expected, s"$label: got $got, expected $expected")
-      } finally spark.conf.unset("spark.graft.cumulate.buckets")
+      val ord = Seq(if (asc) col("x").asc else col("x").desc, col("id").asc)
+      val df = rows.toDF("id", "x", "w", "mv")
+        .withColumn("g", concat(lit("g"), col("id") % 3))
+      val picks = ScalableCumulate.quantilePicks(df,
+        col("x"), ord, col("w"), Seq((num, den)), ascending = asc,
+        strict = strict, metrics = Seq("m" -> col("mv")),
+        groupCols = if (grouped) Seq("g") else Nil, totalName = "wtot")
+      val label = s"trial $trial: n=$n frac=$num/$den asc=$asc " +
+        s"strict=$strict grouped=$grouped"
+      val got: Map[String, (Long, Long, Long, Long, Long)] =
+        if (grouped) picks
+          .select("g", "pick_0", "cum_0", "m_0", "m_total", "wtot")
+          .collect().map(r => r.getString(0) ->
+            (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
+              r.getLong(5))).toMap
+        else Map("" -> {
+          val r = picks
+            .select("pick_0", "cum_0", "m_0", "m_total", "wtot").head()
+          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+            r.getLong(4))
+        })
+      assert(got == expected, s"$label: got $got, expected $expected")
     }
   }
 
@@ -462,6 +462,18 @@ class ScalableCumulateSpec extends AnyFunSuite {
       t3.start(); t3.join()
       assert(writeErr != null && writeErr.getMessage.contains("audit window"),
         s"cross-thread ledger write did not fail loudly: $writeErr")
+      // every kernel consumer charges its one eager helper job — the
+      // partials exchange — and nothing else for a bare input
+      import spark.implicits._
+      val bare = Seq(1L, 2L, 3L, 4L).toDF("x")
+      ScalableCumulate.resetHiddenShuffles()
+      ScalableCumulate.cumSum(bare, col("x"), ascending = true, Seq(col("x")),
+        Seq(Cum("cum", col("x"))))
+      assert(ScalableCumulate.hiddenShuffles == 1)
+      ScalableCumulate.resetHiddenShuffles()
+      ScalableCumulate.quantilePicks(bare, col("x"), Seq(col("x")), lit(1L),
+        Seq((1L, 2L)))
+      assert(ScalableCumulate.hiddenShuffles == 1)
     } finally ScalableCumulate.endAudit()
     // an unpartitioned-window lineage is refused: checkpointing it would
     // hide the exact single-task-sort hazard the helper exists to retire
@@ -524,71 +536,6 @@ class ScalableCumulateSpec extends AnyFunSuite {
     assert(got == Map(Option("a") -> 1L, None -> 2L), s"null-group picks: $got")
   }
 
-  test("boundsHint skips the bounds job but keeps the NaN/null guard loud") {
-    // round-11: with a hint the bounds job (and its guard) never runs —
-    // the guard must ride the partials job instead, and fire BEFORE any
-    // partial sum is trusted. Also pin that a hinted call really does
-    // skip the bounds action (job count drops by one).
-    import spark.implicits._
-    val bad = Seq(Some(1.0), None, Some(3.0)).toDF("x")
-    val e = intercept[IllegalArgumentException] {
-      ScalableCumulate.quantilePicks(bad, col("x"), Seq(col("x")), lit(1L),
-        Seq((1L, 2L)), boundsHint = Some(Seq(2.0)))
-    }
-    assert(e.getMessage.contains("NaN/null"), e.getMessage)
-    val nan = intercept[IllegalArgumentException] {
-      ScalableCumulate.quantilePicks(Seq(1.0).toDF("x"), col("x"),
-        Seq(col("x")), lit(1L), Seq((1L, 2L)),
-        boundsHint = Some(Seq(Double.NaN)))
-    }
-    assert(nan.getMessage.contains("finite"), nan.getMessage)
-    val both = intercept[IllegalArgumentException] {
-      ScalableCumulate.quantilePicks(Seq(1.0).toDF("x"), col("x"),
-        Seq(col("x")), lit(1L), Seq((1L, 2L)),
-        boundsHint = Some(Seq(1.0)), bucketHint = Some(col("x")))
-    }
-    assert(both.getMessage.contains("mutually exclusive"), both.getMessage)
-    // a bucketHint that nulls on non-null input (here: log of a
-    // non-positive value) is named loudly, not crashed on
-    val nullBkt = intercept[IllegalArgumentException] {
-      ScalableCumulate.quantilePicks(Seq(-4.0, 2.0).toDF("x"), col("x"),
-        Seq(col("x")), lit(1L), Seq((1L, 2L)),
-        bucketHint = Some(floor(log(2.0, col("x")))))
-    }
-    assert(nullBkt.getMessage.contains("NULL bucket id"), nullBkt.getMessage)
-    // bucket ids beyond Int range (round-11 advice #1): ids are kept LONG
-    // end-to-end, so a hint whose ids exceed Int.MaxValue buckets exactly
-    // — the old cast(IntegerType) would wrap them executor-side (e.g.
-    // 5e9+1 → negative, 5e9+2 → more negative but CROSSING sign for some
-    // pairs), silently breaking the monotone-bucket contract.
-    val wide = Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("x")
-    val bigHint = (col("x") + lit(5000000000L)).cast("long")
-    val pw = ScalableCumulate.quantilePicks(wide, col("x"), Seq(col("x")),
-      lit(1L), Seq((1L, 2L)), bucketHint = Some(bigHint))
-    assert(pw.select("pick_0").head().getLong(0) == 3L,
-      "out-of-Int-range bucket ids must still pick exactly")
-    // the bounds ACTION is really gone under a hint: the hidden-shuffle
-    // ledger charges every eager helper job, so a hinted build records
-    // one exchange (partials) where an unhinted one records two
-    // (bounds + partials)
-    val df = Seq(1L, 2L, 3L, 4L).toDF("x")
-    try {
-      ScalableCumulate.resetHiddenShuffles()
-      val p = ScalableCumulate.quantilePicks(df, col("x"), Seq(col("x")),
-        lit(1L), Seq((1L, 2L)), boundsHint = Some(Seq(2.5)))
-      assert(p.collect()(0).getLong(0) == 2L)
-      val hinted = ScalableCumulate.hiddenShuffles
-      ScalableCumulate.resetHiddenShuffles()
-      val p2 = ScalableCumulate.quantilePicks(df, col("x"), Seq(col("x")),
-        lit(1L), Seq((1L, 2L)))
-      assert(p2.collect()(0).getLong(0) == 2L)
-      val unhinted = ScalableCumulate.hiddenShuffles
-      assert(unhinted == hinted + 1,
-        s"expected exactly one more eager exchange without the hint: " +
-          s"hinted=$hinted unhinted=$unhinted")
-    } finally ScalableCumulate.endAudit()
-  }
-
   test("quantilePicks auto-materializes a derived input (one upstream execution)") {
     // round-10 verdict #4: the bounds, partials, and returned plans each
     // re-execute the input; a bare scan is cheap (pushdown), but a
@@ -611,25 +558,29 @@ class ScalableCumulateSpec extends AnyFunSuite {
     // `sum` skips nulls, so a null `value` row would vanish from both the
     // cumulative and the total. One source is a weight that overflows
     // its decimal cast in a non-ANSI session (agg_weighted_median's
-    // DECIMAL(8,2)); the partials job refuses it by name, hinted or not.
+    // DECIMAL(8,2)); the partials job refuses it by name — for a
+    // running sum too, whose bucket-local window would restart at a null.
     import spark.implicits._
     val df = Seq((1.0, Some(2L)), (2.0, None), (3.0, Some(1L))).toDF("x", "w")
-    for (hint <- Seq(None, Some(ScalableCumulate.log2Bucket(col("x"))))) {
-      val e = intercept[IllegalArgumentException] {
-        ScalableCumulate.quantilePicks(df, col("x"), Seq(col("x")), col("w"),
-          Seq((1L, 2L)), bucketHint = hint)
-      }
-      assert(e.getMessage.contains("null `value`"), e.getMessage)
+    val e = intercept[IllegalArgumentException] {
+      ScalableCumulate.quantilePicks(df, col("x"), Seq(col("x")), col("w"),
+        Seq((1L, 2L)))
     }
+    assert(e.getMessage.contains("null `value`"), e.getMessage)
+    val c = intercept[IllegalArgumentException] {
+      ScalableCumulate.cumSum(df, col("x"), ascending = true, Seq(col("x")),
+        Seq(Cum("cum", col("w"))))
+    }
+    assert(c.getMessage.contains("null `value`"), c.getMessage)
     val lax = spark.newSession()
     lax.conf.set("spark.sql.ansi.enabled", "false")
     val big = lax.createDataFrame(Seq((1.0, 3.0), (2.0, 1.0e6))).toDF("x", "q")
       .select(col("x"), col("q").cast(DecimalType(8, 2)).as("w"))
-    val e = intercept[IllegalArgumentException] {
+    val l = intercept[IllegalArgumentException] {
       ScalableCumulate.quantilePicks(big, col("x"), Seq(col("x")), col("w"),
-        Seq((1L, 2L)), bucketHint = Some(ScalableCumulate.log2Bucket(col("x"))))
+        Seq((1L, 2L)))
     }
-    assert(e.getMessage.contains("1 null `value`"), e.getMessage)
+    assert(l.getMessage.contains("1 null `value`"), l.getMessage)
   }
 
   test("quantilePicks: high-cardinality group key fails loudly at the cap") {

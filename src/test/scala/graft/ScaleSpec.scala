@@ -314,7 +314,8 @@ class ScaleSpec extends AnyFunSuite {
     // Round-11 verdict #6: the r11-touched pick hot path had no measured
     // scale curve, unlike dedup. The 100 TB viability claim is that the
     // ONLY driver-side materialization is the per-(group, bucket)
-    // partials collect — O(NB·|groups|), independent of input rows. This
+    // partials collect — O(octave buckets·|groups|), independent of input
+    // rows. This
     // measures it: a 10× row-replicated input (same values ⇒ same bucket
     // set, same weighted quantiles) must produce (a) identical picks and
     // (b) a partials collect of the SAME row count as the 1× input —
@@ -323,7 +324,9 @@ class ScaleSpec extends AnyFunSuite {
     import s.implicits._
     import ops.ScalableCumulate
     val groups = 7
-    val nb = 32
+    // x < 2^17: log2Bucket's 1/64-octave bands give at most 64·17 positive
+    // buckets plus zero's own
+    val bound = groups * (64 * 17 + 1)
     def input(rep: Int): DataFrame = {
       // deterministic synthetic: 60k base rows, heavy value ties, weights
       // 1..5; `rep` concatenates value-identical copies (weighted
@@ -334,7 +337,6 @@ class ScaleSpec extends AnyFunSuite {
         (col("id") % 5 + 1).as("w"))
       (1 to rep).map(_ => base).reduce(_.unionByName(_))
     }
-    s.conf.set("spark.graft.cumulate.buckets", nb.toString)
     def run(rep: Int): (Map[String, Long], Int, Long) = {
       val df = input(rep).persist() // cheapRescan: first job fills cache
       try {
@@ -347,18 +349,16 @@ class ScaleSpec extends AnyFunSuite {
         (picks, ScalableCumulate.lastPartialsRows, df.count())
       } finally { df.unpersist(); () }
     }
-    try {
-      val (p1, partials1, rows1) = run(1)
-      val (p10, partials10, rows10) = run(10)
-      info(s"1x: rows=$rows1 partials=$partials1; " +
-        s"10x: rows=$rows10 partials=$partials10 (bound=${groups * (nb + 1)})")
-      assert(rows10 == 10 * rows1)
-      assert(p10 == p1, "replication-invariant picks must be identical")
-      assert(partials1 > 0 && partials1 <= groups * (nb + 1),
-        s"partials exceed the O(NB·|groups|) bound: $partials1")
-      assert(partials10 == partials1,
-        s"driver collect grew with data size ($partials1 → $partials10) — " +
-          "the pick machinery is leaking per-row state to the driver")
-    } finally s.conf.unset("spark.graft.cumulate.buckets")
+    val (p1, partials1, rows1) = run(1)
+    val (p10, partials10, rows10) = run(10)
+    info(s"1x: rows=$rows1 partials=$partials1; " +
+      s"10x: rows=$rows10 partials=$partials10 (bound=$bound)")
+    assert(rows10 == 10 * rows1)
+    assert(p10 == p1, "replication-invariant picks must be identical")
+    assert(partials1 > 0 && partials1 <= bound,
+      s"partials exceed the O(buckets·|groups|) bound: $partials1")
+    assert(partials10 == partials1,
+      s"driver collect grew with data size ($partials1 → $partials10) — " +
+        "the pick machinery is leaking per-row state to the driver")
   }
 }
