@@ -17,9 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Misra-Gries), `LogicalPlan`+Strategy+`SparkPlan` (native as-of),
   * `Rule[LogicalPlan]` (range/overlap bin rewrites), and now `Generator`.
   *
-  * Why a generator instead of the lead()-window construction the bigram
-  * query uses: the window form shuffles the whole token stream to the
-  * (doc) grain and sorts it just to see adjacent tokens, and it needs one
+  * Why a generator instead of the lead()-window construction the oracles
+  * use: the window form shuffles the whole token stream to the (doc)
+  * grain and sorts it just to see adjacent tokens, and it needs one
   * extra lead() column per extra gram position. The generator emits
   * n-grams inside the scan's own pipeline — NO shuffle, NO sort, any n —
   * and Catalyst plans it as the same `Generate` node as explode, so

@@ -34,9 +34,6 @@ object LlmOps2 {
           list_transform(list_filter(string_split_regex($e, ''), ch -> ch <> ''),
             ch -> CAST(ord(ch) AS BIGINT))), (a, b) -> (a * 31 + b) % 1073741824)"""
 
-  private def toks(s: SparkSession, d: String): DataFrame =
-    t(s, d, "documents")
-      .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("token"))
   private val toksSql =
     """toks AS (
          SELECT doc_id, lang, unnest(string_split(text, ' ')) AS token
@@ -62,21 +59,20 @@ object LlmOps2 {
   val all: Seq[Spec] = Seq(
     // 16-bit SimHash over token hashes: per bit, majority vote of ±1
     // weighted by token multiplicity; docs sharing a signature are
-    // near-dup candidates. Sub-quadratic: one groupBy, no pairing.
+    // near-dup candidates. Each bit's vote is an `aggregate` over the
+    // row's token-hash array: only `n_same` and the sort shuffle. A NULL
+    // text has no tokens and no row, as in the oracle's unnest.
     Spec("dedup_simhash",
-      (s, d) => {
-        val th = toks(s, d).withColumn("h", expr(rollhash("token")))
-        val bits = th.select(col("doc_id"), col("h"),
-          explode(sequence(lit(0), lit(15))).as("j"))
-        val sj = bits.groupBy("doc_id", "j")
-          .agg(sum(when(expr("(shiftright(h, j) & 1)") === 1, 1).otherwise(-1)).as("sgn"))
-        val sh = sj
-          .withColumn("bitval",
-            when(col("sgn") > 0, expr("shiftleft(CAST(1 AS BIGINT), j)")).otherwise(0L))
-          .groupBy("doc_id").agg(sum("bitval").as("simhash"))
-        sh.withColumn("n_same", count(lit(1)).over(Window.partitionBy("simhash")))
-          .orderBy("doc_id")
-      },
+      (s, d) => t(s, d, "documents")
+        .where(col("text").isNotNull)
+        .select(col("doc_id"),
+          expr(s"transform(split(text, ' '), tok -> ${rollhash("tok")})").as("hs"))
+        .select(col("doc_id"), expr(
+          """aggregate(sequence(0, 15), CAST(0 AS BIGINT), (sig, j) -> sig +
+               IF(aggregate(hs, 0, (v, h) -> v + IF((shiftright(h, j) & 1) = 1, 1, -1)) > 0,
+                 shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT)))""").as("simhash"))
+        .withColumn("n_same", count(lit(1)).over(Window.partitionBy("simhash")))
+        .orderBy("doc_id"),
       Some(s"""WITH $toksSql,
                th AS (SELECT doc_id, ${rollhashSql("token")} AS h FROM toks),
                bits AS (SELECT doc_id, h, j FROM th
@@ -114,7 +110,7 @@ object LlmOps2 {
     // lexicographically everywhere for determinism.
     Spec("text_langid",
       (s, d) => {
-        val tk = toks(s, d)
+        val tk = LlmOps.toks(s, d)
         val wTok = Window.partitionBy("token").orderBy(desc("c"), asc("tok_lang"))
         val best = tk.groupBy(col("token"), col("lang").as("tok_lang"))
           .agg(count(lit(1)).as("c"))

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Spec, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,33 +18,32 @@ object LlmOps4 {
     // Repetition detection — the Gopher-style quality filter that catches
     // degenerate boilerplate: per doc, the duplicate-token fraction
     // (1 - distinct/total) and the share of the doc taken by its single
-    // most-repeated bigram. Token stats are per-row array ops (no
-    // shuffle); the bigram pass explodes to (doc, pos) grain, windows by
-    // doc_id (high-cardinality key — partitions evenly at any corpus
-    // size), and aggregates back to one row per doc. Ratios round after
-    // exact integer counts, so the hash oracle is safe.
+    // most-repeated bigram. One projection over the token array (only the
+    // sort shuffles): the top bigram's count is the longest run in the
+    // sorted bigram array. Docs under 2 tokens have no bigram and no row,
+    // and filtering them first keeps `sequence(0, size - 2)` from counting
+    // down. Ratios round after exact integer counts: hash-oracle safe.
     Spec("text_repetition",
       (s, d) => {
-        val docs = t(s, d, "documents")
-        val w = Window.partitionBy("doc_id").orderBy("pos")
-        val bigrams = docs
-          .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "token")))
-          .withColumn("nxt", lead(col("token"), 1).over(w))
-          .where(col("nxt").isNotNull)
-          .groupBy(col("doc_id"), concat(col("token"), lit(" "), col("nxt")).as("bigram"))
-          .agg(count(lit(1)).as("cnt"))
-          .groupBy("doc_id")
-          .agg(max("cnt").as("max_bigram"), sum("cnt").as("n_bigrams"))
-        docs
-          .withColumn("arr", split(col("text"), " "))
-          .select(col("doc_id"),
-            size(col("arr")).cast("long").as("n_tokens"),
-            size(array_distinct(col("arr"))).cast("long").as("n_distinct"))
-          .join(bigrams, "doc_id")
+        val toks = col("toks")
+        val longestRun = (sorted: Column) => aggregate(sorted,
+          struct(lit(null).cast("string").as("prev"), lit(0).as("run"), lit(0).as("best")),
+          (acc, x) => {
+            val run = when(x === acc("prev"), acc("run") + 1).otherwise(lit(1))
+            struct(x.as("prev"), run.as("run"), greatest(acc("best"), run).as("best"))
+          },
+          acc => acc("best"))
+        t(s, d, "documents")
+          .select(col("doc_id"), split(col("text"), " ").as("toks"))
+          .where(size(toks) >= 2)
+          .select(col("doc_id"), size(toks).cast("long").as("n_tokens"),
+            size(array_distinct(toks)).as("n_distinct"),
+            longestRun(array_sort(transform(sequence(lit(0), size(toks) - 2), i =>
+              concat(toks(i), lit(" "), toks(i + 1))))).as("max_bigram"))
           .select(col("doc_id"), col("n_tokens"),
             round(lit(1.0) - col("n_distinct").cast("double") / col("n_tokens"), 6)
               .as("dup_token_ratio"),
-            round(col("max_bigram").cast("double") / col("n_bigrams"), 6)
+            round(col("max_bigram").cast("double") / (col("n_tokens") - 1), 6)
               .as("top_bigram_frac"))
           .withColumn("repetitive",
             col("dup_token_ratio") > 0.9 || col("top_bigram_frac") > 0.18)
@@ -130,19 +129,15 @@ object LlmOps4 {
     // 3-grams broadcast (bounded by the benchmark's size — fixed by
     // definition, like a probe set — never by the corpus); each corpus
     // doc's overlap is counted through that broadcast equi-join and one
-    // doc-grain aggregate. Scan ∥ broadcast ∥ count: corpus-linear, and
-    // the 3-gram explode is bounded by document length.
+    // doc-grain aggregate. The 3-grams come from the native `ngrams`
+    // generator inside the scan's pipeline, bounded by document length:
+    // scan ∥ broadcast ∥ count, corpus-linear.
     Spec("text_decontaminate",
       (s, d) => {
-        val w = Window.partitionBy("doc_id").orderBy("pos")
+        graft.GraftExtensions.ensure(s)
         val tri = t(s, d, "documents")
-          .select(col("doc_id"),
-            posexplode(split(col("text"), " ")).as(Seq("pos", "token")))
-          .withColumn("t2", lead(col("token"), 1).over(w))
-          .withColumn("t3", lead(col("token"), 2).over(w))
-          .where(col("t3").isNotNull)
-          .select(col("doc_id"),
-            concat_ws(" ", col("token"), col("t2"), col("t3")).as("tri"))
+          .select(col("doc_id"), call_function("ngrams", split(col("text"), " "), lit(3))
+            .as(Seq("pos", "tri")))
         val bench = tri.where(col("doc_id") < 20)
           .select("tri").distinct().withColumn("hit", lit(1))
         tri.where(col("doc_id") >= 20)

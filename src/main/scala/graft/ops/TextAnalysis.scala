@@ -6,13 +6,13 @@ import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2 category K — text-analysis operators over `documents`
   * (split out of LlmOps.scala along its comment seams, round-7 verdict #8;
-  * zero behavior change). The shared (doc_id, pos, token) stream is
-  * [[LlmOps.toks]] / [[LlmOps.toksSql]] — the dedup family consumes the
-  * same convention, so it stays in LlmOps.
+  * zero behavior change). The shared (doc_id, lang, pos, token) stream
+  * is [[LlmOps.toks]] / [[LlmOps.toksSql]] — the dedup family consumes
+  * the same convention, so it stays in LlmOps.
   *
   * Scale design: token explodes shuffle (doc, token) pairs only; counts
   * are two-phase hash aggregates; top-k endings are TakeOrderedAndProject
-  * (no global sort of the vocabulary).
+  * (no global sort of the vocabulary); n-grams come from `ngrams`.
   */
 object TextAnalysis {
   import Tables._
@@ -79,14 +79,14 @@ object TextAnalysis {
                 (CAST(sum(n_chars) AS DOUBLE) / count(*)) AS avg_chars
               FROM documents GROUP BY lang, source ORDER BY lang, source""")),
 
-    // Bigrams via pos + lead window — identical shape on both engines.
+    // Top-20 bigrams from the `ngrams` generator, in the scan's pipeline;
+    // the oracle builds them with a lead() window over the token stream.
     Spec("text_ngram",
       (s, d) => {
-        val w = Window.partitionBy("doc_id").orderBy("pos")
-        toks(s, d)
-          .withColumn("nxt", lead(col("token"), 1).over(w))
-          .where(col("nxt").isNotNull)
-          .select(concat(col("token"), lit(" "), col("nxt")).as("bigram"))
+        graft.GraftExtensions.ensure(s)
+        t(s, d, "documents")
+          .select(call_function("ngrams", split(col("text"), " "), lit(2))
+            .as(Seq("pos", "bigram")))
           .groupBy("bigram").agg(count(lit(1)).as("n"))
           .orderBy(desc("n"), asc("bigram")).limit(20)
       },
@@ -99,14 +99,13 @@ object TextAnalysis {
                GROUP BY bigram ORDER BY n DESC, bigram LIMIT 20""")),
 
     // Top-20 TRIgrams via the native `ngrams` GENERATOR
-    // (graft.functions.NGramsGenerator) — the zero-shuffle alternative to
-    // the lead()-window construction above: grams are emitted inside the
-    // scan's pipeline by a Generate node (same operator class as
-    // explode), so no token stream is ever exchanged or sorted just to
-    // see adjacent tokens, and the gram width is a parameter instead of
-    // one lead() column per position. The oracle builds the same trigrams
-    // with two window leads — agreement proves the generator's sliding
-    // semantics.
+    // (graft.functions.NGramsGenerator), as text_ngram does for bigrams,
+    // through SQL's LATERAL VIEW: grams are emitted inside the scan's
+    // pipeline by a Generate node (same operator class as explode), so no
+    // token stream is exchanged or sorted just to see adjacent tokens,
+    // and the gram width is a parameter instead of one lead() column per
+    // position. The oracle builds the same trigrams with two window
+    // leads — agreement proves the generator's sliding semantics.
     Spec("text_ngram_native",
       (s, d) => {
         graft.GraftExtensions.ensure(s)

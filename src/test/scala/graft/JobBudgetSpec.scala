@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `src/test/resources/job_budget.tsv` pins the five queries of the
   * benchmark's `board_sf01` slice and every query built on
   * `ScalableCumulate`'s bucketed-prefix kernel (`cumSum`, `rowNumber`,
-  * `globalRank`, `quantilePicks`). The pins are one-sided (`<=`); lower a
+  * `globalRank`, `quantilePicks`), and the text family's per-document
+  * kernels with the `text_langid` token stream. The pins are one-sided (`<=`); lower a
   * pin when a change removes jobs. Each query runs once to warm the
   * memos and caches, then three measured times in a session of the
   * shared test context. The Inference stages it reads are context-scoped
