@@ -20,11 +20,11 @@ import org.apache.spark.sql.types._
 object LlmOps {
   import Tables._
 
-  /** (doc_id, lang, pos, token), the one Spark-side token stream (unread
-    * columns are pruned); shared CTE on the DuckDB side, minus `lang`. */
+  /** (doc_id, lang, token), the one Spark-side token stream; the DuckDB
+    * side's shared CTE is (doc_id, pos, token). */
   private[ops] def toks(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents")
-      .select(col("doc_id"), col("lang"), posexplode(split(col("text"), " ")).as(Seq("pos", "token")))
+      .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("token"))
   private[ops] val toksSql =
     """toks AS (
          SELECT doc_id, CAST(u.pos AS BIGINT) AS pos, u.token FROM (

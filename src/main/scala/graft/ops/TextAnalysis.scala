@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2 category K — text-analysis operators over `documents`
   * (split out of LlmOps.scala along its comment seams, round-7 verdict #8;
-  * zero behavior change). The shared (doc_id, lang, pos, token) stream
+  * zero behavior change). The shared (doc_id, lang, token) stream
   * is [[LlmOps.toks]] / [[LlmOps.toksSql]] — the dedup family consumes
   * the same convention, so it stays in LlmOps.
   *
